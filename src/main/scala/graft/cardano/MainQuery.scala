@@ -38,8 +38,12 @@ object MainQuery {
     else
       spark.read.schema(Schemas.sourceTables(name)).parquet(s"$dir/$name.parquet")
 
-  /** All asset activity in `(from, to]`, one row per (asset, tx[, output]),
-    * ordered by block time — the reference's record stream.
+  /** All asset activity in `(from, to]`, one row per (asset, tx[, output]) —
+    * the reference's record stream, UNORDERED. The reference's ORDER BY
+    * block time (O1) is a contract on the columns, not on the rows:
+    * `(tx_time, tx_id, ma_id, tx_out_id)` with nulls first is the pinned
+    * total order, and `Transform`'s one sequencing pass imposes it, so a
+    * sort here would only add a sampling job and a range shuffle.
     *
     * Output columns (reference names + pinned-determinism extras):
     * policy_id, asset_fingerprint, asset_name, asset_name_hash, tx_hash,
@@ -135,8 +139,5 @@ object MainQuery {
       col("cip._3").as("files"),
       col("cip._2").as("metadata"),
       col("ma_id"), col("tx_id"), col("tx_out_id"))
-      // O1 w/ pinned tiebreakers (Postgres leaves ties unspecified; we don't)
-      .orderBy(col("tx_time"), col("tx_id"), col("ma_id"),
-        col("tx_out_id").asc_nulls_first)
   }
 }

@@ -94,16 +94,17 @@ class SyncDriver(
   def syncPeriod(from: Timestamp, to: Timestamp): Unit = {
     val records = MainQuery.extract(spark, sourceDir, from, to)
 
+    val next = store.nextIds(Seq("wallet", "collection", "asset", "asset_tx", "asset_mint_tx"))
     val state = Transform.State(
       wallet = store.read("wallet"),
       collection = store.read("collection"),
       asset = store.read("asset"),
       assetExt = store.read("asset_ext"),
-      nextWalletId = store.nextId("wallet"),
-      nextCollectionId = store.nextId("collection"),
-      nextAssetId = store.nextId("asset"),
-      nextAssetTxId = store.nextId("asset_tx"),
-      nextAssetMintTxId = store.nextId("asset_mint_tx"))
+      nextWalletId = next("wallet"),
+      nextCollectionId = next("collection"),
+      nextAssetId = next("asset"),
+      nextAssetTxId = next("asset_tx"),
+      nextAssetMintTxId = next("asset_mint_tx"))
 
     val d = Transform(records, state)
 

@@ -92,6 +92,42 @@ class TableStore(val spark: SparkSession, val root: String) {
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       Schemas.targetTables(name))
 
+  /** The version numbers staged under `<table>/<kind>/` (`delta` or
+    * `full`), newest first — ONE directory listing, however many versions
+    * the store has committed (per-version `exists` probes would make every
+    * read's planning grow with store age).
+    */
+  private def stagedVersions(name: String, kind: String): Seq[Long] = {
+    val listed =
+      try fs.listStatus(new Path(tableDir(name), kind)).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    listed.flatMap { s =>
+      val n = s.getPath.getName
+      if (s.isDirectory && n.startsWith("v=")) n.drop(2).toLongOption else None
+    }.sorted(Ordering[Long].reverse)
+  }
+
+  /** Version `v` of a mutable table as (newest full base at or below `v`,
+    * 0 if none; the upsert layers after it, oldest first), or None when
+    * `v` has no `full/` dir (an append table). Marker probes stop at the
+    * newest base, so they are bounded by the layers since the last
+    * compaction.
+    */
+  private def mutableLayout(name: String, v: Long): Option[(Long, Seq[Long])] = {
+    val fulls = stagedVersions(name, "full").dropWhile(_ > v)
+    if (!fulls.headOption.contains(v)) None
+    else {
+      val (layers, older) = fulls.span(isUpsertLayer(name, _))
+      Some((older.headOption.getOrElse(0L), layers.reverse))
+    }
+  }
+
+  /** The delta dirs of an append table's version `v`, oldest first
+    * (versions the table skipped have no dir).
+    */
+  private def appendDirs(name: String, v: Long): Seq[String] =
+    stagedVersions(name, "delta").dropWhile(_ > v).reverse.map(deltaDir(name, _).toString)
+
   /** Read a table at version `v` (its committed current by default).
     * Mutable tables resolve merge-on-read: the newest full BASE at or
     * below `v` plus every upsert layer after it, newest-version-wins per
@@ -101,11 +137,9 @@ class TableStore(val spark: SparkSession, val root: String) {
   def readVersion(name: String, v: Long): DataFrame = {
     if (v <= 0L) return empty(name)
     val schema = Schemas.targetTables(name)
-    if (fs.exists(fullDir(name, v))) {
-      val baseV = (v to 1L by -1L)
-        .find(x => fs.exists(fullDir(name, x)) && !isUpsertLayer(name, x))
-        .getOrElse(0L)
-      val layers = ((baseV + 1L) to v).filter(isUpsertLayer(name, _))
+    val layout = mutableLayout(name, v)
+    if (layout.isDefined) {
+      val (baseV, layers) = layout.get
       if (layers.isEmpty)
         return spark.read.schema(schema).parquet(fullDir(name, v).toString)
       val key = upsertKey(name, layers.last)
@@ -128,7 +162,7 @@ class TableStore(val spark: SparkSession, val root: String) {
         .join(broadcast(layerResolved.select(col(key))), Seq(key), "left_anti")
         .unionByName(layerResolved)
     }
-    val deltas = (1L to v).map(deltaDir(name, _)).filter(fs.exists(_)).map(_.toString)
+    val deltas = appendDirs(name, v)
     if (deltas.isEmpty) empty(name)
     else spark.read.schema(schema).parquet(deltas: _*)
   }
@@ -203,27 +237,35 @@ class TableStore(val spark: SparkSession, val root: String) {
   def commit(versions: Map[String, Long]): Unit =
     writeManifest(manifest() ++ versions)
 
-  /** SRC5: next id = max(id)+1, default 1. Parquet footer stats make the
-    * max() a metadata-only scan. Reads the UNRESOLVED union of base +
+  /** SRC5: next id = max(id)+1 (1 for an empty table) of each of `names`,
+    * from ONE aggregation: the tables' `id` columns, tagged by table, in a
+    * single `groupBy(table).max` — two Spark jobs for all tables. Spark
+    * does not answer `max()` from parquet footer statistics by default,
+    * so each table is a column scan. Reads the UNRESOLVED union of base +
     * upsert layers: ids are never deleted and an update never changes a
     * row's id, so max(id) over raw layers equals max over the resolved
     * table — skipping the merge-on-read shuffle.
     */
-  def nextId(name: String): Long = {
-    val v = currentVersion(name)
-    val raw =
-      if (v > 0L && fs.exists(fullDir(name, v))) {
-        val baseV = (v to 1L by -1L)
-          .find(x => fs.exists(fullDir(name, x)) && !isUpsertLayer(name, x))
-          .getOrElse(0L)
-        val dirs = ((if (baseV > 0L) Seq(baseV) else Seq.empty) ++
-          ((baseV + 1L) to v).filter(isUpsertLayer(name, _)))
-          .map(fullDir(name, _).toString)
-        spark.read.schema(Schemas.targetTables(name)).parquet(dirs: _*)
-      } else read(name)
-    raw.agg(max(col("id")).cast("long")).collect()(0) match {
-      case r if r.isNullAt(0) => 1L
-      case r => r.getLong(0) + 1L
+  def nextIds(names: Seq[String]): Map[String, Long] = {
+    val committed = manifest()
+    val scans = names.flatMap { name =>
+      val v = committed.getOrElse(name, 0L)
+      val dirs = mutableLayout(name, v) match {
+        case Some((baseV, layers)) =>
+          ((if (baseV > 0L) Seq(baseV) else Seq.empty) ++ layers).map(fullDir(name, _).toString)
+        case None => if (v > 0L) appendDirs(name, v) else Seq.empty
+      }
+      if (dirs.isEmpty) None
+      else Some(spark.read.schema(Schemas.targetTables(name)).parquet(dirs: _*)
+        .select(lit(name).as("t"), col("id").cast("long").as("id")))
     }
+    val maxIds =
+      if (scans.isEmpty) Map.empty[String, Long]
+      else scans.reduce(_.unionByName(_)).groupBy(col("t")).agg(max(col("id")))
+        .collect().collect { case r if !r.isNullAt(1) => r.getString(0) -> r.getLong(1) }.toMap
+    names.map(n => n -> maxIds.get(n).fold(1L)(_ + 1L)).toMap
   }
+
+  /** [[nextIds]] of one table. */
+  def nextId(name: String): Long = nextIds(Seq(name))(name)
 }

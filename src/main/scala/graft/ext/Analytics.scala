@@ -333,7 +333,7 @@ object Analytics {
     * bucket, buckets entirely below the n_a-th statistic contribute
     * their pre-aggregated sums, and the single boundary bucket ranks
     * only its own ~1000 rows. The item index is the range-repartitioned
-    * zipWithIndex. b is the accuracy/cost dial. Input contract: n here
+    * `SurrogateIds` pass. b is the accuracy/cost dial. Input contract: n here
     * is the EVAL-set size (benchmark items, slice aggregates) —
     * permutation inference on raw corpus rows at 100 TB would grid
     * 100·n rows; stratify or aggregate to items first, which is also
@@ -806,7 +806,7 @@ object Analytics {
     * it deterministic without mattering mathematically.
     *
     * Scale: one map-side-combining count aggregation to key granularity,
-    * the range-partition + zipWithIndex dense ranker (NO single-partition
+    * the range-partition dense ranker (`SurrogateIds`) (NO single-partition
     * window), and one final integer fold to a single row.
     */
   def giniConcentration(df: DataFrame, keyCol: String): DataFrame = {

@@ -800,7 +800,7 @@ object DataOps {
     * the output is restart/repartition-stable with no RNG.
     *
     * Scale: the per-source rank is one source-keyed window; the global
-    * position reuses the range-repartition + `zipWithIndex` dense-rank
+    * position reuses the range-repartitioned one-pass dense rank
     * (SurrogateIds) — never a single-partition window. Weights ride
     * along as a column: no driver-side weight table.
     */

@@ -138,8 +138,8 @@ object Ranking {
     * `Σ_lists 1 / (k + rank_in_list)`.
     *
     * Rank assignment is the total order (score desc, doc_id asc) — ties
-    * pinned — computed with the range-repartition + zipWithIndex dense
-    * ranker, NOT a global `row_number()` window: candidate lists at 100 TB
+    * pinned — computed with the range-repartition dense ranker
+    * (`SurrogateIds`), NOT a global `row_number()` window: candidate lists at 100 TB
     * retrieval fan-out are large enough that a single-partition WindowExec
     * is the classic scale-killer. Per-list contributions are rounded at a
     * fixed scale and summed in DECIMAL so the fused score is
@@ -191,7 +191,7 @@ object Ranking {
     * two scored rankings at depth `k`: the standard top-weighted
     * similarity between two retrieval systems' result lists (1 =
     * identical prefixes, 0 = disjoint). Both sides are ranked under the
-    * pinned (score desc, id asc) order by the zipWithIndex dense ranker
+    * pinned (score desc, id asc) order by the `SurrogateIds` dense ranker
     * (no global window), truncated via TakeOrdered top-k, and the
     * geometric weights enter as exact decimal literals.
     *
@@ -205,7 +205,7 @@ object Ranking {
     // driver-local (optimization r14): TakeOrdered already returns the
     // rows IN the pinned (score desc, doc_id asc) order, and ranking a
     // k-row array on the driver replaces a range-repartition +
-    // zipWithIndex pipeline (3-4 jobs per side) whose input can never
+    // `SurrogateIds` pipeline (3-4 jobs per side) whose input can never
     // outgrow k. The corpus-sized work stays in the upstream scorers.
     def topk(df: DataFrame, out: String) = {
       val spark = df.sparkSession

@@ -533,7 +533,7 @@ object Similarity {
     * centroids — the ONLY vectors ever collected to the driver or
     * broadcast (O(√k) memory at any corpus size). The k fine seeds stay
     * a distributed TABLE: indexed 0..k-1 in id order via a
-    * range-repartitioned zipWithIndex (no global window, no collect),
+    * range-repartitioned `SurrogateIds` pass (no global window, no collect),
     * each pinned to its nearest coarse cell by a √k-fold projection, then
     * grouped into one (cell → sorted seed array) row per live cell. Every
     * corpus row computes its nearest LIVE coarse cell row-locally (√k

@@ -268,7 +268,7 @@ object CoreQueries {
   // ---------------------------------------------------------------------------
   // q13_surrogate_ids — T3 (contiguous surrogate ids): dense 1-based ids over
   // the new-entity set, assigned the same way as the sync path —
-  // range-repartition + sortWithinPartitions + zipWithIndex
+  // range-repartition + sortWithinPartitions + one counting pass
   // (SurrogateIds.assign), never a global-window row_number. Same result as
   // the oracle's row_number OVER (ORDER BY p_brand), without the
   // single-partition WindowExec.

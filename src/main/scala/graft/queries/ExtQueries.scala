@@ -2723,7 +2723,7 @@ object ExtQueries {
   /** Deterministic global shuffle: every document gets a dense 0-based
     * position in mix64(doc_id) order — the reproducible corpus reorder
     * before sequence packing. Distributed via range-partition +
-    * zipWithIndex (`SurrogateIds`), NOT a single-partition global window;
+    * one counting pass (`SurrogateIds`), NOT a single-partition global window;
     * the oracle is a plain row_number over the replayed hash.
     */
   val shuffleDeterministic: QueryFn = (s, dir) =>

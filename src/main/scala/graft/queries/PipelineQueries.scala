@@ -98,7 +98,7 @@ object PipelineQueries {
   /** Reciprocal-rank fusion of a BM25 ranking and a TF-IDF-sum ranking
     * over the same query terms — the retrieval-fusion step of a RAG /
     * contamination-check pipeline. Ranks are assigned by the
-    * zipWithIndex dense ranker (no global window); contributions are
+    * `SurrogateIds` dense ranker (no global window); contributions are
     * rounded at 9 and summed in DECIMAL on both engines.
     */
   val rankFusion: QueryFn = (s, dir) => {

@@ -56,7 +56,26 @@ class UpsertStoreSpec extends AnyFunSuite with SparkTest {
     // the base dir was not touched by either layer staging
     assert(new java.io.File(store.root, "asset/full/v=1").list().sorted
       .sameElements(v1Files))
-    assert(store.nextId("asset") == 5L)
+    assert(store.nextIds(Seq("asset", "wallet")) == Map("asset" -> 5L, "wallet" -> 1L))
+  }
+
+  test("append tables: committed versions with no delta dir; staged ones stay unseen") {
+    val store = new TableStore(spark, Files.createTempDirectory("gaps").toString)
+    def wallets(ids: Long*): DataFrame = spark.createDataFrame(
+      ids.map(i => org.apache.spark.sql.Row(i, s"addr$i", "ENTERPRISE", null)).asJava,
+      Schemas.wallet)
+    def ids(df: DataFrame): Set[Long] = df.select("id").as[Long].collect().toSet
+    store.commit(Map("wallet" -> store.appendNext("wallet", wallets(1L, 2L))))
+    // v2 and v3 commit other tables only: the wallet table skips them
+    store.commit(Map("wallet" -> 3L))
+    store.commit(Map("wallet" -> store.appendNext("wallet", wallets(3L))))
+    // a staged, uncommitted v5
+    store.appendNext("wallet", wallets(4L))
+    assert(store.currentVersion("wallet") == 4L)
+    assert(ids(store.read("wallet")) == Set(1L, 2L, 3L))
+    assert(ids(store.readVersion("wallet", 3)) == Set(1L, 2L))
+    assert(ids(store.readVersion("wallet", 2)) == Set(1L, 2L))
+    assert(store.nextIds(Seq("wallet")) == Map("wallet" -> 4L))
   }
 
   test("vacuum keeps every dir a retained version still resolves through") {
