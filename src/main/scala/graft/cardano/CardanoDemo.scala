@@ -9,9 +9,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Env-configured like the reference daemon (`app/settings.py:1-12`):
   * `PANTASIA_TIME_INTERVAL` (an explicit argv interval wins),
-  * `PANTASIA_COMPACT_EVERY`, `PANTASIA_MAX_RETRIES`,
-  * `PANTASIA_BACKOFF_MILLIS`, `PANTASIA_LOG_LEVEL`, with an optional
-  * `.env` file underneath the process env.
+  * `PANTASIA_MAX_RETRIES`, `PANTASIA_BACKOFF_MILLIS`,
+  * `PANTASIA_LOG_LEVEL`, with an optional `.env` file underneath the
+  * process env.
   */
 object CardanoDemo {
   def main(args: Array[String]): Unit = {

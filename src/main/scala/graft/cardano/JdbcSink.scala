@@ -6,8 +6,8 @@ import java.sql.DriverManager
   * output tables in a "pantasia" Postgres and writes them over a second
   * psycopg2 connection (`/root/reference/app/db/postgres.py:31-50`, insert
   * paths `:156-250`). Here the engine's sink of record stays the versioned
-  * parquet [[TableStore]] (atomic multi-table commits, snapshot/restore,
-  * merge-on-read upserts — all of which a bare JDBC target lacks), and
+  * parquet [[TableStore]] (atomic multi-table commits, snapshot/restore —
+  * both of which a bare JDBC target lacks), and
   * this object materializes the store's current committed state INTO a
   * JDBC database for the applications that read the reference's tables.
   *
@@ -29,9 +29,9 @@ import java.sql.DriverManager
   *
   * Scale shape: each table ships over `numPartitions` parallel batched
   * connections (`batchsize` rows per round trip). This is the O(table)
-  * full-state integration surface; a per-period O(delta) feed should read
-  * the store's delta/upsert layers (`TableStore.readVersion`) instead of
-  * re-shipping the dimension tables every period.
+  * full-state integration surface; a per-period O(delta) feed would ship
+  * only the append tables' new delta dirs instead of re-shipping the
+  * dimension tables every period.
   */
 object JdbcSink {
 

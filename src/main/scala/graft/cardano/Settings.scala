@@ -6,29 +6,25 @@ package graft.cardano
   * optional `.env` properties file with pydantic's precedence —
   * process env beats the file, the file beats code defaults.
   *
-  * The last four fields are engine extensions (poll cadence, layer
-  * compaction stride, retry budget) that the reference hard-codes; they
-  * follow the same `PANTASIA_` convention so one deployment surface
-  * configures everything.
+  * Only the settings the port reads are fields; the reference's
+  * `IN_MEMORY_INDEX`, `ENVIRONMENT` and `DB_BACKUP_PATH` are ignored like
+  * any unknown key. The retry budget and the log-config path are engine
+  * extensions the reference hard-codes; they follow the same `PANTASIA_`
+  * convention so one deployment surface configures everything.
   */
 final case class Settings(
     timeInterval: Long = 120,
-    inMemoryIndex: Boolean = true,
     logLevel: String = "INFO",
-    environment: String = "dev",
     dbHost: String = "localhost",
     dbPort: Int = 5432,
     dbUser: String = "postgres",
     dbPass: String = "postgres",
     dbName: String = "pantasia",
-    dbBackupPath: String = "./backups/",
     cdbHost: String = "localhost",
     cdbPort: Int = 5433,
     cdbUser: String = "postgres",
     cdbPass: String = "postgres",
     cdbName: String = "cexplorer",
-    pollSeconds: Int = 10,
-    compactEvery: Long = 1,
     maxRetries: Int = 2,
     backoffMillis: Long = 500,
     logConfig: String = "") {
@@ -49,9 +45,6 @@ object Settings {
 
   val Prefix = "PANTASIA_"
 
-  private def bool(s: String): Boolean =
-    Set("true", "1", "yes", "on", "y", "t").contains(s.trim.toLowerCase)
-
   /** Build from an already-prefixed key map (`PANTASIA_TIME_INTERVAL`
     * -> "90"). Unknown keys are ignored, like pydantic's default.
     */
@@ -60,22 +53,17 @@ object Settings {
     val d = Settings()
     Settings(
       timeInterval = v("TIME_INTERVAL").map(_.toLong).getOrElse(d.timeInterval),
-      inMemoryIndex = v("IN_MEMORY_INDEX").map(bool).getOrElse(d.inMemoryIndex),
       logLevel = v("LOG_LEVEL").getOrElse(d.logLevel),
-      environment = v("ENVIRONMENT").getOrElse(d.environment),
       dbHost = v("DB_HOST").getOrElse(d.dbHost),
       dbPort = v("DB_PORT").map(_.toInt).getOrElse(d.dbPort),
       dbUser = v("DB_USER").getOrElse(d.dbUser),
       dbPass = v("DB_PASS").getOrElse(d.dbPass),
       dbName = v("DB_NAME").getOrElse(d.dbName),
-      dbBackupPath = v("DB_BACKUP_PATH").getOrElse(d.dbBackupPath),
       cdbHost = v("CDB_HOST").getOrElse(d.cdbHost),
       cdbPort = v("CDB_PORT").map(_.toInt).getOrElse(d.cdbPort),
       cdbUser = v("CDB_USER").getOrElse(d.cdbUser),
       cdbPass = v("CDB_PASS").getOrElse(d.cdbPass),
       cdbName = v("CDB_NAME").getOrElse(d.cdbName),
-      pollSeconds = v("POLL_SECONDS").map(_.toInt).getOrElse(d.pollSeconds),
-      compactEvery = v("COMPACT_EVERY").map(_.toLong).getOrElse(d.compactEvery),
       maxRetries = v("MAX_RETRIES").map(_.toInt).getOrElse(d.maxRetries),
       backoffMillis = v("BACKOFF_MILLIS").map(_.toLong).getOrElse(d.backoffMillis),
       logConfig = v("LOG_CONFIG").getOrElse(d.logConfig))

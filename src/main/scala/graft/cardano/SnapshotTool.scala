@@ -53,21 +53,16 @@ class SnapshotTool(store: TableStore) {
 
   /** Drop full-table snapshot versions older than `keep` versions below
     * current (mutable tables only; delta dirs are all live by design).
-    * Upsert LAYERS below a retained version stay reachable — resolving
-    * any retained version needs its base and every layer after it — so
-    * only versions strictly below the newest BASE at/below the horizon
-    * are dropped (the reachability rule an Iceberg snapshot-expiry
-    * applies).
+    * Every full version is complete on its own, so the versions strictly
+    * below the newest one at or below the horizon `current - keep` go.
     */
   def vacuumSnapshots(keep: Int = 2): Int = {
     var n = 0
     for (t <- Schemas.targetTables.keys) {
-      val cur = store.currentVersion(t)
       val fulls = subVersions(t, "full")
-      val newestBaseAtHorizon = fulls
-        .filter(v => v <= cur - keep && !store.isUpsertLayerVersion(t, v))
-        .maxOption.getOrElse(0L)
-      fulls.filter(_ < newestBaseAtHorizon).foreach { v =>
+      val horizon = store.currentVersion(t) - keep
+      val oldestKept = fulls.filter(_ <= horizon).maxOption.getOrElse(0L)
+      fulls.filter(_ < oldestKept).foreach { v =>
         fs.delete(new Path(store.root, s"$t/full/v=$v"), true); n += 1
       }
     }

@@ -3,7 +3,7 @@ package graft.cardano
 import java.sql.Timestamp
 import java.time.temporal.ChronoUnit
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Incremental micro-batch driver (SURVEY.md §2.8 ST1-ST8,
@@ -20,7 +20,6 @@ class SyncDriver(
     sourceDir: String,
     store: TableStore,
     intervalMinutes: Long = 120,
-    compactEvery: Long = 1,
     maxRetries: Int = 2,
     backoffMillis: Long = 500) {
 
@@ -30,26 +29,7 @@ class SyncDriver(
   def this(spark: SparkSession, sourceDir: String, store: TableStore,
       settings: Settings) =
     this(spark, sourceDir, store, settings.timeInterval,
-      settings.compactEvery, settings.maxRetries, settings.backoffMillis)
-
-  /** Stage a mutable table's next version: the recomputed full base
-    * every `compactEvery`-th version, an O(delta) merge-on-read upsert
-    * layer otherwise (`full` and `upserts` describe the SAME post-period
-    * state, so the two stagings are interchangeable — compaction is just
-    * picking the materialized form; the E2E equivalence suite pins it).
-    *
-    * Default 1 = always stage the full table: the measured-fastest
-    * choice at test scale, where writing the whole (page-cached) dim
-    * table costs less than the layer path's per-read resolution — the
-    * 40-period A/B in PERFORMANCE.md. Set K > 1 when the table dwarfs
-    * the per-period delta (the production regime, where an O(dim) write
-    * per period is the bottleneck the layers exist to remove).
-    */
-  private def stageMutable(name: String, upserts: DataFrame,
-      full: DataFrame): Long =
-    if ((store.currentVersion(name) + 1) % compactEvery == 0)
-      store.writeNext(name, full)
-    else store.upsertNext(name, upserts, "id")
+      settings.maxRetries, settings.backoffMillis)
 
   /** First native-asset block (`app/db/postgres.py:308`). */
   val genesis: Timestamp = Timestamp.valueOf("2021-03-01 21:47:00")
@@ -114,12 +94,8 @@ class SyncDriver(
       "collection"    -> store.appendNext("collection", d.collectionInserts),
       "asset_tx"      -> store.appendNext("asset_tx", d.assetTxInserts),
       "asset_mint_tx" -> store.appendNext("asset_mint_tx", d.assetMintTxInserts),
-      // mutable tables stage O(delta) upsert layers (merge-on-read MERGE,
-      // TableStore.upsertNext); every compactEvery-th version stages the
-      // recomputed full table instead, bounding read fan-in and
-      // amortizing the only O(dim) write to O(dim/K) per period
-      "asset"         -> stageMutable("asset", d.assetUpserts, d.assetUpdated),
-      "asset_ext"     -> stageMutable("asset_ext", d.assetExtUpserts, d.assetExtUpdated))
+      "asset"         -> store.writeNext("asset", d.assetUpdated),
+      "asset_ext"     -> store.writeNext("asset_ext", d.assetExtUpdated))
     store.commit(staged)
   }
 
@@ -164,7 +140,7 @@ class SyncDriver(
   /** ST4 + ST7: the reference's outer daemon loop — catch up, then poll
     * the source tip every `pollSeconds` (default 10s, `app/main.py:52-53`),
     * until `requestStop()` (or the registered JVM shutdown hook) fires.
-    * Returns total periods run.
+    * Each cycle probes the source tip once. Returns total periods run.
     */
   def runContinuously(pollSeconds: Int = 10, maxCycles: Int = Int.MaxValue): Int = {
     val hook = new Thread(() => requestStop())
@@ -176,7 +152,7 @@ class SyncDriver(
       while (!stopRequested && cycles < maxCycles) {
         val tip = cardanoTip()
         if (tip != lastTip) {
-          total += catchUpInterruptibly()
+          total += catchUp(tip)
           lastTip = tip
         } else {
           var slept = 0
@@ -193,34 +169,18 @@ class SyncDriver(
     }
   }
 
-  private def catchUpInterruptibly(): Int = {
-    cardanoTip() match {
-      case None => 0
-      case Some(tip) =>
-        val periods = periodList(pantasiaTip(), tip)
-        var n = 0
-        periods.sliding(2).takeWhile(_ => !stopRequested).foreach {
-          case Seq(from, to) => syncPeriodWithRetry(from, to); n += 1
-          case _ =>
-        }
-        n
-    }
-  }
-
-  /** Catch up from the sink tip to the source tip once (the reference's
-    * inner `while len(period_list) > 1` drain). Returns periods run.
+  /** Catch up from the sink tip to the source `tip` (probed by default)
+    * once — the reference's inner `while len(period_list) > 1` drain. A
+    * stop request ends it after the period in flight. Returns periods run.
     */
-  def catchUp(): Int = {
-    cardanoTip() match {
-      case None => 0
-      case Some(tip) =>
-        val periods = periodList(pantasiaTip(), tip)
-        var n = 0
-        periods.sliding(2).foreach {
-          case Seq(from, to) => syncPeriodWithRetry(from, to); n += 1
-          case _ =>
-        }
-        n
-    }
+  def catchUp(tip: Option[Timestamp] = cardanoTip()): Int = tip match {
+    case None => 0
+    case Some(t) =>
+      var n = 0
+      periodList(pantasiaTip(), t).sliding(2).takeWhile(_ => !stopRequested).foreach {
+        case Seq(from, to) => syncPeriodWithRetry(from, to); n += 1
+        case _ =>
+      }
+      n
   }
 }

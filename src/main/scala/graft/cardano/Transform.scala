@@ -35,12 +35,9 @@ object Transform {
       nextAssetTxId: Long,
       nextAssetMintTxId: Long)
 
-  /** One period's delta: rows to append + the mutable tables both as
-    * fully-updated contents (the recompute/spec view) and as keyed
-    * upserts (changed + inserted rows only — what a MERGE sink stages;
-    * `TableStore.upsertNext` and `writeNext` of these are equivalent by
-    * construction). All fields are lazy plans; only what the sink uses
-    * is ever computed.
+  /** One period's delta: rows to append, and the two mutable tables as
+    * their full recomputed contents, which the sink stages whole. All
+    * fields are lazy plans; only what the sink uses is ever computed.
     */
   case class Delta(
       walletInserts: DataFrame,
@@ -50,9 +47,7 @@ object Transform {
       assetMintTxInserts: DataFrame,
       assetExtInserts: DataFrame,
       assetUpdated: DataFrame,     // full asset table after current_wallet_id LWW
-      assetExtUpdated: DataFrame,  // full asset_ext table after latest-ptr LWW
-      assetUpserts: DataFrame,     // changed existing + inserted asset rows
-      assetExtUpserts: DataFrame)  // changed existing + inserted asset_ext rows
+      assetExtUpdated: DataFrame)  // full asset_ext table after latest-ptr LWW
 
   /** Record-stream total order: block time, then pinned tiebreakers, then
     * a row tag that only separates exact duplicates. Every column sorts
@@ -233,26 +228,7 @@ object Transform {
         coalesce(col("b_tx"), col("latest_tx_id")).as("latest_tx_id"))
       .unionByName(assetExtInserts)
 
-    // ---- MERGE-shaped upserts (changed existing rows + inserts) ------------
-    // Inner-join variants of the two LEFT joins above: exactly the rows a
-    // keyed MERGE would write. lastTransfer/extPointers only carry
-    // pre-period asset ids into these joins (new assets enter via the
-    // insert sets), so upserts ∪ untouched == the full recomputed tables.
-    val assetUpserts = st.asset
-      .join(lastTransfer, st.asset("id") === lastTransfer("asset_id"))
-      .select(st.asset("id"), col("collection_id"), col("hash"), col("name"),
-        col("fingerprint"), col("new_cw").as("current_wallet_id"))
-      .unionByName(assetInserts)
-
-    val assetExtUpserts = st.assetExt
-      .join(extPointers, Seq("asset_id"))
-      .select(col("id"), col("asset_id"),
-        coalesce(col("b_mint"), col("latest_mint_tx_id")).as("latest_mint_tx_id"),
-        coalesce(col("b_tx"), col("latest_tx_id")).as("latest_tx_id"))
-      .unionByName(assetExtInserts)
-
     Delta(walletInserts, collectionInserts, assetInserts, assetTxInserts,
-      assetMintTxInserts, assetExtInserts, byId(assetUpdated), byId(assetExtUpdated),
-      byId(assetUpserts), byId(assetExtUpserts))
+      assetMintTxInserts, assetExtInserts, byId(assetUpdated), byId(assetExtUpdated))
   }
 }

@@ -24,10 +24,10 @@ class CardanoEndToEndSpec extends AnyFunSuite with SparkTest {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  private def runSync(intervalMinutes: Long, compactEvery: Long = 1): TableStore = {
+  private def runSync(intervalMinutes: Long): TableStore = {
     val out = Files.createTempDirectory(s"pantasia-$intervalMinutes").toString
     val store = new TableStore(spark, out)
-    val driver = new SyncDriver(spark, srcDir, store, intervalMinutes, compactEvery)
+    val driver = new SyncDriver(spark, srcDir, store, intervalMinutes)
     driver.catchUp()
     store
   }
@@ -111,14 +111,6 @@ class CardanoEndToEndSpec extends AnyFunSuite with SparkTest {
     val oneShot = runSync(1000000)
     for (t <- Seq("wallet", "collection", "asset", "asset_tx", "asset_mint_tx", "asset_ext"))
       assert(rows(store, t) == rows(oneShot, t), s"table $t differs")
-  }
-
-  test("incremental equivalence holds through merge-on-read layers + compaction") {
-    // compactEvery=3 drives the layered sink: periods stage upsert layers,
-    // every 3rd stages a base — final state must match the default run
-    val layered = runSync(120, compactEvery = 3)
-    for (t <- Seq("wallet", "collection", "asset", "asset_tx", "asset_mint_tx", "asset_ext"))
-      assert(rows(store, t) == rows(layered, t), s"table $t differs")
   }
 
   test("idempotence: a second catch-up is a no-op") {

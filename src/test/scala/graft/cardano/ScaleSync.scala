@@ -13,7 +13,7 @@ import graft.functions.Bech32
   * catch-up, prints per-period timing, and asserts global invariants
   * (dense ids, referential integrity, LWW consistency).
   *
-  * Run: sbt "Test/runMain graft.cardano.ScaleSync [nTx] [nAssets] [nWallets]"
+  * Run: sbt "Test/runMain graft.cardano.ScaleSync [nTx] [nAssets] [nWallets] [nPeriods]"
   */
 object ScaleSync {
 
@@ -128,9 +128,6 @@ object ScaleSync {
     val nTx = if (args.length > 0) args(0).toInt else 400000
     val nAssets = if (args.length > 1) args(1).toInt else 100000
     val nWallets = if (args.length > 2) args(2).toInt else 50000
-    // 4th arg: compactEvery (1 = full rewrite every period, the old
-    // copy-on-write behavior — for A/B against the merge-on-read sink)
-    val compactEvery = if (args.length > 3) args(3).toLong else 8L
 
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
@@ -150,12 +147,11 @@ object ScaleSync {
       s"ma_tx_out=${spark.read.parquet(s"$srcDir/ma_tx_out.parquet").count()})")
 
     // chain time = nBlocks * 40s; size the interval for ~nPeriods periods
-    // (5th arg — more periods = smaller per-period deltas, the regime
-    // where the merge-on-read sink's O(delta) staging pays off)
-    val nPeriods = if (args.length > 4) args(4).toInt else 10
+    // (4th arg — more periods = smaller per-period deltas)
+    val nPeriods = if (args.length > 3) args(3).toInt else 10
     val intervalMin = math.max((nTx / 20).toLong * 40 / 60 / nPeriods, 5)
     val store = new TableStore(spark, outDir)
-    val driver = new SyncDriver(spark, srcDir, store, intervalMin, compactEvery)
+    val driver = new SyncDriver(spark, srcDir, store, intervalMin)
     t = System.nanoTime()
     val n = driver.catchUp()
     val syncSec = (System.nanoTime() - t) / 1e9

@@ -15,8 +15,7 @@ class SettingsSpec extends AnyFunSuite with SparkTest {
 
   test("defaults match the reference's Settings class") {
     val s = Settings()
-    assert(s.timeInterval == 120 && s.inMemoryIndex && s.logLevel == "INFO")
-    assert(s.environment == "dev" && s.dbBackupPath == "./backups/")
+    assert(s.timeInterval == 120 && s.logLevel == "INFO")
     assert(s.dbHost == "localhost" && s.dbPort == 5432 && s.dbName == "pantasia")
     assert(s.cdbHost == "localhost" && s.cdbPort == 5433 && s.cdbName == "cexplorer")
   }
@@ -33,16 +32,13 @@ class SettingsSpec extends AnyFunSuite with SparkTest {
       "PANTASIA_CDB_HOST" -> "ch", "PANTASIA_CDB_PORT" -> "15433",
       "PANTASIA_CDB_USER" -> "u2", "PANTASIA_CDB_PASS" -> "p2",
       "PANTASIA_CDB_NAME" -> "n2",
-      "PANTASIA_POLL_SECONDS" -> "3", "PANTASIA_COMPACT_EVERY" -> "4",
+      "PANTASIA_POLL_SECONDS" -> "3",
       "PANTASIA_MAX_RETRIES" -> "5", "PANTASIA_BACKOFF_MILLIS" -> "7",
       "PANTASIA_NO_SUCH_KEY" -> "x", "UNPREFIXED" -> "y"))
-    assert(s.timeInterval == 90 && !s.inMemoryIndex && s.logLevel == "DEBUG")
-    assert(s.environment == "prod")
+    assert(s.timeInterval == 90 && s.logLevel == "DEBUG")
     assert(s.dbUrl == "jdbc:postgresql://dbh:15432/n1?user=u1&password=p1")
     assert(s.cdbUrl == "jdbc:postgresql://ch:15433/n2?user=u2&password=p2")
-    assert(s.dbBackupPath == "/b/")
-    assert(s.pollSeconds == 3 && s.compactEvery == 4 &&
-      s.maxRetries == 5 && s.backoffMillis == 7)
+    assert(s.maxRetries == 5 && s.backoffMillis == 7)
   }
 
   test(".env file is read underneath the process env (pydantic precedence)") {
@@ -146,8 +142,7 @@ class SettingsSpec extends AnyFunSuite with SparkTest {
     val (nDefault, sDefault) =
       run(Settings.fromMap(Map.empty))
     val (nOverride, sOverride) =
-      run(Settings.fromMap(Map("PANTASIA_TIME_INTERVAL" -> "60",
-        "PANTASIA_COMPACT_EVERY" -> "3")))
+      run(Settings.fromMap(Map("PANTASIA_TIME_INTERVAL" -> "60")))
     assert(nOverride > nDefault,
       s"halving the interval must add periods ($nDefault -> $nOverride)")
     // and the synced content is interval-invariant (the ST3 guarantee)

@@ -193,4 +193,19 @@ class SnapshotSpec extends AnyFunSuite with SparkTest {
     assert(store.read("asset_tx").count() == 5)
     assert(store.read("asset").count() == 6)
   }
+
+  test("runContinuously probes the source tip once per cycle") {
+    val store = new TableStore(spark, Files.createTempDirectory("probe-out").toString)
+    var probes = 0
+    var periods = 0
+    val driver = new SyncDriver(spark, srcDir, store, 120) {
+      override def cardanoTip(): Option[java.sql.Timestamp] = { probes += 1; super.cardanoTip() }
+      override def syncPeriod(from: java.sql.Timestamp, to: java.sql.Timestamp): Unit =
+        periods += 1
+    }
+    // one cycle on a new tip: one probe, then the whole catch-up
+    assert(driver.runContinuously(pollSeconds = 1, maxCycles = 1) == periods)
+    assert(periods > 0)
+    assert(probes == 1, s"$probes tip probes in one cycle")
+  }
 }

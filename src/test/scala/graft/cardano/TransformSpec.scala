@@ -112,8 +112,7 @@ class TransformSpec extends AnyFunSuite with SparkTest {
 
   private def deltaRows(d: Transform.Delta): Seq[Seq[String]] =
     Seq(d.walletInserts, d.collectionInserts, d.assetInserts, d.assetTxInserts,
-      d.assetMintTxInserts, d.assetExtInserts, d.assetUpdated, d.assetExtUpdated,
-      d.assetUpserts, d.assetExtUpserts)
+      d.assetMintTxInserts, d.assetExtInserts, d.assetUpdated, d.assetExtUpdated)
       .map(_.collect().map(_.toSeq.mkString("|")).toSeq.sorted)
 
   test("one period's Delta is row-identical with AQE partition coalescing on and off") {

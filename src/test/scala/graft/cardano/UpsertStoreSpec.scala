@@ -7,10 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTest
 
-/** Merge-on-read contract of `TableStore.upsertNext`: layer staging is
-  * O(delta) (no base rewrite), reads resolve newest-version-wins per key,
-  * time travel sees each committed version's state, and vacuum never
-  * drops a dir a retained version still needs.
+/** Versioned-store contract: a mutable table's version is one full dir,
+  * an append table's the union of its delta dirs, staged versions stay
+  * unseen until committed, vacuum keeps what retained versions read, and a
+  * merge-on-read layer left by an older build is refused, never half-read.
   */
 class UpsertStoreSpec extends AnyFunSuite with SparkTest {
 
@@ -32,33 +32,6 @@ class UpsertStoreSpec extends AnyFunSuite with SparkTest {
   private def owners(df: DataFrame): Map[Long, Long] =
     df.select("id", "current_wallet_id").as[(Long, Long)].collect().toMap
 
-  test("upsert layers resolve newest-wins; base is never rewritten") {
-    val store = new TableStore(spark,
-      Files.createTempDirectory("mor").toString)
-    // v1: base with assets 1..3
-    store.commit(Map("asset" ->
-      store.writeNext("asset", assetDf(1L -> 10L, 2L -> 10L, 3L -> 10L))))
-    val v1Files = new java.io.File(store.root, "asset/full/v=1").list().sorted
-    // v2: layer updates asset 2, inserts asset 4
-    store.commit(Map("asset" ->
-      store.upsertNext("asset", assetDf(2L -> 20L, 4L -> 20L), "id")))
-    // v3: layer updates assets 2 (again) and 3
-    store.commit(Map("asset" ->
-      store.upsertNext("asset", assetDf(2L -> 30L, 3L -> 30L), "id")))
-
-    assert(owners(store.read("asset")) ==
-      Map(1L -> 10L, 2L -> 30L, 3L -> 30L, 4L -> 20L))
-    // time travel: v2 sees the first layer only, v1 the base
-    assert(owners(store.readVersion("asset", 2)) ==
-      Map(1L -> 10L, 2L -> 20L, 3L -> 10L, 4L -> 20L))
-    assert(owners(store.readVersion("asset", 1)) ==
-      Map(1L -> 10L, 2L -> 10L, 3L -> 10L))
-    // the base dir was not touched by either layer staging
-    assert(new java.io.File(store.root, "asset/full/v=1").list().sorted
-      .sameElements(v1Files))
-    assert(store.nextIds(Seq("asset", "wallet")) == Map("asset" -> 5L, "wallet" -> 1L))
-  }
-
   test("append tables: committed versions with no delta dir; staged ones stay unseen") {
     val store = new TableStore(spark, Files.createTempDirectory("gaps").toString)
     def wallets(ids: Long*): DataFrame = spark.createDataFrame(
@@ -76,22 +49,44 @@ class UpsertStoreSpec extends AnyFunSuite with SparkTest {
     assert(ids(store.readVersion("wallet", 3)) == Set(1L, 2L))
     assert(ids(store.readVersion("wallet", 2)) == Set(1L, 2L))
     assert(store.nextIds(Seq("wallet")) == Map("wallet" -> 4L))
+    // a mutable table's full version and a table with no version, in the
+    // same aggregation
+    store.commit(Map("asset" -> store.writeNext("asset", assetDf(1L -> 10L, 4L -> 10L))))
+    assert(store.nextIds(Seq("asset", "wallet", "collection")) ==
+      Map("asset" -> 5L, "wallet" -> 4L, "collection" -> 1L))
   }
 
   test("vacuum keeps every dir a retained version still resolves through") {
-    val store = new TableStore(spark,
-      Files.createTempDirectory("morvac").toString)
-    store.commit(Map("asset" -> store.writeNext("asset", assetDf(1L -> 10L))))
-    store.commit(Map("asset" -> store.upsertNext("asset", assetDf(1L -> 20L), "id")))
-    store.commit(Map("asset" -> store.upsertNext("asset", assetDf(2L -> 20L), "id")))
+    val store = new TableStore(spark, Files.createTempDirectory("vac").toString)
+    for (w <- 1L to 4L)
+      store.commit(Map("asset" -> store.writeNext("asset", assetDf(1L -> w, 2L -> 10L * w))))
+    val current = owners(store.read("asset"))
+    assert(current == Map(1L -> 4L, 2L -> 40L))
+    def fulls = new java.io.File(store.root, "asset/full").list().sorted.toSeq
     val tool = new SnapshotTool(store)
-    // keep=1 horizon is v2 — a LAYER; its base v1 must survive the vacuum
-    assert(tool.vacuumSnapshots(keep = 1) == 0)
-    assert(owners(store.read("asset")) == Map(1L -> 20L, 2L -> 20L))
-    // after compacting into a v4 base, keep=1 (horizon v3, still a layer)
-    // retains everything; keep=0 (horizon = the v4 base) drops v1..v3
-    store.commit(Map("asset" -> store.writeNext("asset", store.read("asset"))))
-    assert(tool.vacuumSnapshots(keep = 0) == 3)
-    assert(owners(store.read("asset")) == Map(1L -> 20L, 2L -> 20L))
+    // keep = 1: the horizon is v3, so v1 and v2 go
+    assert(tool.vacuumSnapshots(keep = 1) == 2)
+    assert(fulls == Seq("v=3", "v=4"))
+    assert(owners(store.readVersion("asset", 3)) == Map(1L -> 3L, 2L -> 30L))
+    // keep = 0: only the current version stays
+    assert(tool.vacuumSnapshots(keep = 0) == 1)
+    assert(fulls == Seq("v=4"))
+    assert(owners(store.read("asset")) == current)
+  }
+
+  test("a full version holding a legacy _upsert marker fails on read and nextIds") {
+    val store = new TableStore(spark, Files.createTempDirectory("legacy").toString)
+    store.commit(Map("asset" -> store.writeNext("asset", assetDf(1L -> 10L, 2L -> 10L))))
+    // v2 as an older build staged a merge-on-read layer: changed rows only,
+    // plus a marker file holding the merge key
+    store.commit(Map("asset" -> store.writeNext("asset", assetDf(2L -> 20L))))
+    Files.write(java.nio.file.Paths.get(store.root, "asset", "full", "v=2", "_upsert"),
+      "id\n".getBytes("UTF-8"))
+    for (e <- Seq(
+        intercept[IllegalStateException](store.read("asset")),
+        intercept[IllegalStateException](store.nextIds(Seq("asset")))))
+      assert(e.getMessage.contains("asset version 2"), e.getMessage)
+    // the full version below it still reads
+    assert(owners(store.readVersion("asset", 1)) == Map(1L -> 10L, 2L -> 10L))
   }
 }

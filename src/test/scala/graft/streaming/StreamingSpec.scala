@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTest
+import graft.{Graft, SparkTest}
 import graft.sources.Tables
 
 /** Streaming == batch equivalence on the same events data. */
@@ -692,5 +692,15 @@ class StreamingSpec extends AnyFunSuite with SparkTest with BeforeAndAfterAll {
     assert(got == batch)
     // and the planted PII is actually seen, not vacuously zero
     assert(spark.table("pii_out").agg(sum("n_email")).as[Long].head() > 0L)
+  }
+
+  test("Graft.registerTables enables plain SQL over the star schema") {
+    Graft.registerTables(spark, sfDir)
+    val n = spark.sql(
+      """SELECT count(*) FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |WHERE o.o_orderstatus = 'F'""".stripMargin).collect()(0).getLong(0)
+    assert(n > 0)
+    val ev = spark.sql("SELECT max(ts) FROM events").collect()(0).getTimestamp(0)
+    assert(ev != null)
   }
 }
