@@ -8,55 +8,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf (r13): the default 100-entry whole-stage-codegen
-      // class cache thrashes across a 310-query suite — every pass
-      // re-pays Janino compilation for every query, and WHICH query
-      // pays extra depends on its alphabetical predecessor's plan count
-      // (the dedup_containment "regression" of r12: 1.5 s isolated,
-      // 2.1 s right after the 2-LSH-chain dedup_cluster_incremental;
-      // cache raised → 1.5-1.7 s in the same position). A long-lived
-      // production app sizes this cache to its live plan count; so does
-      // the bench.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // Always use the sort-based shuffle writer (optimization r15).
-      // Below the 200-partition default threshold Spark picks the
-      // bypass-merge writer, which creates ONE FILE PER REDUCE PARTITION
-      // per map task (M×R files per exchange) and then concatenates —
-      // measured here as ~100 ms of shuffle-write time per map task on
-      // kilobyte-sized exchanges (file-creation latency, not data). The
-      // sort writer emits one data + one index file per task at any R;
-      // its extra in-memory sort is negligible when a partition fits the
-      // buffer. At production scale R > 200 selects the sort path
-      // anyway, so this only changes the small-R regime — where the
-      // file storm is pure overhead. Measured on a 20-query subset:
-      // 37.5 -> 30.6 s. SPARK_GRAFT_BYPASS restores the default (200).
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS", "1"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // JVM warm-up (not timed): the parquet read path plus the RDD
-    // shuffle, window, and broadcast-join machinery — otherwise the
-    // alphabetically-first query using each path is charged its one-time
-    // class-loading/codegen cost and per-query numbers don't reflect
-    // steady state.
-    try {
-      spark.read.parquet(s"$sfDir/region.parquet").count()
-      spark.sparkContext.parallelize(0 until 1000, 8)
-        .map(i => (i % 16, i.toLong)).reduceByKey(_ + _).count()
-      import org.apache.spark.sql.functions.{broadcast, expr, sum}
-      val small = spark.range(100).selectExpr("id % 5 AS k", "id AS v")
-      small.join(broadcast(spark.range(5).selectExpr("id AS k")), "k")
-        .withColumn("r", expr("row_number() over (partition by k order by v)"))
-        .agg(sum("r")).collect()
-    } catch { case _: Throwable => }
+    val spark = Graft.session("bench")
+    warmUp(spark, sfDir)
     // (name, seconds, ok); a failed query is reported as -1, never as a
     // normal-looking timing, so regressions-to-failure are visible.
     // SPARK_GRAFT_ONLY=a,b,c restricts the run (dev profiling; the driver
@@ -75,27 +28,7 @@ object Bench {
         val ok = try { fn(spark, sfDir).count(); true }
                  catch { case _: Throwable => false }
         val secs = (System.nanoTime() - t0) / 1e9
-        // localCheckpoint blocks from the finished query are only freed by
-        // the ContextCleaner AFTER a GC notices the dead references; across
-        // 150+ queries the block store otherwise accretes and WHICH later
-        // queries pay the eviction + GC pressure shifts with run order
-        // (measured: multi-second noise moving between runs). Dropping the
-        // finished query's persistent RDDs explicitly — outside its timing
-        // window — keeps every query's block-store state identical, plus a
-        // periodic GC for broadcast/shuffle state.
-        //
-        // BLOCKING unpersist (round 13): with blocking=false the block
-        // frees race INTO the next query's timing window, so a heavy
-        // predecessor taxes whichever query follows it alphabetically —
-        // measured on dedup_containment (r12 verdict "What's wrong #3"):
-        // 1.53 s isolated or before r12's dedup_cluster_incremental
-        // existed, 2.05-2.10 s when timed right after it, with
-        // containment's own code and plan unchanged since r9. Finishing
-        // the cleanup synchronously (still outside the timing window)
-        // removes the predecessor-dependent cross-talk.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        System.gc()
+        cleanUp(spark)
         (name, if (ok) secs else -1.0, ok)
       }
     val passes: Seq[Seq[(String, Double, Boolean)]] = (1 to nRuns).map(_ => onePass())
@@ -163,5 +96,47 @@ object Bench {
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":$qs,"errors":$errors,"sf":$sfNum}""")
     spark.stop()
+  }
+
+  /** JVM warm-up (not timed): the parquet read path plus the RDD
+    * shuffle, window, and broadcast-join machinery — otherwise the
+    * alphabetically-first query using each path is charged its one-time
+    * class-loading/codegen cost and per-query numbers don't reflect
+    * steady state.
+    */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit =
+    try {
+      spark.read.parquet(s"$sfDir/region.parquet").count()
+      spark.sparkContext.parallelize(0 until 1000, 8)
+        .map(i => (i % 16, i.toLong)).reduceByKey(_ + _).count()
+      import org.apache.spark.sql.functions.{broadcast, expr, sum}
+      val small = spark.range(100).selectExpr("id % 5 AS k", "id AS v")
+      small.join(broadcast(spark.range(5).selectExpr("id AS k")), "k")
+        .withColumn("r", expr("row_number() over (partition by k order by v)"))
+        .agg(sum("r")).collect()
+    } catch { case _: Throwable => }
+
+  /** Per-query cleanup, outside the timed window.
+    *
+    * localCheckpoint blocks from the finished query are only freed by the
+    * ContextCleaner AFTER a GC notices the dead references; across 150+
+    * queries the block store otherwise accretes and WHICH later queries
+    * pay the eviction + GC pressure shifts with run order (measured:
+    * multi-second noise moving between runs). Dropping the finished
+    * query's persistent RDDs explicitly keeps every query's block-store
+    * state identical, plus a GC for broadcast/shuffle state.
+    *
+    * BLOCKING unpersist (round 13): with blocking=false the block frees
+    * race INTO the next query's timing window, so a heavy predecessor
+    * taxes whichever query follows it alphabetically — measured on
+    * dedup_containment: 1.53 s isolated, 2.05-2.10 s when timed right
+    * after dedup_cluster_incremental, with containment's own code and plan
+    * unchanged. Finishing the cleanup synchronously removes the
+    * predecessor-dependent cross-talk.
+    */
+  private[graft] def cleanUp(spark: SparkSession): Unit = {
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    System.gc()
   }
 }

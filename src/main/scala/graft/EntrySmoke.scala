@@ -1,9 +1,7 @@
 package graft
 object EntrySmoke {
   def main(a: Array[String]): Unit = {
-    val s = org.apache.spark.sql.SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled","false").config("spark.sql.session.timeZone","UTC").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = Graft.session("entry-smoke")
     val df = SparkEntry.entry(s)
     println("ENTRY ROWS=" + df.count()); df.show(5, false)
     s.stop()

@@ -1,28 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool (round 14): dump `.explain("formatted")` for named queries to
   * files, for the plans/r14/<query>_{before,after}.txt evidence the
   * optimization round commits. Usage:
-  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.PlanDump <sfDir> <outDir> <suffix> q1,q2,..."
+  *   sbt "runMain graft.PlanDump <sfDir> <outDir> <suffix> q1,q2,..."
   * Writes <outDir>/<query>_<suffix>.txt. Plans only — nothing is executed,
   * so AQE-final shapes are not captured here (the bench numbers carry those).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, names) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Graft.session("plan-dump")
     new java.io.File(outDir).mkdirs()
     val wanted = names.split(",").toSeq
     val all = SparkEntry.queries

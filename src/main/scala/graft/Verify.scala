@@ -1,28 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match Bench: the 100-entry codegen class cache default thrashes
-      // across a 310-query suite (see Bench.scala) — untimed here, but
-      // the dump finishes measurably faster
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // sort-based shuffle writer at any partition count — see
-      // Bench.scala (the bypass-merge writer's M×R file storm costs
-      // ~100 ms/map task on tiny exchanges; untimed here, but the dump
-      // finishes measurably faster)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session("verify")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=a,b,c restricts the dump (dev iteration only; the
     // driver never sets it, so its runs always cover the full suite)

@@ -1,7 +1,5 @@
 package graft.cardano
 
-import org.apache.spark.sql.SparkSession
-
 /** Library-surface smoke: full incremental sync over a source directory.
   *
   * Usage: runMain graft.cardano.CardanoDemo <sourceDir> <targetDir> [intervalMin]
@@ -21,12 +19,7 @@ object CardanoDemo {
     val settings =
       if (args.length > 2) settings0.copy(timeInterval = args(2).toLong)
       else settings0
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session("cardano-demo")
     spark.sparkContext.setLogLevel(settings.logLevel match {
       case "DEBUG" => "INFO" // spark DEBUG drowns the demo output
       case l => l

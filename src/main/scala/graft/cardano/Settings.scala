@@ -46,13 +46,17 @@ object Settings {
   val Prefix = "PANTASIA_"
 
   /** Build from an already-prefixed key map (`PANTASIA_TIME_INTERVAL`
-    * -> "90"). Unknown keys are ignored, like pydantic's default.
+    * -> "90"). Unknown keys are ignored, like pydantic's default. A
+    * period interval of zero minutes or less is rejected: the period grid
+    * would never reach the tip.
     */
   def fromMap(env: Map[String, String]): Settings = {
     def v(key: String): Option[String] = env.get(Prefix + key).map(_.trim)
     val d = Settings()
+    val timeInterval = v("TIME_INTERVAL").map(_.toLong).getOrElse(d.timeInterval)
+    require(timeInterval > 0, s"${Prefix}TIME_INTERVAL must be positive, got $timeInterval")
     Settings(
-      timeInterval = v("TIME_INTERVAL").map(_.toLong).getOrElse(d.timeInterval),
+      timeInterval = timeInterval,
       logLevel = v("LOG_LEVEL").getOrElse(d.logLevel),
       dbHost = v("DB_HOST").getOrElse(d.dbHost),
       dbPort = v("DB_PORT").map(_.toInt).getOrElse(d.dbPort),

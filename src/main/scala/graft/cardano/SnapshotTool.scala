@@ -13,20 +13,15 @@ class SnapshotTool(store: TableStore) {
   private val fs = new Path(store.root)
     .getFileSystem(store.spark.sparkContext.hadoopConfiguration)
 
-  private def subVersions(table: String, kind: String): Seq[Long] = {
-    val d = new Path(store.root, s"$table/$kind")
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("v="))
-      .map(_.stripPrefix("v=").toLong).sorted
-  }
+  private def staged(t: String): Seq[Long] =
+    (store.versions(t, "delta") ++ store.versions(t, "full")).distinct.sorted
 
   /** All on-disk versions per table (committed current marked by the
     * store's pointer; higher versions are aborted stages).
     */
   def listVersions(): Map[String, (Long, Seq[Long])] =
     Schemas.targetTables.keys.map { t =>
-      t -> (store.currentVersion(t), (subVersions(t, "delta") ++ subVersions(t, "full")).distinct.sorted)
+      t -> (store.currentVersion(t), staged(t))
     }.toMap
 
   /** Restore: atomically point every table back to `version` (the
@@ -34,9 +29,7 @@ class SnapshotTool(store: TableStore) {
     */
   def rollback(version: Long): Unit =
     store.commit(Schemas.targetTables.keys.map { t =>
-      val avail = (subVersions(t, "delta") ++ subVersions(t, "full")).distinct
-      val v = avail.filter(_ <= version).maxOption.getOrElse(0L)
-      t -> v
+      t -> staged(t).filter(_ <= version).maxOption.getOrElse(0L)
     }.toMap)
 
   /** Drop staged-but-uncommitted version dirs (aborted periods). */
@@ -44,7 +37,7 @@ class SnapshotTool(store: TableStore) {
     var n = 0
     for (t <- Schemas.targetTables.keys; kind <- Seq("delta", "full")) {
       val cur = store.currentVersion(t)
-      subVersions(t, kind).filter(_ > cur).foreach { v =>
+      store.versions(t, kind).filter(_ > cur).foreach { v =>
         fs.delete(new Path(store.root, s"$t/$kind/v=$v"), true); n += 1
       }
     }
@@ -59,7 +52,7 @@ class SnapshotTool(store: TableStore) {
   def vacuumSnapshots(keep: Int = 2): Int = {
     var n = 0
     for (t <- Schemas.targetTables.keys) {
-      val fulls = subVersions(t, "full")
+      val fulls = store.versions(t, "full")
       val horizon = store.currentVersion(t) - keep
       val oldestKept = fulls.filter(_ <= horizon).maxOption.getOrElse(0L)
       fulls.filter(_ < oldestKept).foreach { v =>
@@ -242,11 +235,7 @@ object SnapshotTool {
   def main(args: Array[String]): Unit = {
     require(args.length == 3,
       "usage: SnapshotTool <storeRoot> <backupDir> <destRoot>")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .appName("graft-restore").master("local[4]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = graft.Graft.session("graft-restore")
     try {
       val tool = new SnapshotTool(new TableStore(spark, args(0)))
       val in = new java.io.BufferedReader(new java.io.InputStreamReader(System.in))

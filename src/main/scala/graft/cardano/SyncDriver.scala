@@ -23,6 +23,8 @@ class SyncDriver(
     maxRetries: Int = 2,
     backoffMillis: Long = 500) {
 
+  require(intervalMinutes > 0, s"intervalMinutes must be positive, got $intervalMinutes")
+
   /** Env-configured construction (reference parity: the daemon is
     * configured entirely through `PANTASIA_*`, `app/settings.py:1-12`).
     */

@@ -95,20 +95,26 @@ class TableStore(val spark: SparkSession, val root: String) {
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       Schemas.targetTables(name))
 
-  /** The delta dirs of an append table's version `v`, oldest first
-    * (versions the table skipped have no dir) — ONE directory listing,
-    * however many versions the store has committed (per-version `exists`
-    * probes would make every read's planning grow with store age).
+  /** The version numbers of a table's `delta` or `full` (`kind`) dirs,
+    * ascending — ONE directory listing, however many versions the store
+    * has staged (per-version `exists` probes would make every read's
+    * planning grow with store age).
     */
-  private def appendDirs(name: String, v: Long): Seq[String] = {
+  def versions(name: String, kind: String): Seq[Long] = {
     val listed =
-      try fs.listStatus(new Path(tableDir(name), "delta")).toSeq
+      try fs.listStatus(new Path(tableDir(name), kind)).toSeq
       catch { case _: java.io.FileNotFoundException => Seq.empty }
     listed.flatMap { s =>
       val n = s.getPath.getName
       if (s.isDirectory && n.startsWith("v=")) n.drop(2).toLongOption else None
-    }.filter(_ <= v).sorted.map(deltaDir(name, _).toString)
+    }.sorted
   }
+
+  /** The delta dirs of an append table's version `v`, oldest first
+    * (versions the table skipped have no dir).
+    */
+  private def appendDirs(name: String, v: Long): Seq[String] =
+    versions(name, "delta").filter(_ <= v).map(deltaDir(name, _).toString)
 
   /** The dirs holding version `v` of a table: a mutable table's `full/v=N`
     * when it has one, else the append table's delta dirs 1..N.

@@ -6,21 +6,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
 /** One shared local session per suite (lazy). */
 trait SparkTest {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // plan pins assert on full store paths inside FileScan locations;
-      // the 100-char default truncates the session-rooted TempStores
-      // paths out of the plan string
-      .config("spark.sql.maxMetadataStringLength", "2000")
-      // match Bench (optimization r15): sort-based shuffle writer at any
-      // partition count — the bypass-merge writer's per-reduce-partition
-      // file creation dominates tiny local exchanges
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .getOrCreate()
-    s
+    // 4 cores on every host, so partition counts and the plans the
+    // suites pin do not depend on the machine. Plan pins assert on full
+    // store paths inside FileScan locations; the 100-char default
+    // truncates the session-rooted TempStores paths out of the plan string.
+    Graft.session("graft-test", cores = 4,
+      conf = Map("spark.sql.maxMetadataStringLength" -> "2000"))
   }
 
   /** Await a streaming query, then STOP it if it is still active — a

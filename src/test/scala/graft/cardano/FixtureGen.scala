@@ -1,9 +1,7 @@
 package graft.cardano
 object FixtureGen {
   def main(a: Array[String]): Unit = {
-    val s = org.apache.spark.sql.SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled","false").config("spark.sql.session.timeZone","UTC").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = graft.Graft.session("fixture-gen")
     Fixture.write(s, a(0)); s.stop()
   }
 }

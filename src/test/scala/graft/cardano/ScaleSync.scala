@@ -129,14 +129,7 @@ object ScaleSync {
     val nAssets = if (args.length > 1) args(1).toInt else 100000
     val nWallets = if (args.length > 2) args(2).toInt else 50000
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.session("scale-sync")
 
     val srcDir = Files.createTempDirectory("scale-src").toString
     val outDir = Files.createTempDirectory("scale-out").toString

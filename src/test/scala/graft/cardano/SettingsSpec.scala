@@ -61,6 +61,24 @@ class SettingsSpec extends AnyFunSuite with SparkTest {
     assert(s2 == Settings(), "no file, no env -> pure defaults")
   }
 
+  test("a PANTASIA_TIME_INTERVAL of zero or less is rejected, from the env and from .env") {
+    for (bad <- Seq("0", "-5")) {
+      val e = intercept[IllegalArgumentException] {
+        Settings.fromMap(Map("PANTASIA_TIME_INTERVAL" -> bad))
+      }
+      assert(e.getMessage.contains(s"PANTASIA_TIME_INTERVAL must be positive, got $bad"))
+      val envFile = Files.createTempFile("graft", ".env")
+      Files.write(envFile, s"PANTASIA_TIME_INTERVAL=$bad\n".getBytes("UTF-8"))
+      intercept[IllegalArgumentException](Settings.load(Some(envFile.toString), env = Map.empty))
+    }
+  }
+
+  test("a SyncDriver with a zero-minute interval cannot be built") {
+    val store = new TableStore(spark, Files.createTempDirectory("interval-out").toString)
+    val e = intercept[IllegalArgumentException](new SyncDriver(spark, "unused", store, 0))
+    assert(e.getMessage.contains("intervalMinutes must be positive, got 0"))
+  }
+
   test("PANTASIA_LOG_CONFIG file drives per-logger levels; LOG_LEVEL wins for the app") {
     // the reference's logging.yaml dialect, verbatim structure
     // (main.py:404-415 reads it, then overrides the app logger's level

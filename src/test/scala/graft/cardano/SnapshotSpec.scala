@@ -38,7 +38,24 @@ class SnapshotSpec extends AnyFunSuite with SparkTest {
     assert(store.read("asset").count() == finalAssets)
     assert(store.read("asset_tx").count() == 5)
 
-    assert(tool.vacuumStaged() >= 0)
+    // one period staged but never committed: vacuumStaged removes exactly
+    // its dirs, and the committed state reads the same rows
+    def rows(t: String) = store.read(t).collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    val committed = Schemas.targetTables.keys.map(t => t -> rows(t)).toMap
+    val onDisk = tool.listVersions()
+    val noCommit = new TableStore(spark, out) {
+      override def commit(versions: Map[String, Long]): Unit = throw new IllegalStateException("crash")
+    }
+    intercept[IllegalStateException] {
+      new SyncDriver(spark, srcDir, noCommit, 120).syncPeriod(driver.genesis, driver.pantasiaTip())
+    }
+    val stagedOnly = tool.listVersions()
+      .map { case (t, (_, vs)) => t -> vs.diff(onDisk(t)._2) }.filter(_._2.nonEmpty)
+    assert(stagedOnly.keySet == Set("wallet", "collection", "asset", "asset_tx", "asset_mint_tx", "asset_ext") &&
+      stagedOnly.values.forall(_.size == 1), s"one staged version per synced table: $stagedOnly")
+    assert(tool.vacuumStaged() == stagedOnly.size)
+    assert(tool.listVersions() == onDisk)
+    for ((t, r) <- committed) assert(rows(t) == r, s"table $t changed by vacuumStaged")
     val removed = tool.vacuumSnapshots(keep = 1)
     assert(removed > 0, "old full versions should be vacuumable")
     // current state still readable after vacuum

@@ -2,13 +2,10 @@ package graft.cardano
 
 import java.nio.file.Files
 import java.sql.Timestamp
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTest
+import graft.{JobStats, SparkTest}
 
 /** A period's cost is dominated by its Spark job count, not its data: each
   * job pays scheduling and, under AQE, a stage materialization. This pins
@@ -21,8 +18,6 @@ class SyncJobBudgetSpec extends AnyFunSuite with SparkTest {
   /** 37 jobs measured for the period below, plus a small margin. */
   private val Budget = 40
 
-  private val Tag = "graft.test.jobBudget"
-
   test("one fixture syncPeriod stays within its Spark job budget") {
     val src = Files.createTempDirectory("budget-src").toString
     Fixture.write(spark, src)
@@ -31,22 +26,13 @@ class SyncJobBudgetSpec extends AnyFunSuite with SparkTest {
     val (t1, t2) = (Timestamp.valueOf("2021-03-02 13:47:00"), Timestamp.valueOf("2021-03-02 16:00:00"))
     driver.syncPeriod(driver.genesis, t1)
 
-    // jobs of the tagged thread, including the ones AQE and broadcast
-    // exchanges submit from their own threads (they inherit its properties)
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null && j.properties.getProperty(Tag) != null) jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setLocalProperty(Tag, "1")
-    try driver.syncPeriod(t1, t2)
-    finally {
-      spark.sparkContext.setLocalProperty(Tag, null)
-      ListenerBusDrain(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    val stats = JobStats.install(spark.sparkContext)
+    val jobs =
+      try {
+        JobStats.phase(spark.sparkContext, "budget")(driver.syncPeriod(t1, t2))
+        stats("budget").jobs
+      } finally stats.stop()
     assert(store.read("asset_tx").count() + store.read("asset_mint_tx").count() > 0)
-    assert(jobs.get <= Budget, s"${jobs.get} jobs for one fixture period, budget $Budget")
+    assert(jobs <= Budget, s"$jobs jobs for one fixture period, budget $Budget")
   }
 }

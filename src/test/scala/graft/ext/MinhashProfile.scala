@@ -1,12 +1,8 @@
 package graft.ext
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 object MinhashProfile {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions","32")
-      .config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.session("minhash-profile")
     val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f

@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale stress for the round-6 release-audit family: runs the PII
@@ -20,13 +19,7 @@ object ScaleAudit {
 
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 200000L
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.session("scale-audit")
 
     def t[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime()

@@ -43,13 +43,7 @@ object ScaleExt {
 
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 100000L
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.session("scale-ext")
 
     def t[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime()

@@ -41,13 +41,7 @@ object ScalePipeline {
 
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 1000000L
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.session("scale-pipeline")
 
     def t[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale stress for the round-12 sketch lifecycle ops: 1M distinct keys
@@ -18,13 +17,8 @@ import org.apache.spark.sql.functions._
 object ScaleSketch {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 1000000L
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session("scale-sketch")
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
     def t[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime()
       val r = f

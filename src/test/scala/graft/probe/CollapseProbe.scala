@@ -1,6 +1,5 @@
 package graft.probe
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,10 +9,7 @@ import org.apache.spark.sql.functions._
 object CollapseProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 5000000L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.session("collapse-probe")
     val ev = graft.ext.ScalePipeline.events(spark, n).localCheckpoint()
     println(s"n=${ev.count()}")
     def t[A](name: String)(f: => A): A = {

@@ -2,10 +2,7 @@ package graft.queries
 import org.apache.spark.sql.execution.ExplainMode
 object PlanProbe {
   def main(a: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions","4")
-      .config("spark.ui.enabled","false").config("spark.sql.session.timeZone","UTC").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Graft.session("plan-probe")
     val name = a(0)
     val df = (CoreQueries.all ++ ExtQueries.all)(name)(spark, "/root/testdata/sf0.001")
     df.collect()
