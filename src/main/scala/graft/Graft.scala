@@ -17,15 +17,13 @@ object Graft {
   /** Cores of a session whose caller names none: `SPARK_GRAFT_CPUS` if
     * set, else the machine's processors, at most 32.
     */
-  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+  private def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
     .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors()))
 
   /** A `local[cores]` session: shuffle partitions sized to cores, AQE on,
-    * UTC, no UI, plus the two settings below. `conf` adds settings only
-    * its caller needs.
+    * UTC, no UI, plus the two settings below.
     */
-  def session(appName: String = "graft", cores: Int = defaultCores,
-      conf: Map[String, String] = Map.empty): SparkSession = {
+  def session(appName: String = "graft", cores: Int = defaultCores): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
@@ -52,7 +50,6 @@ object Graft {
       // anyway, so this only changes the small-R regime, where the file
       // storm is pure overhead. Bench 20-query subset: 37.5 -> 30.6 s.
       .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config(conf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

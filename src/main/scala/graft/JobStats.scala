@@ -83,10 +83,6 @@ object JobStats {
     def stages: Int = stageRows.size
     def tasks: Int = stageRows.map(_.tasks).sum
     def runMs: Long = stageRows.map(_.runMs).sum
-    def cpuMs: Long = stageRows.map(_.cpuMs).sum
-    def gcMs: Long = stageRows.map(_.gcMs).sum
-    def deserializeMs: Long = stageRows.map(_.deserializeMs).sum
-    def fetchWaitMs: Long = stageRows.map(_.fetchWaitMs).sum
     def shuffleReadBytes: Long = stageRows.map(_.shuffleReadBytes).sum
     def shuffleWriteBytes: Long = stageRows.map(_.shuffleWriteBytes).sum
     def stageWallMs: Long = stageRows.map(_.wallMs).sum

@@ -21,7 +21,8 @@ object Profile {
     Bench.warmUp(spark, sfDir)
     val stats = JobStats.install(sc)
     val mb = 1048576.0
-    names.split(",").foreach { name =>
+    // a name listed twice would share its phases with the first listing
+    names.split(",").distinct.foreach { name =>
       SparkEntry.queries.get(name) match {
         case None => println(s"[profile] unknown query: $name")
         case Some(fn) =>

@@ -7,11 +7,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
 trait SparkTest {
   lazy val spark: SparkSession = {
     // 4 cores on every host, so partition counts and the plans the
-    // suites pin do not depend on the machine. Plan pins assert on full
-    // store paths inside FileScan locations; the 100-char default
-    // truncates the session-rooted TempStores paths out of the plan string.
-    Graft.session("graft-test", cores = 4,
-      conf = Map("spark.sql.maxMetadataStringLength" -> "2000"))
+    // suites pin do not depend on the machine
+    val s = Graft.session("graft-test", cores = 4)
+    // Plan pins assert on full store paths inside FileScan locations; the
+    // 100-char default truncates the session-rooted TempStores paths out
+    // of the plan string.
+    s.conf.set("spark.sql.maxMetadataStringLength", "2000")
+    s
   }
 
   /** Await a streaming query, then STOP it if it is still active — a
