@@ -2,13 +2,13 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * `queries` maps every implemented operator family from SURVEY.md §2 (and
   * the phase-E extension operators) to a DataFrame pipeline over the
   * synthetic tables in `sfDir`; `oracleSql` holds the DuckDB-equivalent SQL
-  * for those that are ANSI-expressible (the rest get rows-only checks and
-  * their exact semantics are pinned by ScalaTest suites instead).
+  * of every one of them. Each family registers a query together with its
+  * oracle, so a query without one does not compile.
   */
 object SparkEntry {
 

@@ -27,19 +27,16 @@ import java.sql.DriverManager
   * backup/restore cutover (`scripts/backup_restore.py:180-208`) is that
   * pattern, available here as `SnapshotTool` + a rename on the target.
   *
-  * Scale shape: each table ships over `numPartitions` parallel batched
-  * connections (`batchsize` rows per round trip). This is the O(table)
-  * full-state integration surface; a per-period O(delta) feed would ship
+  * Scale shape: each table ships over `JdbcSource.NumPartitionsConf`
+  * parallel batched connections (10000 rows per round trip). This is the
+  * O(table) full-state integration surface; a per-period O(delta) feed would ship
   * only the append tables' new delta dirs instead of re-shipping the
   * dimension tables every period.
   */
 object JdbcSink {
 
   /** Batched rows per JDBC round trip. */
-  val BatchSizeConf = "spark.graft.jdbc.batchSize"
-
-  /** Parallel connections per exported table. */
-  val NumPartitionsConf = "spark.graft.jdbc.numPartitions"
+  private val BatchSize = 10000
 
   /** Parents before children (reference FK graph,
     * `app/db/postgres.py:214-249`): inserts run in this order, deletes in
@@ -57,7 +54,7 @@ object JdbcSink {
       tables: Seq[String] = insertOrder): Seq[(String, Long)] = {
     val spark = store.spark
     val props = new java.util.Properties()
-    props.setProperty("batchsize", spark.conf.get(BatchSizeConf, "10000"))
+    props.setProperty("batchsize", BatchSize.toString)
 
     // one transaction clears the old rows, children first
     val conn = DriverManager.getConnection(url)
@@ -78,7 +75,7 @@ object JdbcSink {
 
     tables.map { t =>
       val df = store.read(t).coalesce(
-        spark.conf.get(NumPartitionsConf, "8").toInt).persist()
+        spark.conf.get(JdbcSource.NumPartitionsConf, "8").toInt).persist()
       try {
         df.write.mode("append").jdbc(url, s"\"$t\"", props)
         (t, df.count()) // served from the persisted blocks, no re-read

@@ -27,8 +27,9 @@ import org.apache.spark.sql.types.StructType
   *    the column projection into the remote WHERE/SELECT (pinned by
   *    JdbcSourceSpec), so the database ships one period's rows, never the
   *    chain's history;
-  *  - `spark.graft.jdbc.fetchSize` keeps each cursor streaming instead of
-  *    materializing the result server- or client-side.
+  *  - a fetch size of 10000 rows per round trip keeps each cursor
+  *    streaming instead of materializing the result server- or
+  *    client-side.
   *
   * Tables without a resolvable `id` (or empty ones) fall back to a single
   * partition — correct, just serial.
@@ -68,11 +69,12 @@ object JdbcSource {
   /** A `sourceDir` that is a JDBC URL selects this ingress. */
   def isJdbc(dir: String): Boolean = dir.startsWith("jdbc:")
 
-  /** Parallel connections per table read (range-split on `id`). */
+  /** Parallel connections per table read (range-split on `id`) and per
+    * table exported by [[JdbcSink]]. */
   val NumPartitionsConf = "spark.graft.jdbc.numPartitions"
 
   /** JDBC fetch size per cursor (rows per round trip). */
-  val FetchSizeConf = "spark.graft.jdbc.fetchSize"
+  private val FetchSize = 10000
 
   /** Driver-side `(min(id), max(id))` probe — one scalar round trip; None
     * when the table is empty or has no `id` column. Only a
@@ -109,8 +111,7 @@ object JdbcSource {
   def table(spark: SparkSession, url: String, name: String,
       schema: StructType): DataFrame = {
     val props = new java.util.Properties()
-    props.setProperty("fetchsize",
-      spark.conf.get(FetchSizeConf, "10000"))
+    props.setProperty("fetchsize", FetchSize.toString)
     val n = spark.conf.get(NumPartitionsConf, "8").toInt
     val raw = idBounds(url, name) match {
       case Some((lo, hi)) if n > 1 && hi > lo =>

@@ -119,12 +119,7 @@ class SyncDriver(
         case scala.util.control.NonFatal(e) =>
           attempt += 1
           if (attempt > maxRetries || stopRequested) throw e
-          var slept = 0L
-          val delay = backoffMillis << (attempt - 1)
-          while (!stopRequested && slept < delay) {
-            val step = math.min(100L, delay - slept)
-            Thread.sleep(step); slept += step
-          }
+          pause(backoffMillis << (attempt - 1))
           // a stop that arrived mid-backoff must not trigger another
           // attempt against a failing source — rethrow immediately
           if (stopRequested) throw e
@@ -138,6 +133,16 @@ class SyncDriver(
     * commits) before the loop exits; nothing is torn down mid-write.
     */
   def requestStop(): Unit = stopRequested = true
+
+  /** Sleep `millis` in steps of at most 100 ms; a stop request ends it
+    * early. */
+  private def pause(millis: Long): Unit = {
+    var slept = 0L
+    while (!stopRequested && slept < millis) {
+      val step = math.min(100L, millis - slept)
+      Thread.sleep(step); slept += step
+    }
+  }
 
   /** ST4 + ST7: the reference's outer daemon loop — catch up, then poll
     * the source tip every `pollSeconds` (default 10s, `app/main.py:52-53`),
@@ -156,12 +161,7 @@ class SyncDriver(
         if (tip != lastTip) {
           total += catchUp(tip)
           lastTip = tip
-        } else {
-          var slept = 0
-          while (!stopRequested && slept < pollSeconds * 1000) {
-            Thread.sleep(100); slept += 100
-          }
-        }
+        } else pause(pollSeconds * 1000L)
         cycles += 1
       }
       total

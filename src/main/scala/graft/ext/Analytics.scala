@@ -91,15 +91,23 @@ object Analytics {
   def ewma(events: DataFrame, keyCol: String, tsCol: String,
       tieCol: String, valCol: String, alpha: Double): DataFrame = {
     val a = lit(alpha)
+    orderedValues(events, keyCol, tsCol, tieCol, valCol)
+      .select(col(keyCol), col("n"),
+        aggregate(col("__xs"), lit(0.0),
+          (s, x) => x.getField("v") * a + s * (lit(1.0) - a)).as("ewma"))
+  }
+
+  /** Per key, the count `n` and the non-null values as `__xs`, sorted by
+    * (ts, tiebreak): the input of the ordered folds. One exchange of
+    * (key, fold inputs).
+    */
+  private def orderedValues(events: DataFrame, keyCol: String, tsCol: String,
+      tieCol: String, valCol: String): DataFrame =
     events.where(col(valCol).isNotNull)
       .groupBy(col(keyCol))
       .agg(count(lit(1)).as("n"),
         sort_array(collect_list(struct(col(tsCol), col(tieCol),
-          col(valCol).as("v")))).as("xs"))
-      .select(col(keyCol), col("n"),
-        aggregate(col("xs"), lit(0.0),
-          (s, x) => x.getField("v") * a + s * (lit(1.0) - a)).as("ewma"))
-  }
+          col(valCol).as("v")))).as("__xs"))
 
   /** Linear (multi-touch) attribution: each conversion splits one unit of
     * credit equally across the user's touch events in the lookback
@@ -250,11 +258,7 @@ object Analytics {
           .cast("long").as("sx"),
         (sum(round(col(valCol) * col(valCol), 6).cast("decimal(30,6)"))
           * lit(1000000)).cast("long").as("sxx"))
-    val folded = events.where(col(valCol).isNotNull)
-      .groupBy(col(keyCol))
-      .agg(count(lit(1)).as("n"),
-        sort_array(collect_list(struct(col(tsCol), col(tieCol),
-          col(valCol).as("v")))).as("__xs"))
+    val folded = orderedValues(events, keyCol, tsCol, tieCol, valCol)
       .join(broadcast(stats), Seq(keyCol))
     val step = s"greatest(0.0D, acc.s + x.v - $cusumMuExpr - $cusumKappaExpr)"
     folded.selectExpr(keyCol, "n",
@@ -285,11 +289,7 @@ object Analytics {
       tieCol: String, valCol: String, alpha: Double, beta: Double): DataFrame = {
     val newL = s"CASE WHEN acc.n = 0L THEN x.v " +
       s"ELSE $alpha * x.v + ${1 - alpha} * (acc.l + acc.b) END"
-    events.where(col(valCol).isNotNull)
-      .groupBy(col(keyCol))
-      .agg(count(lit(1)).as("n"),
-        sort_array(collect_list(struct(col(tsCol), col(tieCol),
-          col(valCol).as("v")))).as("__xs"))
+    orderedValues(events, keyCol, tsCol, tieCol, valCol)
       .selectExpr(keyCol, "n",
         s"""aggregate(__xs,
            |  named_struct('lp', 0.0D, 'l', 0.0D, 'b', 0.0D, 'n', 0L),
@@ -504,11 +504,7 @@ object Analytics {
     val init = Seq.fill(3 + period)("0.0D").mkString(", ")
     val nextS = hwNextSeasonExpr("element_at(__h, 3)",
       k => s"element_at(__h, ${4 + k})", period)
-    events.where(col(valCol).isNotNull)
-      .groupBy(col(keyCol))
-      .agg(count(lit(1)).as("n"),
-        sort_array(collect_list(struct(col(tsCol), col(tieCol),
-          col(valCol).as("v")))).as("__xs"))
+    orderedValues(events, keyCol, tsCol, tieCol, valCol)
       .selectExpr(keyCol, "n",
         s"""aggregate(__xs, array($init),
            |  (acc, x) -> array(${step.mkString(",\n    ")})
@@ -977,25 +973,40 @@ object Analytics {
     * granularity — six numbers of state per group, no window, no sort.
     */
   def welchT(df: DataFrame, groupCol: String, valCol: String,
-      inA: Column): DataFrame = {
-    val v = col(valCol)
-    def dsum(c: Column, in: Column): Column =
-      sum(when(in, round(c, 6).cast("decimal(30,6)")).otherwise(lit(null)))
-    val agg = df.where(v.isNotNull)
-      .groupBy(col(groupCol))
-      .agg(
-        sum(inA.cast("long")).as("na0"), sum((!inA).cast("long")).as("nb0"),
-        dsum(v, inA).cast("double").as("sa"),
-        dsum(v * v, inA).cast("double").as("qa"),
-        dsum(v, !inA).cast("double").as("sb"),
-        dsum(v * v, !inA).cast("double").as("qb"))
-      .withColumn("na", col("na0").cast("double"))
-      .withColumn("nb", col("nb0").cast("double"))
-    agg
+      inA: Column): DataFrame =
+    twoSampleMoments(df, groupCol, valCol, inA)
       .where(col("na0") >= 2 && col("nb0") >= 2 && expr(s"$welchSeExpr > 0.0"))
       .withColumn("t_welch", expr(welchTExpr))
       .select(col(groupCol), col("na0").as("n_a"), col("nb0").as("n_b"),
         col("t_welch"))
+
+  /** Σ round(c, 6) as DECIMAL: a double sum that no summation order
+    * changes. */
+  private def dsum(c: Column): Column =
+    sum(round(c, 6).cast("decimal(30,6)"))
+
+  /** [[dsum]] over the rows where `in` holds. */
+  private def dsumIf(c: Column, in: Column): Column =
+    sum(when(in, round(c, 6).cast("decimal(30,6)")))
+
+  /** The two-cohort sufficient statistics of `valCol` per group, for
+    * cohort A (`inA`) and the rest: counts `na0`/`nb0` (and as doubles
+    * `na`/`nb`), and the exact sums `sa`/`sb` of v and `qa`/`qb` of v².
+    * One map-side-combining aggregation; six numbers of state per group.
+    */
+  private def twoSampleMoments(df: DataFrame, groupCol: String,
+      valCol: String, inA: Column): DataFrame = {
+    val v = col(valCol)
+    df.where(v.isNotNull)
+      .groupBy(col(groupCol))
+      .agg(
+        sum(inA.cast("long")).as("na0"), sum((!inA).cast("long")).as("nb0"),
+        dsumIf(v, inA).cast("double").as("sa"),
+        dsumIf(v * v, inA).cast("double").as("qa"),
+        dsumIf(v, !inA).cast("double").as("sb"),
+        dsumIf(v * v, !inA).cast("double").as("qb"))
+      .withColumn("na", col("na0").cast("double"))
+      .withColumn("nb", col("nb0").cast("double"))
   }
 
   /** Shared Cohen's d expression over the welchT sufficient statistics:
@@ -1017,27 +1028,14 @@ object Analytics {
     * "is the shift real", d answers "is it big enough to care".
     */
   def cohensD(df: DataFrame, groupCol: String, valCol: String,
-      inA: Column): DataFrame = {
-    val v = col(valCol)
-    def dsum(c: Column, in: Column): Column =
-      sum(when(in, round(c, 6).cast("decimal(30,6)")).otherwise(lit(null)))
-    df.where(v.isNotNull)
-      .groupBy(col(groupCol))
-      .agg(
-        sum(inA.cast("long")).as("na0"), sum((!inA).cast("long")).as("nb0"),
-        dsum(v, inA).cast("double").as("sa"),
-        dsum(v * v, inA).cast("double").as("qa"),
-        dsum(v, !inA).cast("double").as("sb"),
-        dsum(v * v, !inA).cast("double").as("qb"))
-      .withColumn("na", col("na0").cast("double"))
-      .withColumn("nb", col("nb0").cast("double"))
+      inA: Column): DataFrame =
+    twoSampleMoments(df, groupCol, valCol, inA)
       .where(col("na0") >= 2 && col("nb0") >= 2 &&
         expr(s"$cohensDVarExpr > 0.0"))
       .withColumn("mean_diff", expr("round(sa / na - sb / nb, 6)"))
       .withColumn("cohens_d", expr(cohensDExpr))
       .select(col(groupCol), col("na0").as("n_a"), col("nb0").as("n_b"),
         col("mean_diff"), col("cohens_d"))
-  }
 
   /** Shared Mann–Whitney z expression over the four exact per-group
     * statistics (na, nb as doubles; u2a = 2·U_A and ties = Σ(t³−t) as
@@ -1201,17 +1199,7 @@ object Analytics {
         sum(col("__z").cast("decimal(30,6)")).as("__si"),
         sum(round(col("__z") * col("__z"), 6).cast("decimal(30,6)"))
           .as("__qi"))
-    cell.groupBy(col("__g"))
-      .agg(count(lit(1)).cast("double").as("k"),
-        sum(col("__ni")).as("n0"),
-        sum(col("__si")).cast("double").as("s"),
-        sum(col("__qi")).cast("double").as("q"),
-        sum(round(col("__si").cast("double") * col("__si").cast("double")
-          / col("__ni").cast("double"), 6).cast("decimal(30,6)"))
-          .cast("double").as("b"))
-      .withColumn("n", col("n0").cast("double"))
-      .where(col("k") >= 2.0 && col("n") > col("k") &&
-        expr("q - b > 0.0"))
+    anovaSums(cell, "__g")
       .withColumn("w_stat", expr(anovaFExpr))
       .select(col("__g").as(groupCol), col("k").cast("long").as("n_cohorts"),
         col("n0").as("n"), col("w_stat"))
@@ -1243,7 +1231,24 @@ object Analytics {
     * final expressions.
     */
   def twoProportionZ(df: DataFrame, groupCol: String, success: Column,
-      inA: Column): DataFrame = {
+      inA: Column): DataFrame =
+    proportionCounts(df, groupCol, success, inA)
+      .withColumn("rate_a",
+        expr(half6Sql("CAST(ka AS DOUBLE) / CAST(na0 AS DOUBLE)")))
+      .withColumn("rate_b",
+        expr(half6Sql("CAST(kb AS DOUBLE) / CAST(nb0 AS DOUBLE)")))
+      .withColumn("z", expr(propZExpr))
+      .select(col(groupCol), col("na0").as("n_a"), col("nb0").as("n_b"),
+        col("ka").as("k_a"), col("kb").as("k_b"),
+        col("rate_a"), col("rate_b"), col("z"))
+
+  /** The four exact longs of the two-proportion design per group:
+    * trials `na0`/`nb0` and successes `ka`/`kb` in cohort A (`inA`) and
+    * the rest. Groups with an empty cohort or a pooled rate of 0 or 1
+    * (no variance) drop.
+    */
+  private def proportionCounts(df: DataFrame, groupCol: String,
+      success: Column, inA: Column): DataFrame =
     df.where(success.isNotNull && inA.isNotNull)
       .select(col(groupCol),
         inA.cast("boolean").as("__a"), success.cast("boolean").as("__s"))
@@ -1256,15 +1261,6 @@ object Analytics {
       .where(col("na0") >= 1L && col("nb0") >= 1L &&
         col("ka") + col("kb") > 0L &&
         col("ka") + col("kb") < col("na0") + col("nb0"))
-      .withColumn("rate_a",
-        expr(half6Sql("CAST(ka AS DOUBLE) / CAST(na0 AS DOUBLE)")))
-      .withColumn("rate_b",
-        expr(half6Sql("CAST(kb AS DOUBLE) / CAST(nb0 AS DOUBLE)")))
-      .withColumn("z", expr(propZExpr))
-      .select(col(groupCol), col("na0").as("n_a"), col("nb0").as("n_b"),
-        col("ka").as("k_a"), col("kb").as("k_b"),
-        col("rate_a"), col("rate_b"), col("z"))
-  }
 
   /** Shared minimum-detectable-effect expression over the same exact
     * longs as [[propZExpr]]: MDE = (z_{α/2} + z_β) · √(p̂(1−p̂)(1/nA +
@@ -1303,19 +1299,8 @@ object Analytics {
     * aggregation to group granularity — four longs of state per group.
     */
   def minDetectableEffect(df: DataFrame, groupCol: String, success: Column,
-      inA: Column): DataFrame = {
-    df.where(success.isNotNull && inA.isNotNull)
-      .select(col(groupCol),
-        inA.cast("boolean").as("__a"), success.cast("boolean").as("__s"))
-      .groupBy(col(groupCol))
-      .agg(
-        sum(col("__a").cast("long")).as("na0"),
-        sum((!col("__a")).cast("long")).as("nb0"),
-        sum((col("__a") && col("__s")).cast("long")).as("ka"),
-        sum((!col("__a") && col("__s")).cast("long")).as("kb"))
-      .where(col("na0") >= 1L && col("nb0") >= 1L &&
-        col("ka") + col("kb") > 0L &&
-        col("ka") + col("kb") < col("na0") + col("nb0"))
+      inA: Column): DataFrame =
+    proportionCounts(df, groupCol, success, inA)
       .withColumn("pooled_rate", expr(half6Sql(
         "CAST(ka + kb AS DOUBLE) / CAST(na0 + nb0 AS DOUBLE)")))
       .withColumn("mde_abs", expr(mdeExpr))
@@ -1325,7 +1310,6 @@ object Analytics {
       .select(col(groupCol), col("na0").as("n_a"), col("nb0").as("n_b"),
         col("ka").as("k_a"), col("kb").as("k_b"),
         col("pooled_rate"), col("mde_abs"), col("mde_rel"))
-  }
 
   /** Sample-ratio mismatch check per group — the FIRST sanity gate of
     * every A/B readout (Fabijan et al.'s "most common data-quality bug
@@ -1392,7 +1376,7 @@ object Analytics {
     val v = col(valCol)
     def cell(t: Boolean, p: Boolean): Column = {
       val in = (if (t) inTreat else !inTreat) && (if (p) inPost else !inPost)
-      sum(when(in, round(v, 6).cast("decimal(30,6)")))
+      dsumIf(v, in)
     }
     def cnt(t: Boolean, p: Boolean): Column = {
       val in = (if (t) inTreat else !inTreat) && (if (p) inPost else !inPost)
@@ -1476,10 +1460,6 @@ object Analytics {
   def cuped(df: DataFrame, groupCol: String, xCol: String, yCol: String,
       inA: Column): DataFrame = {
     val x = col(xCol); val y = col(yCol)
-    def dsum(c: Column): Column =
-      sum(round(c, 6).cast("decimal(30,6)"))
-    def dsumIf(c: Column, in: Column): Column =
-      sum(when(in, round(c, 6).cast("decimal(30,6)")))
     df.where(x.isNotNull && y.isNotNull && inA.isNotNull)
       .groupBy(col(groupCol))
       .agg(
@@ -1613,21 +1593,9 @@ object Analytics {
   def tostEquivalence(df: DataFrame, groupCol: String, valCol: String,
       inA: Column, margin: Double): DataFrame = {
     require(margin > 0.0, "tost: margin must be positive")
-    val v = col(valCol)
-    def dsum(c: Column, in: Column): Column =
-      sum(when(in, round(c, 6).cast("decimal(30,6)")).otherwise(lit(null)))
     val diffExpr = "(sa / na - sb / nb)"
     val seExpr = s"sqrt($welchSeExpr)"
-    df.where(v.isNotNull)
-      .groupBy(col(groupCol))
-      .agg(
-        sum(inA.cast("long")).as("na0"), sum((!inA).cast("long")).as("nb0"),
-        dsum(v, inA).cast("double").as("sa"),
-        dsum(v * v, inA).cast("double").as("qa"),
-        dsum(v, !inA).cast("double").as("sb"),
-        dsum(v * v, !inA).cast("double").as("qb"))
-      .withColumn("na", col("na0").cast("double"))
-      .withColumn("nb", col("nb0").cast("double"))
+    twoSampleMoments(df, groupCol, valCol, inA)
       .where(col("na0") >= 2 && col("nb0") >= 2 && expr(s"$welchSeExpr > 0.0"))
       .withColumn("diff", expr(half6Sql(diffExpr)))
       .withColumn("t_lower",
@@ -1731,9 +1699,20 @@ object Analytics {
     val v = col(valCol)
     val cell = df.where(v.isNotNull && cohortCol.isNotNull)
       .groupBy(col(groupCol), cohortCol.as("__c"))
-      .agg(count(lit(1)).as("__ni"),
-        sum(round(v, 6).cast("decimal(30,6)")).as("__si"),
-        sum(round(v * v, 6).cast("decimal(30,6)")).as("__qi"))
+      .agg(count(lit(1)).as("__ni"), dsum(v).as("__si"), dsum(v * v).as("__qi"))
+    anovaSums(cell, groupCol)
+      .withColumn("f_stat", expr(anovaFExpr))
+      .select(col(groupCol), col("k").cast("long").as("n_cohorts"),
+        col("n0").as("n"), col("f_stat"))
+  }
+
+  /** The [[anovaFExpr]] statistics per group from per-(group, cohort)
+    * cells of count `__ni` and DECIMAL sums `__si`/`__qi`: cohort count
+    * `k`, `n0` (and as a double `n`), `s`, `q`, and `b` = Σ s_i²/n_i,
+    * each term rounded at 6 so the cohort combine is order-free. Groups
+    * with < 2 cohorts, n ≤ k, or zero within-variance drop.
+    */
+  private def anovaSums(cell: DataFrame, groupCol: String): DataFrame =
     cell.groupBy(col(groupCol))
       .agg(count(lit(1)).cast("double").as("k"),
         sum(col("__ni")).as("n0"),
@@ -1745,10 +1724,6 @@ object Analytics {
       .withColumn("n", col("n0").cast("double"))
       .where(col("k") >= 2.0 && col("n") > col("k") &&
         expr("q - b > 0.0"))
-      .withColumn("f_stat", expr(anovaFExpr))
-      .select(col(groupCol), col("k").cast("long").as("n_cohorts"),
-        col("n0").as("n"), col("f_stat"))
-  }
 
   /** Shared tie-corrected Friedman Q expression (Conover's form) over
     * exact 4-scaled statistics (n, k as doubles; b4 = Σ_j (2R_j)²/n as a
@@ -2022,6 +1997,22 @@ object Analytics {
     * key-partitioned; state is vocabulary-sized, never row-sized.
     */
   def klFromGlobal(df: DataFrame, groupCol: String,
+      keyCol: String): DataFrame =
+    groupKeyProbs(df, groupCol, keyCol)
+      .groupBy(col(groupCol))
+      .agg(first(col("__ng")).as("n_keys_obs"),
+        sum(round(col("__p") * log(col("__p") / col("__q")), 6)
+          .cast("decimal(30,6)")).cast("double").as("kl"))
+      .withColumnRenamed("n_keys_obs", "n_obs")
+
+  /** One row per observed (group, key) with its count `__o`, the group
+    * total `__ng`, the key total `__ok`, the grand total `__n`, and the
+    * exact ratios p = `__o`/`__ng` (the group's distribution) and
+    * q = `__ok`/`__n` (the corpus's). The (group, key) counts join the
+    * key marginal key-partitioned; the group marginal and the total are
+    * broadcast. State is vocabulary-sized, never row-sized.
+    */
+  private def groupKeyProbs(df: DataFrame, groupCol: String,
       keyCol: String): DataFrame = {
     val gk = df.where(col(keyCol).isNotNull)
       .groupBy(col(groupCol), col(keyCol))
@@ -2035,11 +2026,6 @@ object Analytics {
       .crossJoin(broadcast(tot))
       .withColumn("__p", col("__o").cast("double") / col("__ng").cast("double"))
       .withColumn("__q", col("__ok").cast("double") / col("__n").cast("double"))
-      .groupBy(col(groupCol))
-      .agg(first(col("__ng")).as("n_keys_obs"),
-        sum(round(col("__p") * log(col("__p") / col("__q")), 6)
-          .cast("decimal(30,6)")).cast("double").as("kl"))
-      .withColumnRenamed("n_keys_obs", "n_obs")
   }
 
   /** The shared half-away-from-zero scale-6 rounding, spelled with
@@ -2089,19 +2075,8 @@ object Analytics {
     * group-keyed sum. State per group: two decimals + two longs.
     */
   def jsdFromGlobal(df: DataFrame, groupCol: String,
-      keyCol: String): DataFrame = {
-    val gk = df.where(col(keyCol).isNotNull)
-      .groupBy(col(groupCol), col(keyCol))
-      .agg(count(lit(1)).as("__o"))
-      .localCheckpoint(true)
-    val g = gk.groupBy(col(groupCol)).agg(sum(col("__o")).as("__ng"))
-    val k = gk.groupBy(col(keyCol)).agg(sum(col("__o")).as("__ok"))
-    val tot = gk.agg(sum(col("__o")).as("__n"))
-    gk.join(broadcast(g), Seq(groupCol))
-      .join(k, Seq(keyCol))
-      .crossJoin(broadcast(tot))
-      .withColumn("__p", col("__o").cast("double") / col("__ng").cast("double"))
-      .withColumn("__q", col("__ok").cast("double") / col("__n").cast("double"))
+      keyCol: String): DataFrame =
+    groupKeyProbs(df, groupCol, keyCol)
       .withColumn("__m", (col("__p") + col("__q")) / 2.0)
       .groupBy(col(groupCol))
       .agg(first(col("__ng")).as("n_obs"),
@@ -2113,7 +2088,6 @@ object Analytics {
         first(col("__n")).as("n"))
       .withColumn("jsd", expr(jsdExpr))
       .select(col(groupCol), col("n_obs"), col("jsd"))
-  }
 
   /** First-order Markov transition matrix over each entity's event
     * stream: counts of consecutive (from_type → to_type) steps and the

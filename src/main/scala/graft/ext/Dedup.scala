@@ -587,7 +587,22 @@ object Dedup {
   def ngramJaccardPairs(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.8, maxDocFreq: Long = 1000,
-      minCommon: Long = 3): DataFrame = {
+      minCommon: Long = 3): DataFrame =
+    shingleOverlaps(df, idCol, textCol, n, maxDocFreq, minCommon)
+      .withColumn("jaccard",
+        col("common").cast("double") /
+          (col("sz_a") + col("sz_b") - col("common")).cast("double"))
+      .where(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "jaccard")
+
+  /** Candidate pairs (`id_a` < `id_b`) sharing at least `minCommon`
+    * n-gram shingles of document frequency in [2, `maxDocFreq`], each with
+    * its exact set sizes `sz_a`/`sz_b` and shared-shingle count `common`
+    * over the full shingle sets.
+    */
+  private def shingleOverlaps(
+      df: DataFrame, idCol: String, textCol: String,
+      n: Int, maxDocFreq: Long, minCommon: Long): DataFrame = {
     val sh = DataOps.parallelismFloor(
         df.select(col(idCol).as("id"), col(textCol).as("__t")))
       .select(col("id"), TextShingles.word_shingle_hashes(col("__t"), n).as("sh"))
@@ -626,11 +641,6 @@ object Dedup {
       .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b"),
         col("set_size").as("sz_b")), Seq("id_b"))
       .withColumn("common", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .withColumn("jaccard",
-        col("common").cast("double") /
-          (col("sz_a") + col("sz_b") - col("common")).cast("double"))
-      .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
   }
 
   /** Asymmetric near-dup: directed (contained, container) pairs where
@@ -650,33 +660,8 @@ object Dedup {
   def containmentPairs(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.8, maxDocFreq: Long = 1000,
-      minCommon: Long = 3): DataFrame = {
-    val sh = DataOps.parallelismFloor(
-        df.select(col(idCol).as("id"), col(textCol).as("__t")))
-      .select(col("id"), TextShingles.word_shingle_hashes(col("__t"), n).as("sh"))
-      .withColumn("set_size", size(col("sh")).cast("long"))
-      .localCheckpoint(true) // eager: same four-leaf reuse (and the same
-      // mid-job accumulator-GC race) as ngramJaccardPairs above
-
-    val inv = sh.select(col("id"), explode(col("sh")).as("g"))
-    val keep = inv.groupBy("g").agg(count(lit(1)).as("df"))
-      .where(col("df") <= maxDocFreq && col("df") >= 2)
-    val pruned = inv.join(keep.select("g"), Seq("g"))
-
-    val candidates = pruned.select(col("g"), col("id").as("id_a"))
-      .join(pruned.select(col("g"), col("id").as("id_b")), Seq("g"))
-      .where(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("shared_rare"))
-      .where(col("shared_rare") >= minCommon)
-      .select("id_a", "id_b")
-
-    candidates
-      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a"),
-        col("set_size").as("sz_a")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b"),
-        col("set_size").as("sz_b")), Seq("id_b"))
-      .withColumn("common", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
+      minCommon: Long = 3): DataFrame =
+    shingleOverlaps(df, idCol, textCol, n, maxDocFreq, minCommon)
       .select(explode(array(
         struct(col("id_a").as("id_contained"), col("id_b").as("id_container"),
           (col("common").cast("double") / col("sz_a").cast("double")).as("containment")),
@@ -687,7 +672,6 @@ object Dedup {
         col("p.id_container").as("id_container"),
         col("p.containment").as("containment"))
       .where(col("containment") >= threshold)
-  }
 
   /** Consecutive-duplicate collapse (event-stream compaction): within each
     * `partCol` stream ordered by (`tsCol`, `idCol`), runs of equal

@@ -1618,20 +1618,23 @@ object Graph {
       eact: DataFrame): DataFrame = {
     val nodes = active.select(col("node"))
       .collect().map(_.getLong(0))
-    // collect edges into PRIMITIVE long arrays immediately — no boxed
-    // tuple array retained — so driver memory tracks the 16-bytes/edge
-    // estimate the threshold is sized for (ADVICE r10 #1)
-    val (esrc, edst) = {
-      val erows = eact.select(col("src"), col("dst")).collect()
-      val a = new Array[Long](erows.length)
-      val b = new Array[Long](erows.length)
-      var j = 0
-      while (j < erows.length) {
-        a(j) = erows(j).getLong(0); b(j) = erows(j).getLong(1); j += 1
-      }
-      (a, b) // Row array unreachable past this block — only longs retained
-    }
+    val (esrc, edst) = collectEdges(eact)
     sccTarjanCore(eact.sparkSession, nodes, esrc, edst)
+  }
+
+  /** The (src, dst) edges as two primitive long arrays. No boxed tuple
+    * array is retained, so driver memory tracks the 16-bytes/edge
+    * estimate the hand-off threshold is sized for (ADVICE r10 #1).
+    */
+  private def collectEdges(eact: DataFrame): (Array[Long], Array[Long]) = {
+    val erows = eact.select(col("src"), col("dst")).collect()
+    val a = new Array[Long](erows.length)
+    val b = new Array[Long](erows.length)
+    var j = 0
+    while (j < erows.length) {
+      a(j) = erows(j).getLong(0); b(j) = erows(j).getLong(1); j += 1
+    }
+    (a, b) // the Row array is unreachable once this returns
   }
 
   /** [[sccTarjanDriver]] when the caller has ONLY the edge frame (the
@@ -1639,16 +1642,7 @@ object Graph {
     * endpoints on the driver — the graph's node set IS the endpoint set
     * there (isolated nodes cannot exist in an edge-derived graph). */
   private def sccTarjanDriverEdges(eact: DataFrame): DataFrame = {
-    val (esrc, edst) = {
-      val erows = eact.select(col("src"), col("dst")).collect()
-      val a = new Array[Long](erows.length)
-      val b = new Array[Long](erows.length)
-      var j = 0
-      while (j < erows.length) {
-        a(j) = erows(j).getLong(0); b(j) = erows(j).getLong(1); j += 1
-      }
-      (a, b)
-    }
+    val (esrc, edst) = collectEdges(eact)
     val seen = new java.util.HashSet[java.lang.Long](esrc.length * 2)
     val buf = new scala.collection.mutable.ArrayBuffer[Long](esrc.length)
     var j = 0

@@ -22,6 +22,25 @@ object Joins {
   def asofJoin(left: DataFrame, right: DataFrame, keyCols: Seq[String],
       tsCol: String, valueCols: Seq[String],
       tieCols: Seq[String] = Nil): DataFrame = {
+    val w = Window.partitionBy(keyCols.map(col): _*)
+      .orderBy((Seq(col(tsCol), col("__side")) ++ tieCols.map(c => col(s"__tie_$c"))): _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val attached = valueCols.foldLeft(
+        asofUnion(left, right, keyCols, tsCol, valueCols, tieCols)) { (df, c) =>
+      df.withColumn(c, last(col(s"__v_$c"), ignoreNulls = true).over(w))
+    }
+    attached.where(col("__side") === 1)
+      .select(left.columns.toSeq.map(col) ++ valueCols.map(col): _*)
+  }
+
+  /** The as-of joins' input: left rows (`__side` 1) and right rows
+    * (`__side` 0) in one schema. Left rows carry their own columns,
+    * right rows carry each value column as `__v_<c>` and each tie column
+    * as a long `__tie_<c>`.
+    */
+  private def asofUnion(left: DataFrame, right: DataFrame,
+      keyCols: Seq[String], tsCol: String, valueCols: Seq[String],
+      tieCols: Seq[String]): DataFrame = {
     val leftCols = left.columns.toSeq
     require(valueCols.forall(!leftCols.contains(_)),
       s"valueCols ${valueCols.filter(leftCols.contains)} collide with left columns — alias them on the right side first")
@@ -29,7 +48,6 @@ object Joins {
       case "long" | "integer" | "short" | "byte" => true; case _ => false
     }), "tieCols must be integral (the greatest value wins timestamp ties)")
     val keys = keyCols.map(col)
-    // align schemas: left carries its own columns, right carries the values
     val lTagged = left
       .withColumn("__side", lit(1))
       .select(keys ++ Seq(col(tsCol), col("__side")) ++
@@ -43,14 +61,7 @@ object Joins {
         leftCols.filterNot(keyCols.contains).filterNot(_ == tsCol)
           .map(c => lit(null).cast(left.schema(c).dataType).as(c)) ++
         valueCols.map(c => col(c).as(s"__v_$c")): _*)
-    val w = Window.partitionBy(keys: _*)
-      .orderBy((Seq(col(tsCol), col("__side")) ++ tieCols.map(c => col(s"__tie_$c"))): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val attached = valueCols.foldLeft(lTagged.unionByName(rTagged)) { (df, c) =>
-      df.withColumn(c, last(col(s"__v_$c"), ignoreNulls = true).over(w))
-    }
-    attached.where(col("__side") === 1)
-      .select(leftCols.map(col) ++ valueCols.map(col): _*)
+    lTagged.unionByName(rTagged)
   }
 
   /** Forward as-of join — the mirror of [[asofJoin]]: attach the
@@ -64,32 +75,16 @@ object Joins {
   def asofJoinForward(left: DataFrame, right: DataFrame, keyCols: Seq[String],
       tsCol: String, valueCols: Seq[String],
       tieCols: Seq[String] = Nil): DataFrame = {
-    val leftCols = left.columns.toSeq
-    require(valueCols.forall(!leftCols.contains(_)),
-      s"valueCols ${valueCols.filter(leftCols.contains)} collide with left columns — alias them on the right side first")
-    val keys = keyCols.map(col)
-    val lTagged = left
-      .withColumn("__side", lit(1))
-      .select(keys ++ Seq(col(tsCol), col("__side")) ++
-        tieCols.map(c => lit(null).cast("long").as(s"__tie_$c")) ++
-        leftCols.filterNot(keyCols.contains).filterNot(_ == tsCol).map(col) ++
-        valueCols.map(c => lit(null).cast(right.schema(c).dataType).as(s"__v_$c")): _*)
-    val rTagged = right
-      .withColumn("__side", lit(0))
-      .select(keys ++ Seq(col(tsCol), col("__side")) ++
-        tieCols.map(c => col(c).cast("long").as(s"__tie_$c")) ++
-        leftCols.filterNot(keyCols.contains).filterNot(_ == tsCol)
-          .map(c => lit(null).cast(left.schema(c).dataType).as(c)) ++
-        valueCols.map(c => col(c).as(s"__v_$c")): _*)
-    val w = Window.partitionBy(keys: _*)
+    val w = Window.partitionBy(keyCols.map(col): _*)
       .orderBy((Seq(col(tsCol), col("__side").desc) ++
         tieCols.map(c => col(s"__tie_$c").desc)): _*)
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val attached = valueCols.foldLeft(lTagged.unionByName(rTagged)) { (df, c) =>
+    val attached = valueCols.foldLeft(
+        asofUnion(left, right, keyCols, tsCol, valueCols, tieCols)) { (df, c) =>
       df.withColumn(c, first(col(s"__v_$c"), ignoreNulls = true).over(w))
     }
     attached.where(col("__side") === 1)
-      .select(leftCols.map(col) ++ valueCols.map(col): _*)
+      .select(left.columns.toSeq.map(col) ++ valueCols.map(col): _*)
   }
 
   /** Nearest as-of join (pandas `merge_asof(direction='nearest')`): the

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -455,22 +455,7 @@ object Similarity {
     // live cells (≥1 fine seed): O(√k) ids, the only other driver fetch
     val liveCells: Array[Int] =
       seedCells.select("__cell").distinct().collect().map(_.getInt(0)).sorted
-    val bcLive = spark.sparkContext.broadcast(
-      (liveCells, liveCells.map(coarseVecs(_))))
-    val liveCellUdf = udf { v: Seq[Double] =>
-      val arr = v.toArray
-      val (live, cvs) = bcLive.value
-      // nearest live coarse cell (strict < keeps the smallest live cidx)
-      var bi = 0
-      var bd = Double.PositiveInfinity
-      var j = 0
-      while (j < cvs.length) {
-        val d = sqDist(arr, cvs(j))
-        if (d < bd) { bd = d; bi = j }
-        j += 1
-      }
-      live(bi)
-    }
+    val liveCellUdf = nearestLiveCellUdf(spark, liveCells, liveCells.map(coarseVecs(_)))
     // (cell -> seeds sorted by ascending idx): ~k/√k seeds per row, so a
     // group buffer is O(√k·d); the table itself is never collected
     val cellSeeds = seedCells.groupBy("__cell")
@@ -481,15 +466,37 @@ object Similarity {
       liveCells.map(c => (c, coarseVecs(c))))
   }
 
+  /** UDF: the id of the live coarse cell nearest a vector (strict <
+    * keeps the smallest live cell id). The cells ride one broadcast.
+    */
+  private def nearestLiveCellUdf(spark: SparkSession, ids: Array[Int],
+      vecs: Array[Array[Double]]) = {
+    val bc = spark.sparkContext.broadcast((ids, vecs))
+    udf { v: Seq[Double] =>
+      val (live, cvs) = bc.value
+      live(nearestIdx(v.toArray, cvs))
+    }
+  }
+
   /** Assign a prepped (vec_id, __v) frame against a frozen seed state:
     * nearest live coarse cell row-locally (√k folds), then the fine
     * argmin via the cell-keyed equi-join (≈√k folds) — O(√k) per row.
     * Returns (vec_id, __v, cluster, __dist).
     */
-  private def applyAssign(st: SeedState, target: DataFrame): DataFrame = {
-    val fineUdf = udf { (v: Seq[Double], ss: Seq[org.apache.spark.sql.Row]) =>
+  private def applyAssign(st: SeedState, target: DataFrame): DataFrame =
+    target
+      .withColumn("__cell", st.liveCellUdf(col("__v")))
+      .join(st.cellSeeds, Seq("__cell")) // every live cell has >=1 seed: inner-safe
+      .withColumn("__a", nearestSeedUdf(col("__v"), col("__ss")))
+      .select(col("vec_id"), col("__v"),
+        col("__a._1").as("cluster"), col("__a._2").as("__dist"))
+
+  /** (cluster, squared distance) of the nearest fine seed in a cell's
+    * seeds sorted by ascending idx; strict < keeps the smallest idx.
+    */
+  private val nearestSeedUdf =
+    udf { (v: Seq[Double], ss: Seq[org.apache.spark.sql.Row]) =>
       val arr = v.toArray
-      // nearest fine seed within the cell, ascending idx, strict <
       var cluster = -1L
       var dist = Double.PositiveInfinity
       ss.foreach { r =>
@@ -498,13 +505,6 @@ object Similarity {
       }
       (cluster, dist)
     }
-    target
-      .withColumn("__cell", st.liveCellUdf(col("__v")))
-      .join(st.cellSeeds, Seq("__cell")) // every live cell has >=1 seed: inner-safe
-      .withColumn("__a", fineUdf(col("__v"), col("__ss")))
-      .select(col("vec_id"), col("__v"),
-        col("__a._1").as("cluster"), col("__a._2").as("__dist"))
-  }
 
   /** Semantic deduplication (SemDeDup, Abbas et al. 2023): cluster the
     * embedding space, then drop items whose cosine to an earlier item of
@@ -695,22 +695,8 @@ object Similarity {
         "centroid (first 5 shown); the two tables were written from " +
         "different period closes — a mismatch silently drops or " +
         "mis-assigns batch vectors")
-    val spark = cells.sparkSession
-    val bcLive = spark.sparkContext.broadcast(
-      (live.map(_._1), live.map(_._2)))
-    val liveCellUdf = udf { v: Seq[Double] =>
-      val arr = v.toArray
-      val (liveIds, cvs) = bcLive.value
-      var bi = 0
-      var bd = Double.PositiveInfinity
-      var j = 0
-      while (j < cvs.length) {
-        val d = sqDist(arr, cvs(j))
-        if (d < bd) { bd = d; bi = j }
-        j += 1
-      }
-      liveIds(bi)
-    }
+    val liveCellUdf =
+      nearestLiveCellUdf(cells.sparkSession, live.map(_._1), live.map(_._2))
     val seedCount = seeds.agg(sum(size(col("seeds")))).head().getLong(0)
     SeedState(
       seeds.select(col("cell").as("__cell"), col("seeds").as("__ss")),
@@ -832,24 +818,13 @@ object Similarity {
   /** [[applyAssign]] with the small side's strategy pinned — in the
     * streaming path the stream side must never be the build side.
     */
-  private def applyAssignStreamSafe(st: SeedState, target: DataFrame): DataFrame = {
-    val fineUdf = udf { (v: Seq[Double], ss: Seq[org.apache.spark.sql.Row]) =>
-      val arr = v.toArray
-      var cluster = -1L
-      var dist = Double.PositiveInfinity
-      ss.foreach { r =>
-        val d = sqDist(arr, r.getSeq[Double](1).toArray)
-        if (d < dist) { dist = d; cluster = r.getLong(0) }
-      }
-      (cluster, dist)
-    }
+  private def applyAssignStreamSafe(st: SeedState, target: DataFrame): DataFrame =
     target
       .withColumn("__cell", st.liveCellUdf(col("__v")))
       .join(sizedSide(st.cellSeeds, st.seedCount), Seq("__cell"))
-      .withColumn("__a", fineUdf(col("__v"), col("__ss")))
+      .withColumn("__a", nearestSeedUdf(col("__v"), col("__ss")))
       .select(col("vec_id"), col("__v"),
         col("__a._1").as("cluster"), col("__a._2").as("__dist"))
-  }
 
   /** Cluster count for `semanticDedup`'s auto mode: one cluster per 10k
     * vectors, floored at 16 — cluster-keyed parallelism grows linearly

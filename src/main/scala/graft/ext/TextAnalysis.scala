@@ -356,6 +356,16 @@ object TextAnalysis {
       .where(col("__okey") =!= col("__first"))
       .select(col(idCol),
         explode(sequence(col("__pos"), col("__pos") + (k - 1))).as("__tp"))
+    dropTokens(base, idCol, covered)
+  }
+
+  /** Each doc of `base` (`idCol`, text `__t`) without the tokens at the
+    * (`idCol`, `__tp`) positions of `covered`: its token count, the
+    * removed count, and the kept tokens re-joined in position order.
+    */
+  private def dropTokens(base: DataFrame, idCol: String,
+      positions: DataFrame): DataFrame = {
+    val covered = positions
       .distinct()
       .withColumn("__cov", lit(true))
     val posed = base
@@ -441,18 +451,7 @@ object TextAnalysis {
       .select("__gram")
     val covered = grams.join(broadcast(top), Seq("__gram"))
       .select(col(idCol), explode(sequence(col("__pos"), col("__pos") + (n - 1))).as("__tp"))
-      .distinct()
-      .withColumn("__cov", lit(true))
-    val posed = base
-      .select(col(idCol), posexplode(tokens(col("__t"))).as(Seq("__tp", "__tok")))
-      .withColumn("__tp", col("__tp").cast("long"))
-    posed.join(covered, Seq(idCol, "__tp"), "left")
-      .groupBy(idCol)
-      .agg(count(lit(1)).as("n_tokens"),
-        count(col("__cov")).as("n_removed"),
-        array_join(transform(array_sort(collect_list(
-            when(col("__cov").isNull, struct(col("__tp"), col("__tok"))))),
-          p => p.getField("__tok")), " ").as("clean_text"))
+    dropTokens(base, idCol, covered)
   }
 
   /** The lift formula shared VERBATIM with the DuckDB oracle — both

@@ -31,14 +31,7 @@ object Vocab {
   def bpeTrain(docs: DataFrame, textCol: String, merges: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val words = DataOps.parallelismFloor(docs.select(col(textCol).as("__t")))
-      .select(explode(TextAnalysis.tokens(col("__t"))).as("word"))
-      .where(col("word").rlike("^[a-z]+$"))
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .withColumn("s",
-        concat(lit("|"),
-          array_join(transform(split(col("word"), ""), c => c), "|"),
-          lit("|")))
+    val words = bpeWords(docs, textCol)
       .localCheckpoint(true) // the merge loop must not re-run the corpus pass
       .select("cnt", "s")
 
@@ -136,14 +129,7 @@ object Vocab {
     */
   def bpeEncode(docs: DataFrame, textCol: String,
       merges: Seq[(String, String)]): DataFrame = {
-    val words = DataOps.parallelismFloor(docs.select(col(textCol).as("__t")))
-      .select(explode(TextAnalysis.tokens(col("__t"))).as("word"))
-      .where(col("word").rlike("^[a-z]+$"))
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .withColumn("s",
-        concat(lit("|"),
-          array_join(transform(split(col("word"), ""), c => c), "|"),
-          lit("|")))
+    val words = bpeWords(docs, textCol)
     val enc = merges.foldLeft("s") { case (e, (l, r)) =>
       s"replace($e, '|$l|$r|', '|$l$r|')"
     }
@@ -152,6 +138,20 @@ object Vocab {
         explode(expr(s"filter(split($enc, '\\\\|'), x -> x != '')")).as("piece"))
       .groupBy("piece").agg(sum(col("cnt")).as("cnt"))
   }
+
+  /** The lowercase word types with their count `cnt` and their letters
+    * as BPE symbols `s` = "|a|b|c|": the corpus pass of BPE training
+    * and encoding.
+    */
+  private def bpeWords(docs: DataFrame, textCol: String): DataFrame =
+    DataOps.parallelismFloor(docs.select(col(textCol).as("__t")))
+      .select(explode(TextAnalysis.tokens(col("__t"))).as("word"))
+      .where(col("word").rlike("^[a-z]+$"))
+      .groupBy("word").agg(count(lit(1)).as("cnt"))
+      .withColumn("s",
+        concat(lit("|"),
+          array_join(transform(split(col("word"), ""), c => c), "|"),
+          lit("|")))
 
   /** Unigram-LM tokenizer training (Kudo 2018 — the SentencePiece model,
     * the EM companion to [[bpeTrain]]): seed a piece inventory with every
@@ -212,19 +212,27 @@ object Vocab {
     rows.toDF("wlen", "sig", "i", "start", "plen", "nparts")
   }
 
-  private[ext] def unigramTrainImpl(docs: DataFrame, textCol: String,
-      emIters: Int, maxPieceLen: Int, maxWordLen: Int,
-      topTypes: Int, keepMulti: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val words = DataOps.parallelismFloor(docs.select(col(textCol).as("__t")))
+  /** The `topTypes` most frequent lowercase word types of at most
+    * `maxWordLen` letters (ties by word), with count `cnt` and length
+    * `wlen` — the only corpus pass of unigram training and encoding.
+    */
+  private def wordTypes(docs: DataFrame, textCol: String, maxWordLen: Int,
+      topTypes: Int): DataFrame =
+    DataOps.parallelismFloor(docs.select(col(textCol).as("__t")))
       .select(explode(TextAnalysis.tokens(col("__t"))).as("word"))
       .where(col("word").rlike("^[a-z]+$") &&
         length(col("word")) <= maxWordLen)
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("word").asc).limit(topTypes)
       .withColumn("wlen", length(col("word")))
-      .localCheckpoint(true) // the only corpus pass
+      .localCheckpoint(true)
+
+  private[ext] def unigramTrainImpl(docs: DataFrame, textCol: String,
+      emIters: Int, maxPieceLen: Int, maxWordLen: Int,
+      topTypes: Int, keepMulti: Int): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val words = wordTypes(docs, textCol, maxWordLen, topTypes)
 
     val sp = compositionTable(spark, maxPieceLen, maxWordLen)
 
@@ -352,14 +360,7 @@ object Vocab {
       topTypes: Int = 2000): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val words = DataOps.parallelismFloor(docs.select(col(textCol).as("__t")))
-      .select(explode(TextAnalysis.tokens(col("__t"))).as("word"))
-      .where(col("word").rlike("^[a-z]+$") &&
-        length(col("word")) <= maxWordLen)
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc, col("word").asc).limit(topTypes)
-      .withColumn("wlen", length(col("word")))
-      .localCheckpoint(true)
+    val words = wordTypes(docs, textCol, maxWordLen, topTypes)
     val sp = compositionTable(spark, maxPieceLen, maxWordLen)
     val occ = words.join(broadcast(sp), Seq("wlen"))
       .select(col("word"), col("cnt"), col("sig"), col("nparts"),

@@ -1278,135 +1278,73 @@ object CoreQueries {
       |  CAST(count(*) AS BIGINT) AS n
       |FROM isl GROUP BY user_id, sid""".stripMargin
 
-  val all: Map[String, QueryFn] = Map(
-    "q60_filtered_agg"  -> q60FilteredAgg,
-    "q61_try_cast"      -> q61TryCast,
-    "q62_sliding_window"-> q62SlidingWindow,
-    "q63_session_window"-> q63SessionWindow,
-    "q57_recursive_cte" -> q57RecursiveCte,
-    "q58_corr_regr"     -> q58CorrRegr,
-    "q59_bitwise"       -> q59Bitwise,
-    "q56_higher_order"  -> q56HigherOrder,
-    "q52_lateral_topk"  -> q52LateralTopK,
-    "q53_map_functions" -> q53MapFunctions,
-    "q54_exists_subquery" -> q54ExistsSubquery,
-    "q55_cross_join"    -> q55CrossJoin,
-    "q48_full_outer"    -> q48FullOuter,
-    "q49_string_funcs"  -> q49StringFuncs,
-    "q50_width_bucket"  -> q50WidthBucket,
-    "q51_unpivot"       -> q51Unpivot,
-    "q44_rank_family"   -> q44RankFamily,
-    "q45_date_functions"-> q45DateFunctions,
-    "q46_array_functions"-> q46ArrayFunctions,
-    "q47_null_scalars"  -> q47NullScalars,
-    "q27_cube"          -> q27Cube,
-    "q28_intersect"     -> q28Intersect,
-    "q29_except"        -> q29Except,
-    "q30_correlated_subquery" -> q30CorrelatedSubquery,
-    "q31_pivot"         -> q31Pivot,
-    "q32_explode"       -> q32Explode,
-    "q33_asof"          -> q33Asof,
-    "q37_lead_lag"      -> q37LeadLag,
-    "q38_stats_agg"     -> q38StatsAgg,
-    "q39_edit_distance" -> q39EditDistance,
-    "q40_range_frame"   -> q40RangeFrame,
-    "q41_sql_text"      -> q41SqlText,
-    "q42_regexp"        -> q42Regexp,
-    "q43_grouping_sets" -> q43GroupingSets,
-    "q34_range_join"    -> q34RangeJoin,
-    "q35_ntile"         -> q35Ntile,
-    "q36_collect_list"  -> q36CollectList,
-    "q25_scalar_subquery" -> q25ScalarSubquery,
-    "q26_rollup"        -> q26Rollup,
-    "q23_percentile"    -> q23Percentile,
-    "q24_count_distinct"-> q24CountDistinct,
-    "q18_running_sum"   -> q18RunningSum,
-    "q19_topk_per_group"-> q19TopKPerGroup,
-    "q20_having"        -> q20Having,
-    "q21_conditional_agg"-> q21ConditionalAgg,
-    "q22_hex"           -> q22Hex,
-    "q1_agg"            -> q1Agg,
-    "q2_join_chain"     -> q2JoinChain,
-    "q3_left_join"      -> q3LeftJoin,
-    "q4_union_branches" -> q4UnionBranches,
-    "q5_first_per_key"  -> q5FirstPerKey,
-    "q6_last_write_wins"-> q6LastWriteWins,
-    "q7_json_extract"   -> q7JsonExtract,
-    "q8_tumbling_window"-> q8TumblingWindow,
-    "q9_anti_join"      -> q9AntiJoin,
-    "q10_semi_join"     -> q10SemiJoin,
-    "q11_tip_probe"     -> q11TipProbe,
-    "q12_distinct_dim"  -> q12DistinctDim,
-    "q13_surrogate_ids" -> q13SurrogateIds,
-    "q14_sink_tip"      -> q14SinkTip,
-    "q15_range_filter"  -> q15RangeFilter,
-    "q16_topk"          -> q16TopK,
-    "q17_routing"       -> q17Routing,
+  /** Every query of this family, with its DuckDB oracle SQL. */
+  private val registry: Map[String, (QueryFn, String)] = Map(
+    "q60_filtered_agg" -> (q60FilteredAgg, q60Sql),
+    "q61_try_cast" -> (q61TryCast, q61Sql),
+    "q62_sliding_window" -> (q62SlidingWindow, q62Sql),
+    "q63_session_window" -> (q63SessionWindow, q63Sql),
+    "q57_recursive_cte" -> (q57RecursiveCte, q57Sql),
+    "q58_corr_regr" -> (q58CorrRegr, q58Sql),
+    "q59_bitwise" -> (q59Bitwise, q59Sql),
+    "q56_higher_order" -> (q56HigherOrder, q56Sql),
+    "q52_lateral_topk" -> (q52LateralTopK, q52Sql),
+    "q53_map_functions" -> (q53MapFunctions, q53Sql),
+    "q54_exists_subquery" -> (q54ExistsSubquery, q54Sql),
+    "q55_cross_join" -> (q55CrossJoin, q55Sql),
+    "q48_full_outer" -> (q48FullOuter, q48Sql),
+    "q49_string_funcs" -> (q49StringFuncs, q49Sql),
+    "q50_width_bucket" -> (q50WidthBucket, q50Sql),
+    "q51_unpivot" -> (q51Unpivot, q51Sql),
+    "q44_rank_family" -> (q44RankFamily, q44Sql),
+    "q45_date_functions" -> (q45DateFunctions, q45Sql),
+    "q46_array_functions" -> (q46ArrayFunctions, q46Sql),
+    "q47_null_scalars" -> (q47NullScalars, q47Sql),
+    "q27_cube" -> (q27Cube, q27Sql),
+    "q28_intersect" -> (q28Intersect, q28Sql),
+    "q29_except" -> (q29Except, q29Sql),
+    "q30_correlated_subquery" -> (q30CorrelatedSubquery, q30Sql),
+    "q31_pivot" -> (q31Pivot, q31Sql),
+    "q32_explode" -> (q32Explode, q32Sql),
+    "q33_asof" -> (q33Asof, q33Sql),
+    "q37_lead_lag" -> (q37LeadLag, q37Sql),
+    "q38_stats_agg" -> (q38StatsAgg, q38Sql),
+    "q39_edit_distance" -> (q39EditDistance, q39Sql),
+    "q40_range_frame" -> (q40RangeFrame, q40Sql),
+    "q41_sql_text" -> (q41SqlText, q41Sql),
+    "q42_regexp" -> (q42Regexp, q42Sql),
+    "q43_grouping_sets" -> (q43GroupingSets, q43Sql),
+    "q34_range_join" -> (q34RangeJoin, q34Sql),
+    "q35_ntile" -> (q35Ntile, q35Sql),
+    "q36_collect_list" -> (q36CollectList, q36Sql),
+    "q25_scalar_subquery" -> (q25ScalarSubquery, q25Sql),
+    "q26_rollup" -> (q26Rollup, q26Sql),
+    "q23_percentile" -> (q23Percentile, q23Sql),
+    "q24_count_distinct" -> (q24CountDistinct, q24Sql),
+    "q18_running_sum" -> (q18RunningSum, q18Sql),
+    "q19_topk_per_group" -> (q19TopKPerGroup, q19Sql),
+    "q20_having" -> (q20Having, q20Sql),
+    "q21_conditional_agg" -> (q21ConditionalAgg, q21Sql),
+    "q22_hex" -> (q22Hex, q22Sql),
+    "q1_agg" -> (q1Agg, q1Sql),
+    "q2_join_chain" -> (q2JoinChain, q2Sql),
+    "q3_left_join" -> (q3LeftJoin, q3Sql),
+    "q4_union_branches" -> (q4UnionBranches, q4Sql),
+    "q5_first_per_key" -> (q5FirstPerKey, q5Sql),
+    "q6_last_write_wins" -> (q6LastWriteWins, q6Sql),
+    "q7_json_extract" -> (q7JsonExtract, q7Sql),
+    "q8_tumbling_window" -> (q8TumblingWindow, q8Sql),
+    "q9_anti_join" -> (q9AntiJoin, q9Sql),
+    "q10_semi_join" -> (q10SemiJoin, q10Sql),
+    "q11_tip_probe" -> (q11TipProbe, q11Sql),
+    "q12_distinct_dim" -> (q12DistinctDim, q12Sql),
+    "q13_surrogate_ids" -> (q13SurrogateIds, q13Sql),
+    "q14_sink_tip" -> (q14SinkTip, q14Sql),
+    "q15_range_filter" -> (q15RangeFilter, q15Sql),
+    "q16_topk" -> (q16TopK, q16Sql),
+    "q17_routing" -> (q17Routing, q17Sql),
   )
 
-  val oracles: Map[String, String] = Map(
-    "q48_full_outer"    -> q48Sql,
-    "q49_string_funcs"  -> q49Sql,
-    "q50_width_bucket"  -> q50Sql,
-    "q51_unpivot"       -> q51Sql,
-    "q52_lateral_topk"  -> q52Sql,
-    "q53_map_functions" -> q53Sql,
-    "q54_exists_subquery" -> q54Sql,
-    "q55_cross_join"    -> q55Sql,
-    "q56_higher_order"  -> q56Sql,
-    "q57_recursive_cte" -> q57Sql,
-    "q58_corr_regr"     -> q58Sql,
-    "q59_bitwise"       -> q59Sql,
-    "q60_filtered_agg"  -> q60Sql,
-    "q61_try_cast"      -> q61Sql,
-    "q62_sliding_window"-> q62Sql,
-    "q63_session_window"-> q63Sql,
-    "q44_rank_family"   -> q44Sql,
-    "q45_date_functions"-> q45Sql,
-    "q46_array_functions"-> q46Sql,
-    "q47_null_scalars"  -> q47Sql,
-    "q27_cube"          -> q27Sql,
-    "q28_intersect"     -> q28Sql,
-    "q29_except"        -> q29Sql,
-    "q30_correlated_subquery" -> q30Sql,
-    "q31_pivot"         -> q31Sql,
-    "q32_explode"       -> q32Sql,
-    "q33_asof"          -> q33Sql,
-    "q37_lead_lag"      -> q37Sql,
-    "q38_stats_agg"     -> q38Sql,
-    "q39_edit_distance" -> q39Sql,
-    "q40_range_frame"   -> q40Sql,
-    "q41_sql_text"      -> q41Sql,
-    "q42_regexp"        -> q42Sql,
-    "q43_grouping_sets" -> q43Sql,
-    "q34_range_join"    -> q34Sql,
-    "q35_ntile"         -> q35Sql,
-    "q36_collect_list"  -> q36Sql,
-    "q25_scalar_subquery" -> q25Sql,
-    "q26_rollup"        -> q26Sql,
-    "q23_percentile"    -> q23Sql,
-    "q24_count_distinct"-> q24Sql,
-    "q18_running_sum"   -> q18Sql,
-    "q19_topk_per_group"-> q19Sql,
-    "q20_having"        -> q20Sql,
-    "q21_conditional_agg"-> q21Sql,
-    "q22_hex"           -> q22Sql,
-    "q1_agg"            -> q1Sql,
-    "q2_join_chain"     -> q2Sql,
-    "q3_left_join"      -> q3Sql,
-    "q4_union_branches" -> q4Sql,
-    "q5_first_per_key"  -> q5Sql,
-    "q6_last_write_wins"-> q6Sql,
-    "q7_json_extract"   -> q7Sql,
-    "q8_tumbling_window"-> q8Sql,
-    "q9_anti_join"      -> q9Sql,
-    "q10_semi_join"     -> q10Sql,
-    "q11_tip_probe"     -> q11Sql,
-    "q12_distinct_dim"  -> q12Sql,
-    "q13_surrogate_ids" -> q13Sql,
-    "q14_sink_tip"      -> q14Sql,
-    "q15_range_filter"  -> q15Sql,
-    "q16_topk"          -> q16Sql,
-    "q17_routing"       -> q17Sql,
-  )
+  val all: Map[String, QueryFn] = registry.map { case (n, (q, _)) => n -> q }
+  val oracles: Map[String, String] = registry.map { case (n, (_, sql)) => n -> sql }
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Analytics, DataOps, Eval, Pii, TextAnalysis}
@@ -452,14 +452,7 @@ object EvalQueries {
     * slice means are DECIMAL sums.
     */
   val rankMrr: QueryFn = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.orderBy("vec_id").limit(20)
-    val labels = emb.select(col("vec_id"), col("label"))
-    val nn = graft.ext.Similarity.cosineTopK(queries, emb, k = 10)
-      .join(labels.select(col("vec_id").as("neighbor_id"),
-        col("label").as("nl")), Seq("neighbor_id"))
-      .join(labels.select(col("vec_id").as("query_id"),
-        col("label").as("ql")), Seq("query_id"))
+    val (nn, labels) = labeledTop10(s, dir)
     graft.ext.Eval.reciprocalRanks(nn, "query_id", "rank",
         col("nl") === col("ql"), k = 10)
       .join(labels.select(col("vec_id").as("query_id"),
@@ -469,6 +462,22 @@ object EvalQueries {
         sum(col("first_rel_rank").isNotNull.cast("long")).as("n_hit"),
         round(sum(round(col("rr"), 6).cast("decimal(30,6)")).cast("double")
           / count(lit(1)), 6).as("mrr"))
+  }
+
+  /** The 10 exact-cosine neighbours of the first 20 embeddings, each
+    * with the neighbour's label `nl` and the query's label `ql`, and the
+    * (vec_id, label) table.
+    */
+  private def labeledTop10(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val emb = Tables.embeddings(s, dir)
+    val queries = emb.orderBy("vec_id").limit(20)
+    val labels = emb.select(col("vec_id"), col("label"))
+    val nn = graft.ext.Similarity.cosineTopK(queries, emb, k = 10)
+      .join(labels.select(col("vec_id").as("neighbor_id"),
+        col("label").as("nl")), Seq("neighbor_id"))
+      .join(labels.select(col("vec_id").as("query_id"),
+        col("label").as("ql")), Seq("query_id"))
+    (nn, labels)
   }
 
   val rankMrrSql: String =
@@ -1089,16 +1098,23 @@ object EvalQueries {
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"),
         ((col("lang") === "en") === (col("n_chars") >= 300)).as("__correct"))
+    bootstrapDraws(s, docs)
+      .groupBy("replica")
+      .agg(count(lit(1)).as("n_drawn"),
+        round(sum(col("__correct").cast("long")).cast("double") /
+          count(lit(1)), 6).as("acc"))
+  }
+
+  /** 200 deterministic resamples of `docs`: each row of replica r is the
+    * document at mix64(id) mod n, for id in [r·n, (r+1)·n).
+    */
+  private def bootstrapDraws(s: SparkSession, docs: DataFrame): DataFrame = {
     val n = docs.count()
     val B = 200L
     val draws = s.range(0, n * B).select(
       expr(s"id div $n").as("replica"),
       pmod(graft.ext.HashExprs.mix64(col("id")), lit(n)).as("doc_id"))
     draws.join(docs, Seq("doc_id"))
-      .groupBy("replica")
-      .agg(count(lit(1)).as("n_drawn"),
-        round(sum(col("__correct").cast("long")).cast("double") /
-          count(lit(1)), 6).as("acc"))
   }
 
   val evalBootstrapSql: String =
@@ -1138,12 +1154,7 @@ object EvalQueries {
         ((col("lang") === "en") ===
           (size(graft.ext.TextAnalysis.tokens(col("text"))) >= 60))
           .cast("long").as("__cb"))
-    val n = docs.count()
-    val B = 200L
-    val draws = s.range(0, n * B).select(
-      expr(s"id div $n").as("replica"),
-      pmod(graft.ext.HashExprs.mix64(col("id")), lit(n)).as("doc_id"))
-    draws.join(docs, Seq("doc_id"))
+    bootstrapDraws(s, docs)
       .groupBy("replica")
       .agg(count(lit(1)).as("n_drawn"),
         round(sum(col("__ca")).cast("double") / count(lit(1)), 6)
@@ -1527,14 +1538,7 @@ object EvalQueries {
     * Each precision@i is one integer ratio; slice means are DECIMAL.
     */
   val rankMap: QueryFn = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.orderBy("vec_id").limit(20)
-    val labels = emb.select(col("vec_id"), col("label"))
-    val nn = graft.ext.Similarity.cosineTopK(queries, emb, k = 10)
-      .join(labels.select(col("vec_id").as("neighbor_id"),
-        col("label").as("nl")), Seq("neighbor_id"))
-      .join(labels.select(col("vec_id").as("query_id"),
-        col("label").as("ql")), Seq("query_id"))
+    val (nn, labels) = labeledTop10(s, dir)
     graft.ext.Eval.averagePrecision(nn, "query_id", "rank",
         col("nl") === col("ql"), k = 10)
       .join(labels.select(col("vec_id").as("query_id"),
@@ -3411,171 +3415,91 @@ object EvalQueries {
        |FROM gg
        |WHERE k >= 2.0 AND CAST(a4 AS DOUBLE) > CAST(c4 AS DOUBLE)""".stripMargin
 
-  val all: Map[String, QueryFn] = Map(
-    "stats_friedman"   -> statsFriedman,
-    "stats_kruskal"    -> statsKruskal,
-    "stats_anova"      -> statsAnova,
-    "stats_levene"     -> statsLevene,
-    "stats_bartlett"   -> statsBartlett,
-    "stats_tost"       -> statsTost,
-    "stats_proportion_z" -> statsProportionZ,
-    "stats_mde"        -> statsMde,
-    "stats_sprt"       -> statsSprt,
-    "stats_cuped"      -> statsCuped,
-    "stats_did"        -> statsDid,
-    "stats_srm"        -> statsSrm,
-    "eval_mcc"         -> evalMcc,
-    "eval_gwet_ac1"    -> evalGwetAc1,
-    "eval_conformal"   -> evalConformal,
-    "eval_kendall"     -> evalKendall,
-    "eval_winrate"     -> evalWinrate,
-    "eval_delong"      -> evalDelong,
-    "stats_permutation" -> statsPermutation,
-    "eval_auc_ci"      -> evalAucCi,
-    "stats_cohend"     -> statsCohend,
-    "eval_wilcoxon"    -> evalWilcoxon,
-    "eval_ece"         -> evalEce,
-    "stats_jsd"        -> statsJsd,
-    "eval_chrf"        -> evalChrf,
-    "stats_mannwhitney" -> statsMannwhitney,
-    "eval_rouge"       -> evalRouge,
-    "eval_token_f1"    -> evalTokenF1,
-    "eval_krippendorff" -> evalKrippendorff,
-    "eval_brier"       -> evalBrier,
-    "stats_fdr"        -> statsFdr,
-    "ts_changepoint"   -> tsChangepoint,
-    "eval_bleu"        -> evalBleu,
-    "eval_spearman"    -> evalSpearman,
-    "eval_auc_pr"      -> evalAucPr,
-    "eval_fleiss"      -> evalFleiss,
-    "eval_mcnemar"     -> evalMcnemar,
-    "pii_detect"       -> piiDetect,
-    "pii_redact"       -> piiRedact,
-    "eval_confusion"   -> evalConfusion,
-    "eval_auc"         -> evalAuc,
-    "eval_calibration" -> evalCalibration,
-    "split_leakage"    -> splitLeakage,
-    "filter_funnel"    -> filterFunnelQ,
-    "curriculum_ntile" -> curriculumNtile,
-    "ts_markov"        -> tsMarkov,
-    "eval_multiclass"  -> evalMulticlass,
-    "rank_mrr"         -> rankMrr,
-    "eval_regression"  -> evalRegression,
-    "stats_welch"      -> statsWelch,
-    "vocab_coverage"   -> vocabCoverage,
-    "shard_assign"     -> shardAssign,
-    "shard_rendezvous" -> shardRendezvous,
-    "checksum_manifest" -> checksumManifest,
-    "segment_sentences" -> segmentSentences,
-    "dataset_card"     -> datasetCard,
-    "join_incremental" -> joinIncremental,
-    "join_set_similarity" -> joinSetSimilarity,
-    "assoc_rules"      -> assocRules,
-    "sequence_pattern" -> sequencePattern,
-    "validate_contract" -> validateContractQ,
-    "eval_bootstrap"   -> evalBootstrap,
-    "eval_bootstrap_paired" -> evalBootstrapPaired,
-    "dedup_minhash_incremental" -> dedupMinhashIncremental,
-    "dedup_cluster_incremental" -> dedupClusterIncremental,
-    "dedup_index_stored" -> dedupIndexStored,
-    "dedup_index_append" -> dedupIndexAppend,
-    "dedup_cluster_stored" -> dedupClusterStored,
-    "stats_chi2"       -> statsChi2,
-    "mixture_kl"       -> mixtureKl,
-    "anonymize_ldiv"   -> anonymizeLdiv,
-    "anonymize_t"      -> anonymizeT,
-    "rank_map"         -> rankMap,
-    "eval_kappa"       -> evalKappa,
-    "ts_trend"         -> tsTrend,
-    "ts_mase"          -> tsMase,
-    "ts_theil_sen"     -> tsTheilSen,
-    "eval_psi"         -> evalPsi,
-    "eval_pass_at_k"   -> evalPassAtK,
-    "eval_bradley_terry" -> evalBradleyTerry,
-    "stats_benford"    -> statsBenford,
+  /** Every query of this family, with its DuckDB oracle SQL. */
+  private val registry: Map[String, (QueryFn, String)] = Map(
+    "stats_friedman" -> (statsFriedman, statsFriedmanSql),
+    "stats_kruskal" -> (statsKruskal, statsKruskalSql),
+    "stats_anova" -> (statsAnova, statsAnovaSql),
+    "stats_levene" -> (statsLevene, statsLeveneSql),
+    "stats_bartlett" -> (statsBartlett, statsBartlettSql),
+    "stats_tost" -> (statsTost, statsTostSql),
+    "stats_proportion_z" -> (statsProportionZ, statsProportionZSql),
+    "stats_mde" -> (statsMde, statsMdeSql),
+    "stats_sprt" -> (statsSprt, statsSprtSql),
+    "stats_cuped" -> (statsCuped, statsCupedSql),
+    "stats_did" -> (statsDid, statsDidSql),
+    "stats_srm" -> (statsSrm, statsSrmSql),
+    "eval_mcc" -> (evalMcc, evalMccSql),
+    "eval_gwet_ac1" -> (evalGwetAc1, evalGwetAc1Sql),
+    "eval_conformal" -> (evalConformal, evalConformalSql),
+    "eval_kendall" -> (evalKendall, evalKendallSql),
+    "eval_winrate" -> (evalWinrate, evalWinrateSql),
+    "eval_delong" -> (evalDelong, evalDelongSql),
+    "stats_permutation" -> (statsPermutation, statsPermutationSql),
+    "eval_auc_ci" -> (evalAucCi, evalAucCiSql),
+    "stats_cohend" -> (statsCohend, statsCohendSql),
+    "eval_wilcoxon" -> (evalWilcoxon, evalWilcoxonSql),
+    "eval_ece" -> (evalEce, evalEceSql),
+    "stats_jsd" -> (statsJsd, statsJsdSql),
+    "eval_chrf" -> (evalChrf, evalChrfSql),
+    "stats_mannwhitney" -> (statsMannwhitney, statsMannwhitneySql),
+    "eval_rouge" -> (evalRouge, evalRougeSql),
+    "eval_token_f1" -> (evalTokenF1, evalTokenF1Sql),
+    "eval_krippendorff" -> (evalKrippendorff, evalKrippendorffSql),
+    "eval_brier" -> (evalBrier, evalBrierSql),
+    "stats_fdr" -> (statsFdr, statsFdrSql),
+    "ts_changepoint" -> (tsChangepoint, tsChangepointSql),
+    "eval_bleu" -> (evalBleu, evalBleuSql),
+    "eval_spearman" -> (evalSpearman, evalSpearmanSql),
+    "eval_auc_pr" -> (evalAucPr, evalAucPrSql),
+    "eval_fleiss" -> (evalFleiss, evalFleissSql),
+    "eval_mcnemar" -> (evalMcnemar, evalMcnemarSql),
+    "pii_detect" -> (piiDetect, piiDetectSql),
+    "pii_redact" -> (piiRedact, piiRedactSql),
+    "eval_confusion" -> (evalConfusion, evalConfusionSql),
+    "eval_auc" -> (evalAuc, evalAucSql),
+    "eval_calibration" -> (evalCalibration, evalCalibrationSql),
+    "split_leakage" -> (splitLeakage, splitLeakageSql),
+    "filter_funnel" -> (filterFunnelQ, filterFunnelSql),
+    "curriculum_ntile" -> (curriculumNtile, curriculumNtileSql),
+    "ts_markov" -> (tsMarkov, tsMarkovSql),
+    "eval_multiclass" -> (evalMulticlass, evalMulticlassSql),
+    "rank_mrr" -> (rankMrr, rankMrrSql),
+    "eval_regression" -> (evalRegression, evalRegressionSql),
+    "stats_welch" -> (statsWelch, statsWelchSql),
+    "vocab_coverage" -> (vocabCoverage, vocabCoverageSql),
+    "shard_assign" -> (shardAssign, shardAssignSql),
+    "shard_rendezvous" -> (shardRendezvous, shardRendezvousSql),
+    "checksum_manifest" -> (checksumManifest, checksumManifestSql),
+    "segment_sentences" -> (segmentSentences, segmentSentencesSql),
+    "dataset_card" -> (datasetCard, datasetCardSql),
+    "join_incremental" -> (joinIncremental, joinIncrementalSql),
+    "join_set_similarity" -> (joinSetSimilarity, joinSetSimilaritySql),
+    "assoc_rules" -> (assocRules, assocRulesSql),
+    "sequence_pattern" -> (sequencePattern, sequencePatternSql),
+    "validate_contract" -> (validateContractQ, validateContractSql),
+    "eval_bootstrap" -> (evalBootstrap, evalBootstrapSql),
+    "eval_bootstrap_paired" -> (evalBootstrapPaired, evalBootstrapPairedSql),
+    "dedup_minhash_incremental" -> (dedupMinhashIncremental, dedupMinhashIncrementalSql),
+    "dedup_cluster_incremental" -> (dedupClusterIncremental, dedupClusterIncrementalSql),
+    "dedup_index_stored" -> (dedupIndexStored, dedupMinhashIncrementalSql),
+    "dedup_index_append" -> (dedupIndexAppend, dedupMinhashIncrementalSql),
+    "dedup_cluster_stored" -> (dedupClusterStored, dedupClusterIncrementalSql),
+    "stats_chi2" -> (statsChi2, statsChi2Sql),
+    "mixture_kl" -> (mixtureKl, mixtureKlSql),
+    "anonymize_ldiv" -> (anonymizeLdiv, anonymizeLdivSql),
+    "anonymize_t" -> (anonymizeT, anonymizeTSql),
+    "rank_map" -> (rankMap, rankMapSql),
+    "eval_kappa" -> (evalKappa, evalKappaSql),
+    "ts_trend" -> (tsTrend, tsTrendSql),
+    "ts_mase" -> (tsMase, tsMaseSql),
+    "ts_theil_sen" -> (tsTheilSen, tsTheilSenSql),
+    "eval_psi" -> (evalPsi, evalPsiSql),
+    "eval_pass_at_k" -> (evalPassAtK, evalPassAtKSql),
+    "eval_bradley_terry" -> (evalBradleyTerry, evalBradleyTerrySql),
+    "stats_benford" -> (statsBenford, statsBenfordSql),
   )
 
-  val oracles: Map[String, String] = Map(
-    "stats_friedman"   -> statsFriedmanSql,
-    "stats_kruskal"    -> statsKruskalSql,
-    "stats_anova"      -> statsAnovaSql,
-    "stats_levene"     -> statsLeveneSql,
-    "stats_bartlett"   -> statsBartlettSql,
-    "stats_tost"       -> statsTostSql,
-    "stats_proportion_z" -> statsProportionZSql,
-    "stats_mde"        -> statsMdeSql,
-    "stats_sprt"       -> statsSprtSql,
-    "stats_cuped"      -> statsCupedSql,
-    "stats_did"        -> statsDidSql,
-    "stats_srm"        -> statsSrmSql,
-    "eval_gwet_ac1"    -> evalGwetAc1Sql,
-    "eval_conformal"   -> evalConformalSql,
-    "eval_mcc"         -> evalMccSql,
-    "eval_kendall"     -> evalKendallSql,
-    "eval_winrate"     -> evalWinrateSql,
-    "eval_delong"      -> evalDelongSql,
-    "stats_permutation" -> statsPermutationSql,
-    "eval_auc_ci"      -> evalAucCiSql,
-    "stats_cohend"     -> statsCohendSql,
-    "eval_wilcoxon"    -> evalWilcoxonSql,
-    "eval_ece"         -> evalEceSql,
-    "stats_jsd"        -> statsJsdSql,
-    "eval_chrf"        -> evalChrfSql,
-    "stats_mannwhitney" -> statsMannwhitneySql,
-    "eval_rouge"       -> evalRougeSql,
-    "eval_token_f1"    -> evalTokenF1Sql,
-    "eval_krippendorff" -> evalKrippendorffSql,
-    "eval_brier"       -> evalBrierSql,
-    "stats_fdr"        -> statsFdrSql,
-    "ts_changepoint"   -> tsChangepointSql,
-    "eval_bleu"        -> evalBleuSql,
-    "eval_spearman"    -> evalSpearmanSql,
-    "eval_auc_pr"      -> evalAucPrSql,
-    "eval_fleiss"      -> evalFleissSql,
-    "eval_mcnemar"     -> evalMcnemarSql,
-    "pii_detect"       -> piiDetectSql,
-    "pii_redact"       -> piiRedactSql,
-    "eval_confusion"   -> evalConfusionSql,
-    "eval_auc"         -> evalAucSql,
-    "eval_calibration" -> evalCalibrationSql,
-    "split_leakage"    -> splitLeakageSql,
-    "filter_funnel"    -> filterFunnelSql,
-    "curriculum_ntile" -> curriculumNtileSql,
-    "ts_markov"        -> tsMarkovSql,
-    "eval_multiclass"  -> evalMulticlassSql,
-    "rank_mrr"         -> rankMrrSql,
-    "eval_regression"  -> evalRegressionSql,
-    "stats_welch"      -> statsWelchSql,
-    "vocab_coverage"   -> vocabCoverageSql,
-    "shard_assign"     -> shardAssignSql,
-    "shard_rendezvous" -> shardRendezvousSql,
-    "checksum_manifest" -> checksumManifestSql,
-    "segment_sentences" -> segmentSentencesSql,
-    "dataset_card"     -> datasetCardSql,
-    "join_incremental" -> joinIncrementalSql,
-    "join_set_similarity" -> joinSetSimilaritySql,
-    "assoc_rules"      -> assocRulesSql,
-    "sequence_pattern" -> sequencePatternSql,
-    "validate_contract" -> validateContractSql,
-    "eval_bootstrap"   -> evalBootstrapSql,
-    "eval_bootstrap_paired" -> evalBootstrapPairedSql,
-    "dedup_minhash_incremental" -> dedupMinhashIncrementalSql,
-    "dedup_cluster_incremental" -> dedupClusterIncrementalSql,
-    "dedup_index_stored" -> dedupMinhashIncrementalSql,
-    "dedup_index_append" -> dedupMinhashIncrementalSql,
-    "dedup_cluster_stored" -> dedupClusterIncrementalSql,
-    "stats_chi2"       -> statsChi2Sql,
-    "mixture_kl"       -> mixtureKlSql,
-    "anonymize_ldiv"   -> anonymizeLdivSql,
-    "anonymize_t"      -> anonymizeTSql,
-    "rank_map"         -> rankMapSql,
-    "eval_kappa"       -> evalKappaSql,
-    "ts_trend"         -> tsTrendSql,
-    "ts_mase"          -> tsMaseSql,
-    "ts_theil_sen"     -> tsTheilSenSql,
-    "eval_psi"         -> evalPsiSql,
-    "eval_pass_at_k"   -> evalPassAtKSql,
-    "eval_bradley_terry" -> evalBradleyTerrySql,
-    "stats_benford"    -> statsBenfordSql,
-  )
+  val all: Map[String, QueryFn] = registry.map { case (n, (q, _)) => n -> q }
+  val oracles: Map[String, String] = registry.map { case (n, (_, sql)) => n -> sql }
 }

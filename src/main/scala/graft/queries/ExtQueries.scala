@@ -4526,233 +4526,122 @@ object ExtQueries {
        |  $momSkew AS skewness, $momKurt AS kurtosis
        |FROM g""".stripMargin
 
-  val all: Map[String, QueryFn] = Map(
-    "sessionize"           -> sessionize,
-    "dedup_substring"      -> dedupSubstring,
-    "dedup_rewrite"        -> dedupRewrite,
-    "select_dsir"          -> selectDsir,
-    "select_pareto"        -> selectPareto,
-    "multimodal_phash"     -> multimodalPhash,
-    "multimodal_audio"     -> multimodalAudio,
-    "sketch_hll"           -> sketchHll,
-    "eval_knn"             -> evalKnn,
-    "eval_ndcg"            -> evalNdcg,
-    "dedup_normalized"     -> dedupNormalized,
-    "sample_weighted"      -> sampleWeighted,
-    "sample_diverse"       -> sampleDiverse,
-    "mixture_temperature"  -> mixtureTemperature,
-    "mixture_epochs"       -> mixtureEpochs,
-    "quality_classifier"   -> qualityClassifier,
-    "text_boilerplate"     -> textBoilerplate,
-    "dedup_semantic"       -> dedupSemantic,
-    "text_collocations"    -> textCollocations,
-    "text_scrub"           -> textScrub,
-    "text_quality_flags"   -> textQualityFlags,
-    "dedup_exact"          -> dedupExact,
-    "dedup_url"            -> dedupUrl,
-    "dedup_priority"       -> dedupPriority,
-    "dedup_incremental"    -> dedupIncremental,
-    "dedup_minhash"        -> dedupMinhash,
-    "dedup_cluster"        -> dedupCluster,
-    "dedup_simhash"        -> dedupSimhash,
-    "dedup_ngram_jaccard"  -> dedupNgramJaccard,
-    "dedup_embed_cosine"   -> dedupEmbedCosine,
-    "ann_topk"             -> annTopK,
-    "ann_lsh"              -> annLsh,
-    "ann_ivf"              -> annIvf,
-    "ann_pq"               -> annPq,
-    "ann_ivf_pq"           -> annIvfPq,
-    "ann_ivf_pq_stored"    -> annIvfPqStored,
-    "ann_ivf_pq_append"    -> annIvfPqAppend,
-    "ann_ivf_pq_refined"   -> annIvfPqRefined,
-    "dedup_semantic_incremental" -> dedupSemanticIncremental,
-    "dedup_semantic_stored" -> dedupSemanticStored,
-    "text_tokens"          -> textTokens,
-    "text_quality"         -> textQuality,
-    "text_entropy"         -> textEntropy,
-    "source_formats"       -> sourceFormats,
-    "vec_covariance"       -> vecCovariance,
-    "vec_pca_power"        -> vecPcaPower,
-    "vec_project"          -> vecProject,
-    "range_join_binned"    -> rangeJoinBinned,
-    "join_interval_overlap" -> joinIntervalOverlap,
-    "vocab_bpe"            -> vocabBpe,
-    "vocab_unigram"        -> vocabUnigram,
-    "vocab_wordpiece"      -> vocabWordpiece,
-    "tokenize_unigram_stored" -> tokenizeUnigramStored,
-    "tokenize_unigram"     -> tokenizeUnigram,
-    "tokenize_bpe"         -> tokenizeBpe,
-    "tokenize_bpe_stored"  -> tokenizeBpeStored,
-    "vocab_fertility"      -> vocabFertility,
-    "tokenize_wordpiece"   -> tokenizeWordpiece,
-    "dedup_containment"    -> dedupContainment,
-    "text_langid"          -> textLangId,
-    "text_fingerprint"     -> textFingerprint,
-    "multimodal_features"  -> multimodalFeatures,
-    "multimodal_frames"    -> multimodalFrames,
-    "profile_documents"    -> profileDocuments,
-    "sample_stratified"    -> sampleStratified,
-    "sample_neyman"        -> sampleNeyman,
-    "mixture_weighted"     -> mixtureWeighted,
-    "pack_sequences"       -> packSequences,
-    "pack_greedy"          -> packGreedy,
-    "quality_gopher"       -> qualityGopher,
-    "mixture_fractional"   -> mixtureFractional,
-    "shuffle_deterministic"-> shuffleDeterministic,
-    "scd2_intervals"       -> scd2Intervals,
-    "sample_capped"        -> sampleCapped,
-    "text_contamination"   -> textContamination,
-    "vocab_heavy_hitters"  -> vocabHeavyHitters,
-    "resample_hourly"      -> resampleHourly,
-    "asof_join"            -> asofJoinGeneral,
-    "asof_join_nearest"    -> asofJoinNearest,
-    "training_set"         -> trainingSet,
-    "sample_bottomk"       -> sampleBottomK,
-    "sketch_countmin"      -> sketchCountMin,
-    "sketch_kmv"           -> sketchKmv,
-    "sketch_kmv_jaccard"   -> sketchKmvJaccard,
-    "sketch_theta"         -> sketchTheta,
-    "sketch_theta_stored"  -> sketchThetaStored,
-    "sketch_theta_merge"   -> sketchThetaMerge,
-    "sketch_bloom"         -> sketchBloom,
-    "sketch_bloom_stored"  -> sketchBloomStored,
-    "sketch_hll_stored"    -> sketchHllStored,
-    "sketch_countmin_stored" -> sketchCountMinStored,
-    "sketch_quantile"      -> sketchQuantile,
-    "sketch_quantile_stored" -> sketchQuantileStored,
-    "stats_moments"        -> statsMoments,
-    "mean_vectors"         -> meanVectors,
-    "vec_quantize"         -> vecQuantize,
-    "rank_tfidf"           -> rankTfidf,
-    "text_idf_novelty"     -> textIdfNovelty,
-    "rank_bm25"            -> rankBm25,
-    "funnel_steps"         -> funnelSteps,
-    "cohort_retention"     -> cohortRetentionQ,
-    "snapshot_diff"        -> snapshotDiffQ,
-    "quality_unigram"      -> qualityUnigram,
-    "join_salted"          -> joinSalted,
-    "chunk_documents"      -> chunkDocuments,
-    "index_inverted"       -> indexInverted,
-    "index_inverted_incremental" -> indexInvertedIncremental,
-    "anomaly_zscore"       -> anomalyZscore,
-    "multimodal_dedup"     -> multimodalDedup,
-    "join_bloom"           -> joinBloom,
-    "join_bucketed"        -> joinBucketed,
-    "agg_incremental"      -> aggIncremental,
+  /** Every query of this family, with its DuckDB oracle SQL. */
+  private val registry: Map[String, (QueryFn, String)] = Map(
+    "sessionize" -> (sessionize, sessionizeSql),
+    "dedup_substring" -> (dedupSubstring, dedupSubstringSql),
+    "dedup_rewrite" -> (dedupRewrite, dedupRewriteSql),
+    "select_dsir" -> (selectDsir, selectDsirSql),
+    "select_pareto" -> (selectPareto, selectParetoSql),
+    "multimodal_phash" -> (multimodalPhash, multimodalPhashSql),
+    "multimodal_audio" -> (multimodalAudio, multimodalAudioSql),
+    "sketch_hll" -> (sketchHll, sketchHllSql),
+    "eval_knn" -> (evalKnn, evalKnnSql),
+    "eval_ndcg" -> (evalNdcg, evalNdcgSql),
+    "dedup_normalized" -> (dedupNormalized, dedupNormalizedSql),
+    "sample_weighted" -> (sampleWeighted, sampleWeightedSql),
+    "sample_diverse" -> (sampleDiverse, sampleDiverseSql),
+    "mixture_temperature" -> (mixtureTemperature, mixtureTemperatureSql),
+    "mixture_epochs" -> (mixtureEpochs, mixtureEpochsSql),
+    "quality_classifier" -> (qualityClassifier, qualityClassifierSql),
+    "text_boilerplate" -> (textBoilerplate, textBoilerplateSql),
+    "dedup_semantic" -> (dedupSemantic, dedupSemanticSql),
+    "text_collocations" -> (textCollocations, textCollocationsSql),
+    "text_scrub" -> (textScrub, textScrubSql),
+    "text_quality_flags" -> (textQualityFlags, textQualityFlagsSql),
+    "dedup_exact" -> (dedupExact, dedupExactSql),
+    "dedup_url" -> (dedupUrl, dedupUrlSql),
+    "dedup_priority" -> (dedupPriority, dedupPrioritySql),
+    "dedup_incremental" -> (dedupIncremental, dedupIncrementalSql),
+    "dedup_minhash" -> (dedupMinhash, dedupMinhashSql),
+    "dedup_cluster" -> (dedupCluster, dedupClusterSql),
+    "dedup_simhash" -> (dedupSimhash, dedupSimhashSql),
+    "dedup_ngram_jaccard" -> (dedupNgramJaccard, dedupNgramJaccardSql),
+    "dedup_embed_cosine" -> (dedupEmbedCosine, dedupEmbedCosineSql),
+    "ann_topk" -> (annTopK, annTopKSql),
+    "ann_lsh" -> (annLsh, annLshSql),
+    "ann_ivf" -> (annIvf, annIvfSql),
+    "ann_pq" -> (annPq, annPqSql),
+    "ann_ivf_pq" -> (annIvfPq, annIvfPqSql),
+    "ann_ivf_pq_stored" -> (annIvfPqStored, annIvfPqSql),
+    "ann_ivf_pq_append" -> (annIvfPqAppend, annIvfPqAppendSql),
+    "ann_ivf_pq_refined" -> (annIvfPqRefined, annIvfPqRefinedSql),
+    "dedup_semantic_incremental" -> (dedupSemanticIncremental, dedupSemanticIncrementalSql),
+    "dedup_semantic_stored" -> (dedupSemanticStored, dedupSemanticIncrementalSql),
+    "text_tokens" -> (textTokens, textTokensSql),
+    "text_quality" -> (textQuality, textQualitySql),
+    "text_entropy" -> (textEntropy, textEntropySql),
+    "source_formats" -> (sourceFormats, sourceFormatsSql),
+    "vec_covariance" -> (vecCovariance, vecCovarianceSql),
+    "vec_pca_power" -> (vecPcaPower, vecPcaPowerSql),
+    "vec_project" -> (vecProject, vecProjectSql),
+    "range_join_binned" -> (rangeJoinBinned, rangeJoinBinnedSql),
+    "join_interval_overlap" -> (joinIntervalOverlap, joinIntervalOverlapSql),
+    "vocab_bpe" -> (vocabBpe, vocabBpeSql),
+    "vocab_unigram" -> (vocabUnigram, vocabUnigramSql),
+    "vocab_wordpiece" -> (vocabWordpiece, vocabWordpieceSql),
+    "tokenize_unigram_stored" -> (tokenizeUnigramStored, tokenizeUnigramSql),
+    "tokenize_unigram" -> (tokenizeUnigram, tokenizeUnigramSql),
+    "tokenize_bpe" -> (tokenizeBpe, tokenizeBpeSql),
+    "tokenize_bpe_stored" -> (tokenizeBpeStored, tokenizeBpeSql),
+    "vocab_fertility" -> (vocabFertility, vocabFertilitySql),
+    "tokenize_wordpiece" -> (tokenizeWordpiece, tokenizeWordpieceSql),
+    "dedup_containment" -> (dedupContainment, dedupContainmentSql),
+    "text_langid" -> (textLangId, textLangIdSql),
+    "text_fingerprint" -> (textFingerprint, textFingerprintSql),
+    "multimodal_features" -> (multimodalFeatures, multimodalFeaturesSql),
+    "multimodal_frames" -> (multimodalFrames, multimodalFramesSql),
+    "profile_documents" -> (profileDocuments, profileDocumentsSql),
+    "sample_stratified" -> (sampleStratified, sampleStratifiedSql),
+    "sample_neyman" -> (sampleNeyman, sampleNeymanSql),
+    "mixture_weighted" -> (mixtureWeighted, mixtureWeightedSql),
+    "pack_sequences" -> (packSequences, packSequencesSql),
+    "pack_greedy" -> (packGreedy, packGreedySql),
+    "quality_gopher" -> (qualityGopher, qualityGopherSql),
+    "mixture_fractional" -> (mixtureFractional, mixtureFractionalSql),
+    "shuffle_deterministic" -> (shuffleDeterministic, shuffleDeterministicSql),
+    "scd2_intervals" -> (scd2Intervals, scd2IntervalsSql),
+    "sample_capped" -> (sampleCapped, sampleCappedSql),
+    "text_contamination" -> (textContamination, textContaminationSql),
+    "vocab_heavy_hitters" -> (vocabHeavyHitters, vocabHeavyHittersSql),
+    "resample_hourly" -> (resampleHourly, resampleHourlySql),
+    "asof_join" -> (asofJoinGeneral, asofJoinGeneralSql),
+    "asof_join_nearest" -> (asofJoinNearest, asofJoinNearestSql),
+    "training_set" -> (trainingSet, trainingSetSql),
+    "sample_bottomk" -> (sampleBottomK, sampleBottomKSql),
+    "sketch_countmin" -> (sketchCountMin, sketchCountMinSql),
+    "sketch_kmv" -> (sketchKmv, sketchKmvSql),
+    "sketch_kmv_jaccard" -> (sketchKmvJaccard, sketchKmvJaccardSql),
+    "sketch_theta" -> (sketchTheta, sketchThetaSql),
+    "sketch_theta_stored" -> (sketchThetaStored, sketchThetaSql),
+    "sketch_theta_merge" -> (sketchThetaMerge, sketchThetaMergeSql),
+    "sketch_bloom" -> (sketchBloom, sketchBloomSql),
+    "sketch_bloom_stored" -> (sketchBloomStored, sketchBloomStoredSql),
+    "sketch_hll_stored" -> (sketchHllStored, sketchHllSql),
+    "sketch_countmin_stored" -> (sketchCountMinStored, sketchCountMinSql),
+    "sketch_quantile" -> (sketchQuantile, sketchQuantileSql),
+    "sketch_quantile_stored" -> (sketchQuantileStored, sketchQuantileSql),
+    "stats_moments" -> (statsMoments, statsMomentsSql),
+    "mean_vectors" -> (meanVectors, meanVectorsSql),
+    "vec_quantize" -> (vecQuantize, vecQuantizeSql),
+    "rank_tfidf" -> (rankTfidf, rankTfidfSql),
+    "text_idf_novelty" -> (textIdfNovelty, textIdfNoveltySql),
+    "rank_bm25" -> (rankBm25, rankBm25Sql),
+    "funnel_steps" -> (funnelSteps, funnelStepsSql),
+    "cohort_retention" -> (cohortRetentionQ, cohortRetentionSql),
+    "snapshot_diff" -> (snapshotDiffQ, snapshotDiffSql),
+    "quality_unigram" -> (qualityUnigram, qualityUnigramSql),
+    "join_salted" -> (joinSalted, joinSaltedSql),
+    "chunk_documents" -> (chunkDocuments, chunkDocumentsSql),
+    "index_inverted" -> (indexInverted, indexInvertedSql),
+    "index_inverted_incremental" -> (indexInvertedIncremental, indexInvertedSql),
+    "anomaly_zscore" -> (anomalyZscore, anomalyZscoreSql),
+    "multimodal_dedup" -> (multimodalDedup, multimodalDedupSql),
+    "join_bloom" -> (joinBloom, joinBloomSql),
+    "join_bucketed" -> (joinBucketed, joinBucketedSql),
+    "agg_incremental" -> (aggIncremental, aggIncrementalSql),
   )
 
-  val oracles: Map[String, String] = Map(
-    "sessionize"          -> sessionizeSql,
-    "dedup_substring"     -> dedupSubstringSql,
-    "dedup_rewrite"       -> dedupRewriteSql,
-    "select_dsir"         -> selectDsirSql,
-    "select_pareto"       -> selectParetoSql,
-    "multimodal_phash"    -> multimodalPhashSql,
-    "multimodal_audio"    -> multimodalAudioSql,
-    "sketch_hll"          -> sketchHllSql,
-    "eval_knn"            -> evalKnnSql,
-    "eval_ndcg"           -> evalNdcgSql,
-    "dedup_normalized"    -> dedupNormalizedSql,
-    "sample_weighted"     -> sampleWeightedSql,
-    "sample_diverse"      -> sampleDiverseSql,
-    "mixture_temperature" -> mixtureTemperatureSql,
-    "mixture_epochs"      -> mixtureEpochsSql,
-    "quality_classifier"  -> qualityClassifierSql,
-    "text_boilerplate"    -> textBoilerplateSql,
-    "dedup_semantic"      -> dedupSemanticSql,
-    "text_collocations"   -> textCollocationsSql,
-    "text_scrub"          -> textScrubSql,
-    "text_langid"         -> textLangIdSql,
-    "text_quality_flags"  -> textQualityFlagsSql,
-    "text_fingerprint"    -> textFingerprintSql,
-    "dedup_ngram_jaccard" -> dedupNgramJaccardSql,
-    "dedup_cluster"       -> dedupClusterSql,
-    "dedup_simhash"       -> dedupSimhashSql,
-    "dedup_minhash"       -> dedupMinhashSql,
-    "dedup_exact"         -> dedupExactSql,
-    "dedup_url"           -> dedupUrlSql,
-    "dedup_priority"      -> dedupPrioritySql,
-    "dedup_incremental"   -> dedupIncrementalSql,
-    "sample_bottomk"      -> sampleBottomKSql,
-    "sketch_countmin"     -> sketchCountMinSql,
-    "sketch_kmv"          -> sketchKmvSql,
-    "sketch_kmv_jaccard"  -> sketchKmvJaccardSql,
-    "sketch_theta"        -> sketchThetaSql,
-    "sketch_theta_stored" -> sketchThetaSql,
-    "sketch_theta_merge"  -> sketchThetaMergeSql,
-    "sketch_bloom"        -> sketchBloomSql,
-    "sketch_bloom_stored" -> sketchBloomStoredSql,
-    "sketch_hll_stored"   -> sketchHllSql,
-    "sketch_countmin_stored" -> sketchCountMinSql,
-    "sketch_quantile"     -> sketchQuantileSql,
-    "sketch_quantile_stored" -> sketchQuantileSql,
-    "stats_moments"       -> statsMomentsSql,
-    "pack_greedy"         -> packGreedySql,
-    "pack_sequences"      -> packSequencesSql,
-    "quality_gopher"      -> qualityGopherSql,
-    "mixture_fractional"  -> mixtureFractionalSql,
-    "shuffle_deterministic" -> shuffleDeterministicSql,
-    "dedup_embed_cosine"  -> dedupEmbedCosineSql,
-    "ann_topk"            -> annTopKSql,
-    "ann_lsh"             -> annLshSql,
-    "ann_ivf"             -> annIvfSql,
-    "ann_pq"              -> annPqSql,
-    "ann_ivf_pq"          -> annIvfPqSql,
-    "ann_ivf_pq_stored"   -> annIvfPqSql,
-    "ann_ivf_pq_append"   -> annIvfPqAppendSql,
-    "ann_ivf_pq_refined"  -> annIvfPqRefinedSql,
-    "dedup_semantic_incremental" -> dedupSemanticIncrementalSql,
-    "dedup_semantic_stored" -> dedupSemanticIncrementalSql,
-    "text_tokens"         -> textTokensSql,
-    "text_quality"        -> textQualitySql,
-    "text_entropy"        -> textEntropySql,
-    "source_formats"      -> sourceFormatsSql,
-    "vec_covariance"      -> vecCovarianceSql,
-    "vec_pca_power"       -> vecPcaPowerSql,
-    "vec_project"         -> vecProjectSql,
-    "range_join_binned"   -> rangeJoinBinnedSql,
-    "join_interval_overlap" -> joinIntervalOverlapSql,
-    "vocab_bpe"           -> vocabBpeSql,
-    "vocab_unigram"       -> vocabUnigramSql,
-    "vocab_wordpiece"     -> vocabWordpieceSql,
-    "tokenize_unigram"    -> tokenizeUnigramSql,
-    "tokenize_unigram_stored" -> tokenizeUnigramSql,
-    "tokenize_bpe"        -> tokenizeBpeSql,
-    "tokenize_bpe_stored" -> tokenizeBpeSql,
-    "vocab_fertility"     -> vocabFertilitySql,
-    "tokenize_wordpiece"  -> tokenizeWordpieceSql,
-    "training_set"        -> trainingSetSql,
-    "dedup_containment"   -> dedupContainmentSql,
-    "multimodal_features" -> multimodalFeaturesSql,
-    "multimodal_frames"   -> multimodalFramesSql,
-    "profile_documents"   -> profileDocumentsSql,
-    "sample_stratified"   -> sampleStratifiedSql,
-    "sample_neyman"       -> sampleNeymanSql,
-    "mixture_weighted"    -> mixtureWeightedSql,
-    "scd2_intervals"      -> scd2IntervalsSql,
-    "sample_capped"       -> sampleCappedSql,
-    "text_contamination"  -> textContaminationSql,
-    "vocab_heavy_hitters" -> vocabHeavyHittersSql,
-    "resample_hourly"     -> resampleHourlySql,
-    "asof_join"           -> asofJoinGeneralSql,
-    "asof_join_nearest"   -> asofJoinNearestSql,
-    "mean_vectors"        -> meanVectorsSql,
-    "vec_quantize"        -> vecQuantizeSql,
-    "rank_tfidf"          -> rankTfidfSql,
-    "text_idf_novelty"    -> textIdfNoveltySql,
-    "rank_bm25"           -> rankBm25Sql,
-    "funnel_steps"        -> funnelStepsSql,
-    "cohort_retention"    -> cohortRetentionSql,
-    "snapshot_diff"       -> snapshotDiffSql,
-    "quality_unigram"     -> qualityUnigramSql,
-    "join_salted"         -> joinSaltedSql,
-    "chunk_documents"     -> chunkDocumentsSql,
-    "index_inverted"      -> indexInvertedSql,
-    "index_inverted_incremental" -> indexInvertedSql,
-    "anomaly_zscore"      -> anomalyZscoreSql,
-    "multimodal_dedup"    -> multimodalDedupSql,
-    "join_bloom"          -> joinBloomSql,
-    "join_bucketed"       -> joinBucketedSql,
-    "agg_incremental"     -> aggIncrementalSql,
-  )
+  val all: Map[String, QueryFn] = registry.map { case (n, (q, _)) => n -> q }
+  val oracles: Map[String, String] = registry.map { case (n, (_, sql)) => n -> sql }
 }

@@ -1483,87 +1483,49 @@ object GraphQueries {
        |GROUP BY 1""".stripMargin
   }
 
-  val all: Map[String, QueryFn] = Map(
-    "graph_kcore"     -> graphKcore,
-    "graph_ppr"       -> graphPpr,
-    "graph_modularity" -> graphModularity,
-    "graph_pagerank"  -> graphPagerank,
-    "graph_jaccard"   -> graphJaccard,
-    "graph_adamic_adar" -> graphAdamicAdar,
-    "ts_autocorr"     -> tsAutocorr,
-    "ts_seasonal"     -> tsSeasonal,
-    "stats_gini"      -> statsGini,
-    "stats_zipf"      -> statsZipf,
-    "stats_entropy"   -> statsEntropy,
-    "graph_triangles" -> graphTriangles,
-    "graph_bfs"       -> graphBfs,
-    "graph_closeness" -> graphCloseness,
-    "graph_betweenness" -> graphBetweenness,
-    "graph_ktruss"    -> graphKtruss,
-    "graph_lcc"       -> graphLcc,
-    "graph_degrees"   -> graphDegrees,
-    "graph_cc"        -> graphCc,
-    "graph_cc_incremental" -> graphCcIncremental,
-    "graph_mst"       -> graphMst,
-    "graph_cc_twophase" -> graphCcTwoPhase,
-    "graph_scc"       -> graphScc,
-    "graph_assortativity" -> graphAssortativity,
-    "graph_reciprocity" -> graphReciprocity,
-    "graph_label_prop" -> graphLabelProp,
-    "graph_louvain"   -> graphLouvain,
-    "graph_leiden"    -> graphLeiden,
-    "graph_hits"      -> graphHits,
-    "ts_ewma"         -> tsEwma,
-    "ts_interpolate"  -> tsInterpolate,
-    "attribution_linear" -> attributionLinear,
-    "ts_cusum"        -> tsCusum,
-    "ts_holt"         -> tsHolt,
-    "ts_holt_winters" -> tsHoltWinters,
-    "quantile_exact"  -> quantileExact,
-    "anomaly_mad"     -> anomalyMad,
-    "layout_zorder"   -> layoutZorder,
-    "layout_hilbert"  -> layoutHilbert,
+  /** Every query of this family, with its DuckDB oracle SQL. */
+  private val registry: Map[String, (QueryFn, String)] = Map(
+    "graph_kcore" -> (graphKcore, graphKcoreSql),
+    "graph_ppr" -> (graphPpr, graphPprSql),
+    "graph_modularity" -> (graphModularity, graphModularitySql),
+    "graph_pagerank" -> (graphPagerank, graphPagerankSql),
+    "graph_jaccard" -> (graphJaccard, graphJaccardSql),
+    "graph_adamic_adar" -> (graphAdamicAdar, graphAdamicAdarSql),
+    "ts_autocorr" -> (tsAutocorr, tsAutocorrSql),
+    "ts_seasonal" -> (tsSeasonal, tsSeasonalSql),
+    "stats_gini" -> (statsGini, statsGiniSql),
+    "stats_zipf" -> (statsZipf, statsZipfSql),
+    "stats_entropy" -> (statsEntropy, statsEntropySql),
+    "graph_triangles" -> (graphTriangles, graphTrianglesSql),
+    "graph_bfs" -> (graphBfs, graphBfsSql),
+    "graph_closeness" -> (graphCloseness, graphClosenessSql),
+    "graph_betweenness" -> (graphBetweenness, graphBetweennessSql),
+    "graph_ktruss" -> (graphKtruss, graphKtrussSql),
+    "graph_lcc" -> (graphLcc, graphLccSql),
+    "graph_degrees" -> (graphDegrees, graphDegreesSql),
+    "graph_cc" -> (graphCc, graphCcSql),
+    "graph_cc_incremental" -> (graphCcIncremental, graphCcSql), // incremental ≡ full recompute
+    "graph_mst" -> (graphMst, graphMstSql),
+    "graph_cc_twophase" -> (graphCcTwoPhase, graphCcSql), // same output contract as graph_cc
+    "graph_scc" -> (graphScc, graphSccSql),
+    "graph_assortativity" -> (graphAssortativity, graphAssortativitySql),
+    "graph_reciprocity" -> (graphReciprocity, graphReciprocitySql),
+    "graph_label_prop" -> (graphLabelProp, graphLabelPropSql),
+    "graph_louvain" -> (graphLouvain, graphLouvainSql),
+    "graph_leiden" -> (graphLeiden, graphLeidenSql),
+    "graph_hits" -> (graphHits, graphHitsSql),
+    "ts_ewma" -> (tsEwma, tsEwmaSql),
+    "ts_interpolate" -> (tsInterpolate, tsInterpolateSql),
+    "attribution_linear" -> (attributionLinear, attributionLinearSql),
+    "ts_cusum" -> (tsCusum, tsCusumSql),
+    "ts_holt" -> (tsHolt, tsHoltSql),
+    "ts_holt_winters" -> (tsHoltWinters, tsHoltWintersSql),
+    "quantile_exact" -> (quantileExact, quantileExactSql),
+    "anomaly_mad" -> (anomalyMad, anomalyMadSql),
+    "layout_zorder" -> (layoutZorder, layoutZorderSql),
+    "layout_hilbert" -> (layoutHilbert, layoutHilbertSql),
   )
 
-  val oracles: Map[String, String] = Map(
-    "graph_kcore"     -> graphKcoreSql,
-    "graph_ppr"       -> graphPprSql,
-    "graph_modularity" -> graphModularitySql,
-    "graph_pagerank"  -> graphPagerankSql,
-    "graph_jaccard"   -> graphJaccardSql,
-    "graph_adamic_adar" -> graphAdamicAdarSql,
-    "ts_autocorr"     -> tsAutocorrSql,
-    "ts_seasonal"     -> tsSeasonalSql,
-    "stats_gini"      -> statsGiniSql,
-    "stats_zipf"      -> statsZipfSql,
-    "stats_entropy"   -> statsEntropySql,
-    "graph_triangles" -> graphTrianglesSql,
-    "graph_bfs"       -> graphBfsSql,
-    "graph_closeness" -> graphClosenessSql,
-    "graph_betweenness" -> graphBetweennessSql,
-    "graph_ktruss"    -> graphKtrussSql,
-    "graph_lcc"       -> graphLccSql,
-    "graph_degrees"   -> graphDegreesSql,
-    "graph_cc"        -> graphCcSql,
-    "graph_cc_twophase" -> graphCcSql, // same output contract as graph_cc
-    "graph_cc_incremental" -> graphCcSql, // incremental ≡ full recompute
-    "graph_mst"       -> graphMstSql,
-    "graph_scc"       -> graphSccSql,
-    "graph_assortativity" -> graphAssortativitySql,
-    "graph_reciprocity" -> graphReciprocitySql,
-    "graph_label_prop" -> graphLabelPropSql,
-    "graph_louvain"   -> graphLouvainSql,
-    "graph_leiden"    -> graphLeidenSql,
-    "graph_hits"      -> graphHitsSql,
-    "ts_ewma"         -> tsEwmaSql,
-    "ts_interpolate"  -> tsInterpolateSql,
-    "attribution_linear" -> attributionLinearSql,
-    "ts_cusum"        -> tsCusumSql,
-    "ts_holt"         -> tsHoltSql,
-    "ts_holt_winters" -> tsHoltWintersSql,
-    "quantile_exact"  -> quantileExactSql,
-    "anomaly_mad"     -> anomalyMadSql,
-    "layout_zorder"   -> layoutZorderSql,
-    "layout_hilbert"  -> layoutHilbertSql,
-  )
+  val all: Map[String, QueryFn] = registry.map { case (n, (q, _)) => n -> q }
+  val oracles: Map[String, String] = registry.map { case (n, (_, sql)) => n -> sql }
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Analytics, DataOps, Dedup, Joins, Layout, Packing, Ranking, VectorExprs, Vocab}
@@ -102,6 +103,16 @@ object PipelineQueries {
     * rounded at 9 and summed in DECIMAL on both engines.
     */
   val rankFusion: QueryFn = (s, dir) => {
+    val (bm25, tfidfSum) = bm25AndTfidf(s, dir)
+    Ranking.rrfFusion(Seq(bm25, tfidfSum))
+      .select(col("doc_id"), col("n_lists"), col("best_rank"),
+        col("rrf_score"))
+  }
+
+  /** The BM25 and the TF-IDF-sum rankings of the documents over the
+    * four retrieval query terms.
+    */
+  private def bm25AndTfidf(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val docs = Tables.documents(s, dir)
     val terms = Seq("join", "vector", "spark", "window")
     // ONE tokenization pass feeds both scorers — at 100 TB the corpus
@@ -117,10 +128,7 @@ object PipelineQueries {
     val bm25 = Ranking.bm25FromTf(tf, withLen.select("doc_id", "dl"),
         nDocs, avgdl, terms)
       .withColumn("score", round(col("score"), 6))
-    val tfidfSum = Ranking.tfidfSumFromTf(tf, nDocs, terms)
-    Ranking.rrfFusion(Seq(bm25, tfidfSum))
-      .select(col("doc_id"), col("n_lists"), col("best_rank"),
-        col("rrf_score"))
+    (bm25, Ranking.tfidfSumFromTf(tf, nDocs, terms))
   }
 
   /** Shared BM25 + TF-IDF retrieval CTE prefix (ONE tokenization pass)
@@ -183,20 +191,7 @@ object PipelineQueries {
     * single shared tokenization pass.
     */
   val rankRbo: QueryFn = (s, dir) => {
-    val docs = Tables.documents(s, dir)
-    val terms = Seq("join", "vector", "spark", "window")
-    val withLen = docs.select(col("doc_id"), col("text").as("__text"),
-      size(graft.ext.TextAnalysis.tokens(col("text"))).cast("long").as("dl"))
-      .localCheckpoint(true)
-    val tf = Ranking.termFrequencies(withLen, "doc_id", "__text")
-      .localCheckpoint(true)
-    val statsRow = withLen.agg(count(lit(1)), sum(col("dl"))).collect()(0)
-    val nDocs = statsRow.getLong(0)
-    val avgdl = statsRow.getLong(1).toDouble / nDocs.toDouble
-    val bm25 = Ranking.bm25FromTf(tf, withLen.select("doc_id", "dl"),
-        nDocs, avgdl, terms)
-      .withColumn("score", round(col("score"), 6))
-    val tfidfSum = Ranking.tfidfSumFromTf(tf, nDocs, terms)
+    val (bm25, tfidfSum) = bm25AndTfidf(s, dir)
     Ranking.rboOverlap(bm25, tfidfSum)
   }
 
@@ -749,57 +744,34 @@ object PipelineQueries {
       |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
       |  ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)""".stripMargin
 
-  val all: Map[String, QueryFn] = Map(
-    "dataset_split"     -> datasetSplit,
-    "dedup_consecutive" -> dedupConsecutive,
-    "cdc_apply"         -> cdcApply,
-    "rank_fusion"       -> rankFusion,
-    "rank_rbo"          -> rankRbo,
-    "stats_histogram"   -> statsHistogram,
-    "anonymize_k"       -> anonymizeK,
-    "index_minmax"      -> indexMinmax,
-    "vec_normalize"     -> vecNormalize,
-    "lm_bigrams"        -> lmBigrams,
-    "lm_kneser_ney"     -> lmKneserNey,
-    "text_perplexity"   -> textPerplexity,
-    "mask_spans"        -> maskSpans,
-    "dataset_interleave" -> datasetInterleave,
-    "negative_sample"   -> negativeSample,
-    "select_budget"     -> selectBudget,
-    "mixture_waterfill" -> mixtureWaterfill,
-    "train_pairs"       -> trainPairs,
-    "join_fuzzy"        -> joinFuzzy,
-    "drift_ks"          -> driftKs,
-    "join_size_cms"     -> joinSizeCms,
-    "dedup_lev1"        -> dedupLev1,
-    "text_readability"  -> textReadability,
-    "feature_rolling"   -> featureRolling,
+  /** Every query of this family, with its DuckDB oracle SQL. */
+  private val registry: Map[String, (QueryFn, String)] = Map(
+    "dataset_split" -> (datasetSplit, datasetSplitSql),
+    "dedup_consecutive" -> (dedupConsecutive, dedupConsecutiveSql),
+    "cdc_apply" -> (cdcApply, cdcApplySql),
+    "rank_fusion" -> (rankFusion, rankFusionSql),
+    "rank_rbo" -> (rankRbo, rankRboSql),
+    "stats_histogram" -> (statsHistogram, statsHistogramSql),
+    "anonymize_k" -> (anonymizeK, anonymizeKSql),
+    "index_minmax" -> (indexMinmax, indexMinmaxSql),
+    "vec_normalize" -> (vecNormalize, vecNormalizeSql),
+    "lm_bigrams" -> (lmBigrams, lmBigramsSql),
+    "lm_kneser_ney" -> (lmKneserNey, lmKneserNeySql),
+    "text_perplexity" -> (textPerplexity, textPerplexitySql),
+    "mask_spans" -> (maskSpans, maskSpansSql),
+    "dataset_interleave" -> (datasetInterleave, datasetInterleaveSql),
+    "negative_sample" -> (negativeSample, negativeSampleSql),
+    "select_budget" -> (selectBudget, selectBudgetSql),
+    "mixture_waterfill" -> (mixtureWaterfill, mixtureWaterfillSql),
+    "train_pairs" -> (trainPairs, trainPairsSql),
+    "join_fuzzy" -> (joinFuzzy, joinFuzzySql),
+    "drift_ks" -> (driftKs, driftKsSql),
+    "join_size_cms" -> (joinSizeCms, joinSizeCmsSql),
+    "dedup_lev1" -> (dedupLev1, dedupLev1Sql),
+    "text_readability" -> (textReadability, textReadabilitySql),
+    "feature_rolling" -> (featureRolling, featureRollingSql),
   )
 
-  val oracles: Map[String, String] = Map(
-    "dataset_split"     -> datasetSplitSql,
-    "dedup_consecutive" -> dedupConsecutiveSql,
-    "cdc_apply"         -> cdcApplySql,
-    "rank_fusion"       -> rankFusionSql,
-    "rank_rbo"          -> rankRboSql,
-    "stats_histogram"   -> statsHistogramSql,
-    "anonymize_k"       -> anonymizeKSql,
-    "index_minmax"      -> indexMinmaxSql,
-    "vec_normalize"     -> vecNormalizeSql,
-    "lm_bigrams"        -> lmBigramsSql,
-    "lm_kneser_ney"     -> lmKneserNeySql,
-    "text_perplexity"   -> textPerplexitySql,
-    "mask_spans"        -> maskSpansSql,
-    "dataset_interleave" -> datasetInterleaveSql,
-    "negative_sample"   -> negativeSampleSql,
-    "select_budget"     -> selectBudgetSql,
-    "mixture_waterfill" -> mixtureWaterfillSql,
-    "train_pairs"       -> trainPairsSql,
-    "join_fuzzy"        -> joinFuzzySql,
-    "drift_ks"          -> driftKsSql,
-    "join_size_cms"     -> joinSizeCmsSql,
-    "dedup_lev1"        -> dedupLev1Sql,
-    "text_readability"  -> textReadabilitySql,
-    "feature_rolling"   -> featureRollingSql,
-  )
+  val all: Map[String, QueryFn] = registry.map { case (n, (q, _)) => n -> q }
+  val oracles: Map[String, String] = registry.map { case (n, (_, sql)) => n -> sql }
 }

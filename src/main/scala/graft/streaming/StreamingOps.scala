@@ -72,6 +72,12 @@ object StreamingOps {
     t
   }
 
+  private def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
+
+  /** One key's micro-batch rows in event-time order, ties by event id. */
+  private def inEventOrder(rows: Iterator[Event]): Seq[Event] =
+    rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
+
   case class FunnelState(step: Int, lastUs: Long)
   case class FunnelProgress(user_id: Long, step: Int, event_type: String)
 
@@ -89,12 +95,11 @@ object StreamingOps {
       steps: Seq[String]): Dataset[FunnelProgress] = {
     val spark = events.sparkSession
     import spark.implicits._
-    def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState[FunnelState, FunnelProgress](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (userId: Long, rows: Iterator[Event], state: GroupState[FunnelState]) =>
-          val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
+          val sorted = inEventOrder(rows)
           var st = state.getOption.getOrElse(FunnelState(0, Long.MinValue))
           val out = Seq.newBuilder[FunnelProgress]
           for (e <- sorted) {
@@ -124,12 +129,11 @@ object StreamingOps {
   def ewmaStream(events: Dataset[Event], alpha: Double): Dataset[EwmaPoint] = {
     val spark = events.sparkSession
     import spark.implicits._
-    def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState[EwmaState, EwmaPoint](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (userId: Long, rows: Iterator[Event], state: GroupState[EwmaState]) =>
-          val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
+          val sorted = inEventOrder(rows)
           var st = state.getOption.getOrElse(EwmaState(0.0, 0L))
           for (e <- sorted)
             st = EwmaState(e.value * alpha + st.s * (1.0 - alpha), st.n + 1)
@@ -156,12 +160,11 @@ object StreamingOps {
     require(period >= 2)
     val spark = events.sparkSession
     import spark.implicits._
-    def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState[HwState, HwPoint](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (userId: Long, rows: Iterator[Event], state: GroupState[HwState]) =>
-          val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
+          val sorted = inEventOrder(rows)
           var st = state.getOption.getOrElse(
             HwState(0.0, 0.0, 0L, Seq.fill(period)(0.0)))
           for (e <- sorted) {
@@ -198,12 +201,11 @@ object StreamingOps {
       kappa: Double): Dataset[CusumPoint] = {
     val spark = events.sparkSession
     import spark.implicits._
-    def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState[CusumState, CusumPoint](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (userId: Long, rows: Iterator[Event], state: GroupState[CusumState]) =>
-          val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
+          val sorted = inEventOrder(rows)
           var st = state.getOption.getOrElse(CusumState(0.0, 0.0, 0L))
           for (e <- sorted) {
             val s = math.max(0.0, st.s + e.value - mu - kappa)
@@ -230,7 +232,6 @@ object StreamingOps {
     val spark = events.sparkSession
     import spark.implicits._
     val gapUs = gapMinutes * 60000000L
-    def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
     val gst = if (timeoutMinutes > 0) GroupStateTimeout.ProcessingTimeTimeout
               else GroupStateTimeout.NoTimeout
 
@@ -244,7 +245,7 @@ object StreamingOps {
             Iterator(Session(userId, fromMicros(s.startMs), fromMicros(s.endMs),
               s.numEvents, s.totalValue))
           } else {
-            val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
+            val sorted = inEventOrder(rows)
             var cur = state.getOption
             val closed = Seq.newBuilder[Session]
             for (e <- sorted) {
@@ -284,7 +285,6 @@ object StreamingOps {
       timeoutMinutes: Long = 30): Dataset[Run] = {
     val spark = events.sparkSession
     import spark.implicits._
-    def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
     // <= 0 -> NoTimeout drain mode: see sessionize — a registered
     // processing-time deadline keeps AvailableNow spinning no-op batches
     val gst = if (timeoutMinutes > 0) GroupStateTimeout.ProcessingTimeTimeout
@@ -302,7 +302,7 @@ object StreamingOps {
             state.remove()
             Iterator(toRun(s))
           } else {
-            val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
+            val sorted = inEventOrder(rows)
             var cur = state.getOption
             val closed = Seq.newBuilder[Run]
             for (e <- sorted) {
@@ -608,13 +608,12 @@ object StreamingOps {
   def markovPairsStream(events: Dataset[Event]): Dataset[TransitionStep] = {
     val spark = events.sparkSession
     import spark.implicits._
-    def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
     events.filter(e => e.event_type != null)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[LastTypeState, TransitionStep](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (userId: Long, rows: Iterator[Event], state: GroupState[LastTypeState]) =>
-          val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
+          val sorted = inEventOrder(rows)
           val out = Seq.newBuilder[TransitionStep]
           var last = state.getOption
           for (e <- sorted) {

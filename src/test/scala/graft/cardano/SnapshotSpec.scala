@@ -225,4 +225,23 @@ class SnapshotSpec extends AnyFunSuite with SparkTest {
     assert(periods > 0)
     assert(probes == 1, s"$probes tip probes in one cycle")
   }
+
+  test("a stop request ends runContinuously's poll wait promptly") {
+    val store = new TableStore(spark, Files.createTempDirectory("poll-out").toString)
+    new SyncDriver(spark, srcDir, store, 120).catchUp()
+    val secondProbe = new java.util.concurrent.CountDownLatch(2)
+    val driver = new SyncDriver(spark, srcDir, store, 120) {
+      override def cardanoTip(): Option[java.sql.Timestamp] = {
+        val tip = super.cardanoTip(); secondProbe.countDown(); tip
+      }
+    }
+    // cycle 1 finds nothing to sync; cycle 2 sees the same tip and waits 60 s
+    val t = new Thread(() => driver.runContinuously(pollSeconds = 60))
+    t.start()
+    assert(secondProbe.await(120, java.util.concurrent.TimeUnit.SECONDS))
+    Thread.sleep(300)
+    driver.requestStop()
+    t.join(2000)
+    assert(!t.isAlive, "driver loop did not stop within 2 s of the request")
+  }
 }

@@ -141,6 +141,21 @@ class Round7Spec extends AnyFunSuite with SparkTest {
       4L -> None))
   }
 
+  test("asof backward and forward both reject a non-integral tie column") {
+    val left = Seq((1L, 1L, ts("2024-01-01 10:00:00")))
+      .toDF("event_id", "user_id", "ts")
+    val right = Seq((1L, ts("2024-01-01 09:58:00"), 1.0, 0.5))
+      .toDF("user_id", "ts", "v", "tie")
+    for ((name, join) <- Seq(
+        "asofJoin" -> (Joins.asofJoin _), "asofJoinForward" -> (Joins.asofJoinForward _)))
+      withClue(name) {
+        val e = intercept[IllegalArgumentException] {
+          join(left, right, Seq("user_id"), "ts", Seq("v"), Seq("tie"))
+        }
+        assert(e.getMessage.contains("integral"))
+      }
+  }
+
   // ---- VectorExprs.JlProject ----------------------------------------------
 
   test("jl_project: matches the sign-matrix fold, ragged vectors sum present dims") {

@@ -20,6 +20,14 @@ class PlanSpec extends AnyFunSuite with SparkTest {
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
   }
 
+  test("every query is registered in one family, with an oracle") {
+    val families = Seq(CoreQueries.all, ExtQueries.all, GraphQueries.all,
+      PipelineQueries.all, EvalQueries.all)
+    assert(Queries.all.size == families.map(_.size).sum,
+      "a query name is registered in two families")
+    assert(Queries.all.keySet == Queries.oracles.keySet)
+  }
+
   test("q1_agg: column pruning + two-phase hash aggregation") {
     val p = plan(CoreQueries.q1Agg(spark, dir))
     // scan must not read all 11 lineitem columns
