@@ -52,7 +52,6 @@ object JdbcSink {
     */
   def export(store: TableStore, url: String,
       tables: Seq[String] = insertOrder): Seq[(String, Long)] = {
-    val spark = store.spark
     val props = new java.util.Properties()
     props.setProperty("batchsize", BatchSize.toString)
 
@@ -74,8 +73,7 @@ object JdbcSink {
     } finally conn.close()
 
     tables.map { t =>
-      val df = store.read(t).coalesce(
-        spark.conf.get(JdbcSource.NumPartitionsConf, "8").toInt).persist()
+      val df = store.read(t).coalesce(JdbcSource.numPartitions(store.spark)).persist()
       try {
         df.write.mode("append").jdbc(url, s"\"$t\"", props)
         (t, df.count()) // served from the persisted blocks, no re-read

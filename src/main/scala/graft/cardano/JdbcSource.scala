@@ -73,6 +73,10 @@ object JdbcSource {
     * table exported by [[JdbcSink]]. */
   val NumPartitionsConf = "spark.graft.jdbc.numPartitions"
 
+  /** The session's [[NumPartitionsConf]], 8 when unset. */
+  def numPartitions(spark: SparkSession): Int =
+    spark.conf.get(NumPartitionsConf, "8").toInt
+
   /** JDBC fetch size per cursor (rows per round trip). */
   private val FetchSize = 10000
 
@@ -112,7 +116,7 @@ object JdbcSource {
       schema: StructType): DataFrame = {
     val props = new java.util.Properties()
     props.setProperty("fetchsize", FetchSize.toString)
-    val n = spark.conf.get(NumPartitionsConf, "8").toInt
+    val n = numPartitions(spark)
     val raw = idBounds(url, name) match {
       case Some((lo, hi)) if n > 1 && hi > lo =>
         spark.read.jdbc(url, name, "id", lo, hi, n, props)
