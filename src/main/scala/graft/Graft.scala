@@ -74,10 +74,10 @@ object Graft {
   }
 
   /** Expose the native kernels (`graft_mix64`, `graft_dot`,
-    * `graft_simhash64`, `graft_minhash`) as SQL functions on a live
-    * session — same codegen'd expressions the DataFrame operators use.
-    * (New sessions can set `spark.sql.extensions=graft.GraftExtensions`
-    * instead.)
+    * `graft_simhash64`, `graft_word_shingle_hashes`, `graft_minhash`) as
+    * SQL functions on a live session — same codegen'd expressions the
+    * DataFrame operators use. (New sessions can set
+    * `spark.sql.extensions=graft.GraftExtensions` instead.)
     */
   def registerFunctions(spark: SparkSession): Unit =
     GraftExtensions.register(spark)

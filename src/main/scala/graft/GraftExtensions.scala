@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.ext.{HashExprs, MinHashSig, SimHash64, VectorExprs}
+import graft.ext.{HashExprs, MinHashSig, SimHash64, TextShingles, VectorExprs}
 
 /** SQL surface for the native kernels — the `SparkSessionExtensions`
   * integration point, so a pure-SQL user gets the same codegen'd
@@ -17,8 +17,9 @@ import graft.ext.{HashExprs, MinHashSig, SimHash64, VectorExprs}
   * Functions: `graft_mix64(bigint)` (splitmix64, the determinism
   * primitive behind sampling/splits/negatives), `graft_dot(a, b)`
   * (ordered-fold double dot product), `graft_simhash64(text)`,
-  * `graft_minhash(shingle_hashes, k)` (k-permutation signature over a
-  * BIGINT-array of shingle hashes; k must be a literal).
+  * `graft_word_shingle_hashes(text, n)` (distinct word n-gram hashes; n
+  * must be a literal), `graft_minhash(shingle_hashes, k)` (k-permutation
+  * signature over a BIGINT-array of shingle hashes; k must be a literal).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -57,6 +58,15 @@ object GraftExtensions {
         case Seq(a, b) => VectorExprs.DotProduct(a, b)
         case args => throw new IllegalArgumentException(
           s"graft_dot expects 2 arguments, got ${args.size}")
+      }),
+    (FunctionIdentifier("graft_word_shingle_hashes"),
+      info("graft_word_shingle_hashes",
+        "graft_word_shingle_hashes(text, n) - distinct word n-gram hashes of a string; n literal"),
+      {
+        case Seq(text, n) if n.foldable =>
+          TextShingles.WordShingleHashes(text, n.eval().asInstanceOf[Number].intValue())
+        case _ => throw new IllegalArgumentException(
+          "graft_word_shingle_hashes expects (text, n) with literal n")
       }),
     (FunctionIdentifier("graft_minhash"),
       info("graft_minhash",

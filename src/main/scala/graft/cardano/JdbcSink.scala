@@ -31,7 +31,9 @@ import java.sql.DriverManager
   * parallel batched connections (10000 rows per round trip). This is the
   * O(table) full-state integration surface; a per-period O(delta) feed would ship
   * only the append tables' new delta dirs instead of re-shipping the
-  * dimension tables every period.
+  * dimension tables every period. So the daemon does not call it: it is a
+  * library call whose caller passes the target URL, and no `PANTASIA_*`
+  * setting configures it.
   */
 object JdbcSink {
 

@@ -1,25 +1,29 @@
 package graft.cardano
 
-/** Env-var configuration surface with reference parity
-  * (`/root/reference/app/settings.py:1-12`, `.env.template`): the same
+/** Env-var configuration surface with reference parity (the reference's
+  * `app/settings.py:1-12` and `.env.template`): the same
   * `PANTASIA_`-prefixed variables, same names, same defaults, plus an
   * optional `.env` properties file with pydantic's precedence —
   * process env beats the file, the file beats code defaults.
   *
-  * Only the settings the port reads are fields; the reference's
-  * `IN_MEMORY_INDEX`, `ENVIRONMENT` and `DB_BACKUP_PATH` are ignored like
-  * any unknown key. The retry budget and the log-config path are engine
-  * extensions the reference hard-codes; they follow the same `PANTASIA_`
-  * convention so one deployment surface configures everything.
+  * Every field is read by the daemon ([[Daemon]]):
+  *   - `timeInterval` (`PANTASIA_TIME_INTERVAL`, minutes), `maxRetries`
+  *     and `backoffMillis` size the [[SyncDriver]]'s period grid and its
+  *     retry;
+  *   - `logLevel` and `logConfig` configure logging ([[LogConfig]]);
+  *   - the five `cdb*` fields make [[cdbUrl]], the source the daemon
+  *     syncs from when it is given no source argument.
+  * The reference's `DB_*` target settings, `IN_MEMORY_INDEX`,
+  * `ENVIRONMENT` and `DB_BACKUP_PATH` are ignored like any unknown key:
+  * the sink of record is the [[TableStore]] root the daemon is given, and
+  * [[JdbcSink.export]] takes its target URL as an argument. The retry
+  * budget and the log-config path are engine extensions the reference
+  * hard-codes; they follow the same `PANTASIA_` convention so one
+  * deployment surface configures everything.
   */
 final case class Settings(
     timeInterval: Long = 120,
     logLevel: String = "INFO",
-    dbHost: String = "localhost",
-    dbPort: Int = 5432,
-    dbUser: String = "postgres",
-    dbPass: String = "postgres",
-    dbName: String = "pantasia",
     cdbHost: String = "localhost",
     cdbPort: Int = 5433,
     cdbUser: String = "postgres",
@@ -29,16 +33,12 @@ final case class Settings(
     backoffMillis: Long = 500,
     logConfig: String = "") {
 
-  /** Source (cardano-db-sync mirror) JDBC URL from the CDB_* settings —
-    * pass as `sourceDir` to SyncDriver/MainQuery (JdbcSource.isJdbc
-    * routes it).
+  /** Source (cardano-db-sync mirror) JDBC URL from the CDB_* settings:
+    * the daemon's source when it is given none (`JdbcSource.isJdbc` routes
+    * it).
     */
   def cdbUrl: String =
     s"jdbc:postgresql://$cdbHost:$cdbPort/$cdbName?user=$cdbUser&password=$cdbPass"
-
-  /** Target warehouse JDBC URL from the DB_* settings (JdbcSink). */
-  def dbUrl: String =
-    s"jdbc:postgresql://$dbHost:$dbPort/$dbName?user=$dbUser&password=$dbPass"
 }
 
 object Settings {
@@ -58,11 +58,6 @@ object Settings {
     Settings(
       timeInterval = timeInterval,
       logLevel = v("LOG_LEVEL").getOrElse(d.logLevel),
-      dbHost = v("DB_HOST").getOrElse(d.dbHost),
-      dbPort = v("DB_PORT").map(_.toInt).getOrElse(d.dbPort),
-      dbUser = v("DB_USER").getOrElse(d.dbUser),
-      dbPass = v("DB_PASS").getOrElse(d.dbPass),
-      dbName = v("DB_NAME").getOrElse(d.dbName),
       cdbHost = v("CDB_HOST").getOrElse(d.cdbHost),
       cdbPort = v("CDB_PORT").map(_.toInt).getOrElse(d.cdbPort),
       cdbUser = v("CDB_USER").getOrElse(d.cdbUser),

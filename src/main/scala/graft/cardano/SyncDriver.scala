@@ -50,9 +50,8 @@ class SyncDriver(
     * tables; genesis when empty.
     */
   def pantasiaTip(): Timestamp = {
-    val a = store.read("asset_tx").agg(max(col("tx_time")).as("t"))
-    val b = store.read("asset_mint_tx").agg(max(col("tx_time")).as("t"))
-    val m = a.unionByName(b).agg(max(col("t"))).collect()(0)
+    val m = Seq("asset_tx", "asset_mint_tx").map(store.read(_).select("tx_time"))
+      .reduce(_.unionByName(_)).agg(max(col("tx_time"))).collect()(0)
     if (m.isNullAt(0)) genesis else m.getTimestamp(0)
   }
 
@@ -129,8 +128,10 @@ class SyncDriver(
 
   @volatile private var stopRequested = false
 
-  /** ST7: request a graceful stop — the current period finishes (and
-    * commits) before the loop exits; nothing is torn down mid-write.
+  /** ST7: request a graceful stop. The period in flight finishes and
+    * commits, then [[catchUp]] and [[runContinuously]] return; nothing is
+    * torn down mid-write. JVM shutdown calls this from the hook that
+    * [[runContinuously]] registers.
     */
   def requestStop(): Unit = stopRequested = true
 
@@ -146,12 +147,24 @@ class SyncDriver(
 
   /** ST4 + ST7: the reference's outer daemon loop — catch up, then poll
     * the source tip every `pollSeconds` (default 10s, `app/main.py:52-53`),
-    * until `requestStop()` (or the registered JVM shutdown hook) fires.
-    * Each cycle probes the source tip once. Returns total periods run.
+    * until [[requestStop]] or JVM shutdown (SIGTERM, SIGINT). Each cycle
+    * probes the source tip once. Returns total periods run.
+    *
+    * Shutdown order. Spark stops its context from a hook it registers with
+    * Hadoop's `ShutdownHookManager` at priority 40, and Hadoop runs its
+    * hooks one at a time, highest priority first. The loop registers its
+    * own hook there at priority 50: it requests a stop and waits for the
+    * loop to return, so the period in flight commits before Spark stops.
+    * Hadoop waits 30 s for each hook by default
+    * (`hadoop.service.shutdown.timeout`). A period still running after
+    * that is cut when Spark stops under it, and commits nothing, like any
+    * failed period.
     */
   def runContinuously(pollSeconds: Int = 10, maxCycles: Int = Int.MaxValue): Int = {
-    val hook = new Thread(() => requestStop())
-    Runtime.getRuntime.addShutdownHook(hook)
+    val exited = new java.util.concurrent.CountDownLatch(1)
+    val hook: Runnable = () => { requestStop(); exited.await() }
+    val hooks = org.apache.hadoop.util.ShutdownHookManager.get()
+    hooks.addShutdownHook(hook, 50)
     var total = 0
     var lastTip: Option[java.sql.Timestamp] = None
     var cycles = 0
@@ -166,7 +179,8 @@ class SyncDriver(
       }
       total
     } finally {
-      try Runtime.getRuntime.removeShutdownHook(hook)
+      exited.countDown()
+      try hooks.removeShutdownHook(hook)
       catch { case _: IllegalStateException => } // already shutting down
     }
   }

@@ -106,8 +106,10 @@ class TableStore(val spark: SparkSession, val root: String) {
       s"manifest rename failed: $tmp -> $manifestFile")
   }
 
+  /** A local relation, so the optimizer prunes it from the plans that
+    * read it, and an aggregate over empty tables alone runs no job. */
   private def empty(name: String): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+    spark.createDataFrame(java.util.Collections.emptyList[Row](),
       Schemas.targetTables(name))
 
   /** The version numbers of a table's `delta` or `full` (`kind`) dirs,
@@ -194,23 +196,19 @@ class TableStore(val spark: SparkSession, val root: String) {
     writeManifest(manifest() ++ versions)
 
   /** SRC5: next id = max(id)+1 (1 for an empty table) of each of `names`,
-    * from ONE aggregation: the tables' `id` columns, tagged by table, in a
-    * single `groupBy(table).max` — two Spark jobs for all tables. Spark
+    * from ONE aggregation over their committed versions: the tables' `id`
+    * columns, tagged by table, in a single `groupBy(table).max` — two
+    * Spark jobs for all tables, none when all are empty. Spark
     * does not answer `max()` from parquet footer statistics by default,
     * so each table is a column scan.
     */
   def nextIds(names: Seq[String]): Map[String, Long] = {
     val committed = manifest()
-    val scans = names.flatMap { name =>
-      val dirs = versionDirs(name, committed.getOrElse(name, 0L))
-      if (dirs.isEmpty) None
-      else Some(spark.read.schema(Schemas.targetTables(name)).parquet(dirs: _*)
-        .select(lit(name).as("t"), col("id").cast("long").as("id")))
-    }
-    val maxIds =
-      if (scans.isEmpty) Map.empty[String, Long]
-      else scans.reduce(_.unionByName(_)).groupBy(col("t")).agg(max(col("id")))
-        .collect().collect { case r if !r.isNullAt(1) => r.getString(0) -> r.getLong(1) }.toMap
+    val maxIds = names
+      .map(n => readVersion(n, committed.getOrElse(n, 0L))
+        .select(lit(n).as("t"), col("id").cast("long").as("id")))
+      .reduce(_.unionByName(_)).groupBy(col("t")).agg(max(col("id")))
+      .collect().collect { case r if !r.isNullAt(1) => r.getString(0) -> r.getLong(1) }.toMap
     names.map(n => n -> maxIds.get(n).fold(1L)(_ + 1L)).toMap
   }
 

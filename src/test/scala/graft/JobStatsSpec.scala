@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.functions.{broadcast, col}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -60,6 +60,15 @@ class JobStatsSpec extends AnyFunSuite with SparkTest with BeforeAndAfterAll {
     assert(rows == 10)
     assert(ran >= 2, s"$ran jobs; a broadcast and the count expected")
     assert(stats("broadcast").jobs == ran)
+  }
+
+  test("an AQE query's stages are named by the call site of its action") {
+    JobStats.phase(sc, "aqe") {
+      spark.range(1000).groupBy(col("id") % 7).count().collect()
+    }
+    val names = stats("aqe").stageRows.map(_.name)
+    assert(names.size >= 2, s"a shuffle map stage and a result stage expected: $names")
+    assert(names.forall(_.startsWith("collect at JobStatsSpec.scala:")), names)
   }
 
   test("phases run back to back keep separate totals") {

@@ -16,7 +16,6 @@ class SettingsSpec extends AnyFunSuite with SparkTest {
   test("defaults match the reference's Settings class") {
     val s = Settings()
     assert(s.timeInterval == 120 && s.logLevel == "INFO")
-    assert(s.dbHost == "localhost" && s.dbPort == 5432 && s.dbName == "pantasia")
     assert(s.cdbHost == "localhost" && s.cdbPort == 5433 && s.cdbName == "cexplorer")
   }
 
@@ -36,9 +35,12 @@ class SettingsSpec extends AnyFunSuite with SparkTest {
       "PANTASIA_MAX_RETRIES" -> "5", "PANTASIA_BACKOFF_MILLIS" -> "7",
       "PANTASIA_NO_SUCH_KEY" -> "x", "UNPREFIXED" -> "y"))
     assert(s.timeInterval == 90 && s.logLevel == "DEBUG")
-    assert(s.dbUrl == "jdbc:postgresql://dbh:15432/n1?user=u1&password=p1")
     assert(s.cdbUrl == "jdbc:postgresql://ch:15433/n2?user=u2&password=p2")
     assert(s.maxRetries == 5 && s.backoffMillis == 7)
+    // the reference's target DB_* keys configure nothing here
+    val dbOnly = Map("HOST" -> "dbh", "PORT" -> "15432", "USER" -> "u1",
+      "PASS" -> "p1", "NAME" -> "n1").map { case (k, v) => s"PANTASIA_DB_$k" -> v }
+    assert(Settings.fromMap(dbOnly) == Settings())
   }
 
   test(".env file is read underneath the process env (pydantic precedence)") {
@@ -46,7 +48,7 @@ class SettingsSpec extends AnyFunSuite with SparkTest {
     Files.write(envFile,
       """# comment line
         |PANTASIA_TIME_INTERVAL=60
-        |export PANTASIA_DB_HOST="filehost"
+        |export PANTASIA_CDB_HOST="filehost"
         |PANTASIA_CDB_NAME='filedb'
         |
         |not a kv line is skipped? no - has no equals
@@ -54,9 +56,9 @@ class SettingsSpec extends AnyFunSuite with SparkTest {
     val s = Settings.load(Some(envFile.toString),
       env = Map("PANTASIA_TIME_INTERVAL" -> "30"))
     assert(s.timeInterval == 30, "process env must beat the .env file")
-    assert(s.dbHost == "filehost", "export prefix + quotes stripped")
+    assert(s.cdbHost == "filehost", "export prefix + quotes stripped")
     assert(s.cdbName == "filedb")
-    assert(s.dbPort == 5432, "unset keys keep defaults")
+    assert(s.cdbPort == 5433, "unset keys keep defaults")
     val s2 = Settings.load(None, env = Map.empty)
     assert(s2 == Settings(), "no file, no env -> pure defaults")
   }

@@ -387,12 +387,12 @@ class ExtSpec extends AnyFunSuite with SparkTest {
   }
 
   test("native kernels are callable from SQL after registration") {
-    GraftFunctions.register(spark)
+    graft.Graft.registerFunctions(spark)
     val r = spark.sql(
-      """SELECT simhash64('hello world') AS sh,
-        |       word_shingle_hashes('a b c d', 2) AS ws,
-        |       dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS dp,
-        |       minhash_signature(word_shingle_hashes('a b c d', 2), 8) AS mh""".stripMargin)
+      """SELECT graft_simhash64('hello world') AS sh,
+        |       graft_word_shingle_hashes('a b c d', 2) AS ws,
+        |       graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS dp,
+        |       graft_minhash(graft_word_shingle_hashes('a b c d', 2), 8) AS mh""".stripMargin)
       .collect()(0)
     assert(r.getLong(0) == SimHash64.compute(
       org.apache.spark.unsafe.types.UTF8String.fromString("hello world")))

@@ -38,6 +38,10 @@ class SqlFunctionsSpec extends AnyFunSuite with SparkTest {
       spark.sql("SELECT graft_minhash(array(1L), id) FROM range(1)").collect()
     }
     assert(e.getMessage.contains("literal k") || e.getMessage.contains("graft_minhash"))
+    val en = intercept[Exception] {
+      spark.sql("SELECT graft_word_shingle_hashes('a b', id) FROM range(1)").collect()
+    }
+    assert(en.getMessage.contains("literal n"))
     val e2 = intercept[Exception] {
       spark.sql("SELECT graft_mix64(1, 2)").collect()
     }
@@ -52,7 +56,7 @@ class SqlFunctionsSpec extends AnyFunSuite with SparkTest {
     new graft.GraftExtensions().apply(ext)
     // the extension object carries the same builders the registry test
     // exercised; reaching here without a throw means injectFunction
-    // accepted all four (FunctionIdentifier, ExpressionInfo, builder) rows
-    assert(graft.GraftExtensions.functions.size == 4)
+    // accepted all five (FunctionIdentifier, ExpressionInfo, builder) rows
+    assert(graft.GraftExtensions.functions.size == 5)
   }
 }
