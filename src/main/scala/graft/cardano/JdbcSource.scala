@@ -11,11 +11,14 @@ import org.apache.spark.sql.types.StructType
   * The reference's only real source is a psycopg2 connection to the
   * cardano-db-sync Postgres (`/root/reference/app/db/postgres.py:23-50`;
   * main query at `:332-395`). Here the same role is a Spark JDBC relation
-  * per source table: pass a JDBC URL (credentials as standard URL query
-  * parameters, e.g. `jdbc:postgresql://host/cexplorer?user=u&password=p`)
-  * as the sync's `sourceDir` and the whole pipeline — tip probe, period
-  * stepping, extraction — runs against the live database unchanged,
-  * because every source read goes through `MainQuery.sourceTable`.
+  * per source table: pass a JDBC URL (e.g.
+  * `jdbc:postgresql://host:5433/cexplorer`) as the sync's `sourceDir` and
+  * the user and password as its connection properties, and the whole
+  * pipeline — tip probe, period stepping, extraction — runs against the
+  * live database unchanged, because every source read goes through
+  * `MainQuery.sourceTable`. The credentials stay out of the URL because
+  * drivers repeat the URL in their error messages ("No suitable driver
+  * found for …"), which end up in the daemon's log.
   *
   * Scale shape (what changes at a 1000-executor cluster vs one psycopg2
   * cursor):
@@ -34,11 +37,11 @@ import org.apache.spark.sql.types.StructType
   * Tables without a resolvable `id` (or empty ones) fall back to a single
   * partition — correct, just serial.
   *
-  * Dialect note (Postgres vs the in-sandbox Derby the specs run on):
-  * equivalence is proven against Derby (`JdbcSourceSpec` — parquet ≡ JDBC
-  * sync, predicate pushed into the remote WHERE) because no Postgres
-  * server exists in this environment. The dialect-sensitive surface is
-  * small and handled by Spark's `PostgresDialect` automatically:
+  * Dialect note (Postgres vs the Derby the specs run on): equivalence is
+  * proven against Derby (`JdbcSourceSpec` — parquet ≡ JDBC sync, predicate
+  * pushed into the remote WHERE), because the build has no Postgres JDBC
+  * driver. The dialect-sensitive surface is small and handled by Spark's
+  * `PostgresDialect` automatically:
   *  - `numeric(20,0)` (quantities, `postgres.py:131,140`) maps to
   *    `DecimalType(20,0)` on both engines — the schemas in
   *    `Schemas.scala` already declare it, and `spark.read.jdbc` verifies
@@ -50,19 +53,11 @@ import org.apache.spark.sql.types.StructType
   *    Postgres driver, same as the parquet fixtures;
   *  - `timestamp` (no tz) maps to `TimestampType` under the session's
   *    pinned UTC on both.
-  * If a real Postgres becomes reachable, run the same JdbcSourceSpec
-  * equivalence suite against it with only the URL changed.
-  *
-  * Round-10 update: the sandbox gained Postgres 15 SERVER binaries (but
-  * still no Postgres JDBC driver jar, and zero egress to fetch one — so
-  * the in-JVM spec stays on Derby). Every dialect fact above, plus the
-  * reference tip-probe SQL shapes and the Spark-style quoted pushdown
-  * WHERE, is now EXECUTED against a real Postgres 15.18 by
-  * `tools/check_pg_dialect.sh` (7/7 pass recorded in PERFORMANCE.md):
-  * numeric(20,0) 20-digit round-trip, lowercase identifier folding,
-  * bytea hex round-trip, client-TZ-invariant plain timestamps, the
-  * OFFSET-3 tip probe, the two-CTE UNION ALL sink tip, and the pushed
-  * half-open time range.
+  * `tools/check_pg_dialect.sh` runs every fact above, the reference's
+  * tip-probe SQL and the pushed half-open time range against a real
+  * Postgres 15 server through `psql` (7/7 recorded in PERFORMANCE.md).
+  * With a Postgres driver on the classpath, JdbcSourceSpec runs against
+  * it with only the URL changed.
   */
 object JdbcSource {
 
@@ -87,8 +82,9 @@ object JdbcSource {
     * (timeout, connection) propagate so the period-level retry handles
     * them instead of the read silently collapsing to one connection.
     */
-  private def idBounds(url: String, table: String): Option[(Long, Long)] = {
-    val conn = DriverManager.getConnection(url)
+  private def idBounds(url: String, props: java.util.Properties,
+      table: String): Option[(Long, Long)] = {
+    val conn = DriverManager.getConnection(url, props)
     try {
       val rs = conn.createStatement()
         .executeQuery(s"SELECT MIN(id), MAX(id) FROM $table")
@@ -110,14 +106,16 @@ object JdbcSource {
   /** Read one source table as a partitioned JDBC relation, aligned to the
     * declared schema (exact column names and types; extra remote columns
     * such as the split key are pruned — and the pruning itself pushes down,
-    * so they are not shipped either).
+    * so they are not shipped either). `credentials` (`user`, `password`)
+    * are connection properties, sent with every connection.
     */
   def table(spark: SparkSession, url: String, name: String,
-      schema: StructType): DataFrame = {
+      schema: StructType, credentials: Map[String, String] = Map.empty): DataFrame = {
     val props = new java.util.Properties()
+    credentials.foreach { case (k, v) => props.setProperty(k, v) }
     props.setProperty("fetchsize", FetchSize.toString)
     val n = numPartitions(spark)
-    val raw = idBounds(url, name) match {
+    val raw = idBounds(url, props, name) match {
       case Some((lo, hi)) if n > 1 && hi > lo =>
         spark.read.jdbc(url, name, "id", lo, hi, n, props)
       case _ => spark.read.jdbc(url, name, props)

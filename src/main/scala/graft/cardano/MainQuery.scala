@@ -30,11 +30,13 @@ object MainQuery {
     * `dir` is either a fixture/export directory (`$dir/<name>.parquet`)
     * or a JDBC URL — the reference's live ingress
     * (`/root/reference/app/db/postgres.py:23-50`) — in which case the
-    * table is a partitioned JDBC relation (see [[JdbcSource]]).
+    * table is a partitioned JDBC relation (see [[JdbcSource]]) opened
+    * with the connection properties `credentials`.
     */
-  def sourceTable(spark: SparkSession, dir: String, name: String): DataFrame =
+  def sourceTable(spark: SparkSession, dir: String, name: String,
+      credentials: Map[String, String] = Map.empty): DataFrame =
     if (JdbcSource.isJdbc(dir))
-      JdbcSource.table(spark, dir, name, Schemas.sourceTables(name))
+      JdbcSource.table(spark, dir, name, Schemas.sourceTables(name), credentials)
     else
       spark.read.schema(Schemas.sourceTables(name)).parquet(s"$dir/$name.parquet")
 
@@ -50,16 +52,18 @@ object MainQuery {
     * quantity, address, stake_address, is_mint_tx, tx_time, image, files,
     * metadata, ma_id, tx_id, tx_out_id (null on the burn branch).
     */
-  def extract(spark: SparkSession, dir: String, from: Timestamp, to: Timestamp): DataFrame = {
-    val block       = sourceTable(spark, dir, "block")
+  def extract(spark: SparkSession, dir: String, from: Timestamp, to: Timestamp,
+      credentials: Map[String, String] = Map.empty): DataFrame = {
+    def source(name: String) = sourceTable(spark, dir, name, credentials)
+    val block       = source("block")
       .where(col("time") > lit(from) && col("time") <= lit(to))   // P4, pushed to scan
-    val tx          = sourceTable(spark, dir, "tx")
-    val txOut       = sourceTable(spark, dir, "tx_out")
-    val maTxOut     = sourceTable(spark, dir, "ma_tx_out")
-    val maTxMint    = sourceTable(spark, dir, "ma_tx_mint")
-    val multiAsset  = sourceTable(spark, dir, "multi_asset")
-    val stakeAddr   = sourceTable(spark, dir, "stake_address")
-    val txMetadata  = sourceTable(spark, dir, "tx_metadata")
+    val tx          = source("tx")
+    val txOut       = source("tx_out")
+    val maTxOut     = source("ma_tx_out")
+    val maTxMint    = source("ma_tx_mint")
+    val multiAsset  = source("multi_asset")
+    val stakeAddr   = source("stake_address")
+    val txMetadata  = source("tx_metadata")
 
     // txs in window, with hash/time attached once (collapses J5)
     val txInWindow = tx

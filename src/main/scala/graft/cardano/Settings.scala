@@ -11,8 +11,9 @@ package graft.cardano
   *     and `backoffMillis` size the [[SyncDriver]]'s period grid and its
   *     retry;
   *   - `logLevel` and `logConfig` configure logging ([[LogConfig]]);
-  *   - the five `cdb*` fields make [[cdbUrl]], the source the daemon
-  *     syncs from when it is given no source argument.
+  *   - the five `cdb*` fields make [[cdbUrl]] and [[cdbCredentials]],
+  *     the source the daemon syncs from when it is given no source
+  *     argument.
   * The reference's `DB_*` target settings, `IN_MEMORY_INDEX`,
   * `ENVIRONMENT` and `DB_BACKUP_PATH` are ignored like any unknown key:
   * the sink of record is the [[TableStore]] root the daemon is given, and
@@ -35,10 +36,13 @@ final case class Settings(
 
   /** Source (cardano-db-sync mirror) JDBC URL from the CDB_* settings:
     * the daemon's source when it is given none (`JdbcSource.isJdbc` routes
-    * it).
+    * it). It names no credentials: a driver's error message repeats the
+    * URL, and the log must never carry the password.
     */
-  def cdbUrl: String =
-    s"jdbc:postgresql://$cdbHost:$cdbPort/$cdbName?user=$cdbUser&password=$cdbPass"
+  def cdbUrl: String = s"jdbc:postgresql://$cdbHost:$cdbPort/$cdbName"
+
+  /** The connection properties that go with [[cdbUrl]]. */
+  def cdbCredentials: Map[String, String] = Map("user" -> cdbUser, "password" -> cdbPass)
 }
 
 object Settings {

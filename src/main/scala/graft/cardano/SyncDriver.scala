@@ -14,6 +14,9 @@ import org.apache.spark.sql.functions._
   * PANTASIA_TIME_INTERVAL), last period clamped; each period extracts
   * `(from, to]`, transforms, and commits atomically via TableStore versions
   * (idempotent re-run — our ST6 upgrade over the reference).
+  *
+  * `sourceCredentials` are the connection properties (`user`, `password`)
+  * of a JDBC `sourceDir` ([[JdbcSource]]); a directory source needs none.
   */
 class SyncDriver(
     spark: SparkSession,
@@ -21,24 +24,17 @@ class SyncDriver(
     store: TableStore,
     intervalMinutes: Long = 120,
     maxRetries: Int = 2,
-    backoffMillis: Long = 500) {
+    backoffMillis: Long = 500,
+    sourceCredentials: Map[String, String] = Map.empty) {
 
   require(intervalMinutes > 0, s"intervalMinutes must be positive, got $intervalMinutes")
-
-  /** Env-configured construction (reference parity: the daemon is
-    * configured entirely through `PANTASIA_*`, `app/settings.py:1-12`).
-    */
-  def this(spark: SparkSession, sourceDir: String, store: TableStore,
-      settings: Settings) =
-    this(spark, sourceDir, store, settings.timeInterval,
-      settings.maxRetries, settings.backoffMillis)
 
   /** First native-asset block (`app/db/postgres.py:308`). */
   val genesis: Timestamp = Timestamp.valueOf("2021-03-01 21:47:00")
 
   /** ST1 / SRC3: 4th-newest block time — "don't read the last 3 blocks". */
   def cardanoTip(): Option[Timestamp] = {
-    val rows = MainQuery.sourceTable(spark, sourceDir, "block")
+    val rows = MainQuery.sourceTable(spark, sourceDir, "block", sourceCredentials)
       .select(col("time"))
       .orderBy(col("time").desc, col("id").desc)
       .offset(3).limit(1)
@@ -73,7 +69,7 @@ class SyncDriver(
 
   /** Run one period `(from, to]`: extract → transform → stage → commit. */
   def syncPeriod(from: Timestamp, to: Timestamp): Unit = {
-    val records = MainQuery.extract(spark, sourceDir, from, to)
+    val records = MainQuery.extract(spark, sourceDir, from, to, sourceCredentials)
 
     val next = store.nextIds(Seq("wallet", "collection", "asset", "asset_tx", "asset_mint_tx"))
     val state = Transform.State(
@@ -109,22 +105,25 @@ class SyncDriver(
     * overwrites its own staged dirs. A stop request cancels the backoff
     * and rethrows so shutdown is never delayed by a failing source.
     */
-  def syncPeriodWithRetry(from: Timestamp, to: Timestamp): Unit = {
-    var attempt = 0
-    var done = false
-    while (!done) {
-      try { syncPeriod(from, to); done = true }
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          attempt += 1
-          if (attempt > maxRetries || stopRequested) throw e
-          pause(backoffMillis << (attempt - 1))
-          // a stop that arrived mid-backoff must not trigger another
-          // attempt against a failing source — rethrow immediately
-          if (stopRequested) throw e
-      }
+  def syncPeriodWithRetry(from: Timestamp, to: Timestamp): Unit =
+    withRetry(s"period ($from, $to]")(syncPeriod(from, to))
+
+  private val log = org.apache.logging.log4j.LogManager.getLogger(LogConfig.AppLogger)
+
+  /** Run `body`, and on a non-fatal failure retry it up to `maxRetries`
+    * times after a backoff that doubles from `backoffMillis`. */
+  private def withRetry[T](what: String, attempt: Int = 0)(body: => T): T =
+    try body
+    catch {
+      case scala.util.control.NonFatal(e) if attempt < maxRetries && !stopRequested =>
+        val wait = backoffMillis << attempt
+        log.warn(s"$what failed, retry ${attempt + 1} of $maxRetries in $wait ms: $e")
+        pause(wait)
+        // a stop that arrived mid-backoff must not trigger another
+        // attempt against a failing source — rethrow immediately
+        if (stopRequested) throw e
+        withRetry(what, attempt + 1)(body)
     }
-  }
 
   @volatile private var stopRequested = false
 
@@ -148,29 +147,31 @@ class SyncDriver(
   /** ST4 + ST7: the reference's outer daemon loop — catch up, then poll
     * the source tip every `pollSeconds` (default 10s, `app/main.py:52-53`),
     * until [[requestStop]] or JVM shutdown (SIGTERM, SIGINT). Each cycle
-    * probes the source tip once. Returns total periods run.
+    * probes the source tip once, with the same bounded retry as a period,
+    * so a briefly unreachable source does not end the loop. Returns total
+    * periods run.
     *
     * Shutdown order. Spark stops its context from a hook it registers with
     * Hadoop's `ShutdownHookManager` at priority 40, and Hadoop runs its
     * hooks one at a time, highest priority first. The loop registers its
-    * own hook there at priority 50: it requests a stop and waits for the
-    * loop to return, so the period in flight commits before Spark stops.
-    * Hadoop waits 30 s for each hook by default
-    * (`hadoop.service.shutdown.timeout`). A period still running after
-    * that is cut when Spark stops under it, and commits nothing, like any
-    * failed period.
+    * own hook there at priority 50: it requests a stop and waits up to
+    * [[SyncDriver.StopTimeoutSeconds]] for the loop to return, so the
+    * period in flight commits before Spark stops. A period still running
+    * after that is cut when Spark stops under it, and commits nothing,
+    * like any failed period; the next start re-runs it.
     */
   def runContinuously(pollSeconds: Int = 10, maxCycles: Int = Int.MaxValue): Int = {
     val exited = new java.util.concurrent.CountDownLatch(1)
     val hook: Runnable = () => { requestStop(); exited.await() }
     val hooks = org.apache.hadoop.util.ShutdownHookManager.get()
-    hooks.addShutdownHook(hook, 50)
+    hooks.addShutdownHook(hook, 50, SyncDriver.StopTimeoutSeconds,
+      java.util.concurrent.TimeUnit.SECONDS)
     var total = 0
     var lastTip: Option[java.sql.Timestamp] = None
     var cycles = 0
     try {
       while (!stopRequested && cycles < maxCycles) {
-        val tip = cardanoTip()
+        val tip = withRetry("source tip probe")(cardanoTip())
         if (tip != lastTip) {
           total += catchUp(tip)
           lastTip = tip
@@ -199,4 +200,16 @@ class SyncDriver(
       }
       n
   }
+}
+
+object SyncDriver {
+
+  /** How long JVM shutdown waits for the period in flight to commit
+    * ([[SyncDriver.runContinuously]]): twelve times the largest measured
+    * period, 25.1 s at 400k assets on `local[32]` (PERFORMANCE.md,
+    * ScaleSync). A longer period, from a far larger store or fewer cores,
+    * is cut and re-run on the next start. Compose's `stop_grace_period`
+    * must exceed this plus the 30 s Hadoop gives Spark's own stop hook.
+    */
+  val StopTimeoutSeconds = 300L
 }

@@ -6,8 +6,9 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The container recipe runs the daemon: `docker/Dockerfile`'s CMD names a
-  * main that accepts its arguments, and `docker/docker-compose.yml` keeps
-  * the store the CMD names on a volume. Docker itself is not needed.
+  * main that accepts its arguments and a source the image can read, and
+  * `docker/docker-compose.yml` mounts the store and the source the CMD
+  * names. Docker itself is not needed.
   */
 class DeploymentSpec extends AnyFunSuite {
 
@@ -28,6 +29,20 @@ class DeploymentSpec extends AnyFunSuite {
   /** The application arguments: what follows the jar. */
   private lazy val appArgs: Seq[String] = cmd.drop(cmd.indexWhere(_.endsWith(".jar")) + 1)
 
+  private lazy val compose: Seq[String] = read("docker/docker-compose.yml").linesIterator.toSeq
+
+  /** The volume compose mounts at `target`: a named volume declared at the
+    * top level, or a bind-mounted path. */
+  private def volumeAt(target: String): Option[String] = {
+    val mounts = compose.map(_.trim).filter(_.startsWith("- ")).map(_.drop(2).trim)
+      .flatMap(m => m.split(":") match {
+        case Array(volume, target, _*) => Some(volume -> target)
+        case _ => None
+      })
+    mounts.collectFirst { case (v, `target`) => v }.filter(v =>
+      v.startsWith("/") || v.startsWith(".") || compose.contains(s"  $v:"))
+  }
+
   test("the Dockerfile's CMD runs an object with a main, and sets no master or Spark conf") {
     assert(cmd.head.endsWith("spark-submit"), cmd)
     assert(cmd.contains("--class"), cmd)
@@ -36,33 +51,34 @@ class DeploymentSpec extends AnyFunSuite {
     assert(java.lang.reflect.Modifier.isStatic(main.getModifiers), s"$mainClass.main")
   }
 
-  test("the daemon accepts the CMD's arguments") {
+  test("the daemon accepts the CMD's arguments, and the image can read its source") {
     assert(mainClass == "graft.cardano.Daemon")
-    val (root, _) = Daemon.parseArgs(appArgs)
+    val (root, source) = Daemon.parseArgs(appArgs)
     assert(root.startsWith("/"), s"the store root must be an absolute path: $root")
     for (bad <- Seq(Nil, Seq("a", "b", "c")))
       intercept[IllegalArgumentException](Daemon.parseArgs(bad))
+    source match {
+      case Some(dir) if !JdbcSource.isJdbc(dir) =>
+        assert(volumeAt(dir).nonEmpty, s"compose mounts no volume at the source $dir")
+      case _ => // the PANTASIA_CDB_* database, or a JDBC URL
+        val driver = read("docker/Dockerfile").linesIterator.exists(l =>
+          (l.startsWith("COPY ") || l.startsWith("ADD ")) &&
+            l.contains("postgresql") && l.contains("/opt/spark/jars"))
+        assert(driver, "the CMD's source is a JDBC database, and the image has no JDBC driver")
+    }
   }
 
   test("compose keeps the store root on a volume and outwaits the stop hook") {
     val (root, _) = Daemon.parseArgs(appArgs)
-    val compose = read("docker/docker-compose.yml").linesIterator.toSeq
-    val mounts = compose.map(_.trim).filter(_.startsWith("- ")).map(_.drop(2).trim)
-      .flatMap(m => m.split(":") match {
-        case Array(volume, target, _*) => Some(volume -> target)
-        case _ => None
-      })
-    val volume = mounts.collectFirst { case (v, `root`) => v }
-    assert(volume.nonEmpty, s"no volume mounted at the store root $root: $mounts")
-    // a named volume is declared at the top level; a bind mount is a path
-    assert(volume.get.startsWith("/") || volume.get.startsWith(".") ||
-      compose.contains(s"  ${volume.get}:"), s"volume ${volume.get} is not declared")
+    assert(volumeAt(root).nonEmpty, s"compose mounts no declared volume at the store root $root")
     // docker stop's SIGKILL must not cut the wait of SyncDriver's stop hook,
-    // which Hadoop bounds at 30 s
+    // nor the wait Hadoop then gives Spark's own hook
     val grace = compose.map(_.trim).collectFirst {
       case l if l.startsWith("stop_grace_period:") =>
         l.stripPrefix("stop_grace_period:").trim.stripSuffix("s").toInt
     }
-    assert(grace.exists(_ > 30), s"stop_grace_period must exceed 30 s: $grace")
+    val hooks = SyncDriver.StopTimeoutSeconds +
+      org.apache.hadoop.fs.CommonConfigurationKeysPublic.SERVICE_SHUTDOWN_TIMEOUT_DEFAULT
+    assert(grace.exists(_ > hooks), s"stop_grace_period must exceed $hooks s: $grace")
   }
 }

@@ -35,7 +35,8 @@ class SettingsSpec extends AnyFunSuite with SparkTest {
       "PANTASIA_MAX_RETRIES" -> "5", "PANTASIA_BACKOFF_MILLIS" -> "7",
       "PANTASIA_NO_SUCH_KEY" -> "x", "UNPREFIXED" -> "y"))
     assert(s.timeInterval == 90 && s.logLevel == "DEBUG")
-    assert(s.cdbUrl == "jdbc:postgresql://ch:15433/n2?user=u2&password=p2")
+    assert(s.cdbUrl == "jdbc:postgresql://ch:15433/n2")
+    assert(s.cdbCredentials == Map("user" -> "u2", "password" -> "p2"))
     assert(s.maxRetries == 5 && s.backoffMillis == 7)
     // the reference's target DB_* keys configure nothing here
     val dbOnly = Map("HOST" -> "dbh", "PORT" -> "15432", "USER" -> "u1",
@@ -155,9 +156,7 @@ class SettingsSpec extends AnyFunSuite with SparkTest {
 
     def run(settings: Settings): (Int, TableStore) = {
       val out = Files.createTempDirectory("set-out").toString
-      val store = new TableStore(spark, out)
-      val driver = new SyncDriver(spark, srcDir, store, settings)
-      (driver.catchUp(), store)
+      (Daemon.driver(spark, out, Some(srcDir), settings).catchUp(), new TableStore(spark, out))
     }
     val (nDefault, sDefault) =
       run(Settings.fromMap(Map.empty))
