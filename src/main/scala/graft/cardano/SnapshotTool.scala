@@ -2,65 +2,16 @@ package graft.cardano
 
 import org.apache.hadoop.fs.Path
 
-/** SNK5 (`/root/reference/scripts/backup_restore.py`) re-expressed over the
-  * versioned TableStore layout: pg_dump/gzip/pg_restore/atomic-swap
-  * collapse into pointer operations on immutable version directories —
-  * a snapshot IS an old version, a restore IS a pointer rollback, and the
-  * reference's `<db>_restore` + DROP + RENAME dance disappears entirely.
+/** SNK5's backup half (the reference's `scripts/backup_restore.py`): the
+  * store as one portable file, restored into a fresh root. Snapshots,
+  * rollback and vacuum are version operations and live in [[TableStore]],
+  * the only code that knows how versions sit on disk; this tool treats the
+  * store as a plain file tree and names no path inside it.
   */
 class SnapshotTool(store: TableStore) {
 
   private val fs = new Path(store.root)
     .getFileSystem(store.spark.sparkContext.hadoopConfiguration)
-
-  private def staged(t: String): Seq[Long] =
-    (store.versions(t, "delta") ++ store.versions(t, "full")).distinct.sorted
-
-  /** All on-disk versions per table (committed current marked by the
-    * store's pointer; higher versions are aborted stages).
-    */
-  def listVersions(): Map[String, (Long, Seq[Long])] =
-    Schemas.targetTables.keys.map { t =>
-      t -> (store.currentVersion(t), staged(t))
-    }.toMap
-
-  /** Restore: atomically point every table back to `version` (the
-    * reference's whole-DB restore; per-table maps also work).
-    */
-  def rollback(version: Long): Unit =
-    store.commit(Schemas.targetTables.keys.map { t =>
-      t -> staged(t).filter(_ <= version).maxOption.getOrElse(0L)
-    }.toMap)
-
-  /** Drop staged-but-uncommitted version dirs (aborted periods). */
-  def vacuumStaged(): Int = {
-    var n = 0
-    for (t <- Schemas.targetTables.keys; kind <- Seq("delta", "full")) {
-      val cur = store.currentVersion(t)
-      store.versions(t, kind).filter(_ > cur).foreach { v =>
-        fs.delete(new Path(store.root, s"$t/$kind/v=$v"), true); n += 1
-      }
-    }
-    n
-  }
-
-  /** Drop full-table snapshot versions older than `keep` versions below
-    * current (mutable tables only; delta dirs are all live by design).
-    * Every full version is complete on its own, so the versions strictly
-    * below the newest one at or below the horizon `current - keep` go.
-    */
-  def vacuumSnapshots(keep: Int = 2): Int = {
-    var n = 0
-    for (t <- Schemas.targetTables.keys) {
-      val fulls = store.versions(t, "full")
-      val horizon = store.currentVersion(t) - keep
-      val oldestKept = fulls.filter(_ <= horizon).maxOption.getOrElse(0L)
-      fulls.filter(_ < oldestKept).foreach { v =>
-        fs.delete(new Path(store.root, s"$t/full/v=$v"), true); n += 1
-      }
-    }
-    n
-  }
 
   // --- single-artifact backups (reference scripts/backup_restore.py:53-117,
   // 211-222, 331-353: one compressed file per backup, list/pick UX) --------
@@ -83,10 +34,10 @@ class SnapshotTool(store: TableStore) {
     out.result().sorted
   }
 
-  /** Archive the ENTIRE store (manifest + every version directory of
-    * every table) as ONE portable compressed file
-    * `<backupDir>/<tag>.zip` — the engine's `pg_dump -Fc | gzip`: a
-    * single shippable artifact per backup instead of a directory tree.
+  /** Archive the ENTIRE store (every file under its root) as ONE
+    * portable compressed file `<backupDir>/<tag>.zip` — the engine's
+    * `pg_dump -Fc | gzip`: a single shippable artifact per backup instead
+    * of a directory tree.
     * Entry order is sorted and entry timestamps are pinned, so archiving
     * the same store twice yields byte-identical artifacts. Streams
     * through the Hadoop FS API on both ends (runs against HDFS/S3A).
@@ -121,10 +72,10 @@ class SnapshotTool(store: TableStore) {
     dst.toString
   }
 
-  /** Restore a store from a single archive file into `destRoot` (which
-    * must not already hold a store — restores never clobber silently;
-    * the swap is the caller's explicit rollback/rename, as in the
-    * reference's `<db>_restore` + swap flow).
+  /** Restore a store from a single archive file into `destRoot`, which
+    * must be absent or empty — restores never clobber silently; the swap
+    * is the caller's explicit rename, as in the reference's
+    * `<db>_restore` + swap flow.
     */
   def restoreArchive(archiveFile: String, destRoot: String): Unit = {
     val conf = store.spark.sparkContext.hadoopConfiguration
@@ -132,8 +83,8 @@ class SnapshotTool(store: TableStore) {
     val srcFs = src.getFileSystem(conf)
     val dest = new Path(destRoot)
     val destFs = dest.getFileSystem(conf)
-    require(!destFs.exists(new Path(dest, "_manifest")),
-      s"refusing to restore over an existing store at $destRoot")
+    require(!destFs.exists(dest) || destFs.listStatus(dest).isEmpty,
+      s"refusing to restore over a non-empty $destRoot")
     val zis = new java.util.zip.ZipInputStream(srcFs.open(src))
     val buf = new Array[Byte](1 << 16)
     try {

@@ -32,8 +32,19 @@ class SyncDriver(
   /** First native-asset block (`app/db/postgres.py:308`). */
   val genesis: Timestamp = Timestamp.valueOf("2021-03-01 21:47:00")
 
-  /** ST1 / SRC3: 4th-newest block time — "don't read the last 3 blocks". */
+  /** ST1 / SRC3: 4th-newest block time — "don't read the last 3 blocks".
+    * A source directory with no `block` table yet (a fresh volume that no
+    * export has filled) is an empty chain, like an empty JDBC `block`
+    * table: no tip, and one WARN until the table appears.
+    */
   def cardanoTip(): Option[Timestamp] = {
+    if (!JdbcSource.isJdbc(sourceDir)) {
+      val block = new org.apache.hadoop.fs.Path(sourceDir, "block.parquet")
+      val missing = !block.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(block)
+      if (missing && !sourceMissing) log.warn(s"no source chain yet: $block does not exist; polling")
+      sourceMissing = missing
+      if (missing) return None
+    }
     val rows = MainQuery.sourceTable(spark, sourceDir, "block", sourceCredentials)
       .select(col("time"))
       .orderBy(col("time").desc, col("id").desc)
@@ -126,6 +137,9 @@ class SyncDriver(
     }
 
   @volatile private var stopRequested = false
+
+  /** The last tip probe found no source `block` table. */
+  private var sourceMissing = false
 
   /** ST7: request a graceful stop. The period in flight finishes and
     * commits, then [[catchUp]] and [[runContinuously]] return; nothing is

@@ -27,9 +27,13 @@ import org.apache.spark.sql.functions._
   *     whole each period (O(dim));
   *   - re-running a failed period overwrites its staged dirs (idempotent,
   *     ST6 — an intentional upgrade over the reference);
-  *   - snapshots are free: old versions stay on disk until vacuumed, and
-  *     `readVersion` is the pg_dump/pg_restore path (SNK5) collapsed to a
-  *     pinned read.
+  *   - snapshots are free (SNK5): old versions stay on disk until
+  *     [[vacuumSnapshots]] drops them, [[readVersion]] reads one, and
+  *     [[rollback]] points the manifest back at one.
+  *
+  * This class is the only code that knows how versions sit on disk: every
+  * read, rollback and vacuum resolves a version through one rule,
+  * `versionDirs`. `SnapshotTool` archives the store as a plain file tree.
   *
   * File format: every staged version is Parquet compressed with zstd and
   * written with v2 data pages, whatever the session's defaults.
@@ -62,8 +66,8 @@ class TableStore(val spark: SparkSession, val root: String) {
 
   private def tableDir(name: String) = new Path(root, name)
   private def manifestFile = new Path(root, "_manifest")
-  private def deltaDir(name: String, v: Long) = new Path(tableDir(name), s"delta/v=$v")
-  private def fullDir(name: String, v: Long) = new Path(tableDir(name), s"full/v=$v")
+  private def versionDir(name: String, kind: String, v: Long) =
+    new Path(tableDir(name), s"$kind/v=$v")
 
   /** The committed table→version map. Absent file (fresh store) = all 0. */
   def manifest(): Map[String, Long] = {
@@ -117,7 +121,7 @@ class TableStore(val spark: SparkSession, val root: String) {
     * has staged (per-version `exists` probes would make every read's
     * planning grow with store age).
     */
-  def versions(name: String, kind: String): Seq[Long] = {
+  private def versions(name: String, kind: String): Seq[Long] = {
     val listed =
       try fs.listStatus(new Path(tableDir(name), kind)).toSeq
       catch { case _: java.io.FileNotFoundException => Seq.empty }
@@ -127,14 +131,23 @@ class TableStore(val spark: SparkSession, val root: String) {
     }.sorted
   }
 
-  /** The delta dirs of an append table's version `v`, oldest first
-    * (versions the table skipped have no dir).
-    */
-  private def appendDirs(name: String, v: Long): Seq[String] =
-    versions(name, "delta").filter(_ <= v).map(deltaDir(name, _).toString)
+  /** The full version that version `v` of a mutable table reads: the
+    * newest of `fulls` at or below `v`. */
+  private def fullFor(fulls: Seq[Long], v: Long): Option[Long] = fulls.filter(_ <= v).lastOption
 
-  /** The dirs holding version `v` of a table: a mutable table's `full/v=N`
-    * when it has one, else the append table's delta dirs 1..N.
+  /** The dirs holding version `v` of a table — the one rule by which
+    * reads, [[rollback]] and [[vacuumSnapshots]] resolve a version:
+    *   - a mutable table's `full/v=N`, N by [[fullFor]];
+    *   - else an append table's delta dirs 1..`v`, oldest first (versions
+    *     the table skipped have no dir);
+    *   - else none: the table is empty at `v`.
+    * A mutable table whose every full version lies above `v` had `v`
+    * vacuumed. That fails, naming the oldest version still restorable:
+    * read as empty, it would orphan every fact row.
+    *
+    * A mutable table's current version costs one listing (its own
+    * `full/v=N`) and an append table's two (that probe, then `delta/`);
+    * only a version with neither lists `full/` too.
     *
     * A `full/v=N` holding an `_upsert` marker is a merge-on-read layer
     * staged by an older build: only the rows that period changed. The
@@ -142,24 +155,37 @@ class TableStore(val spark: SparkSession, val root: String) {
     * version would silently lose every other row; such a store must be
     * compacted by the build that wrote it (stage a full version and commit).
     */
-  private def versionDirs(name: String, v: Long): Seq[String] = {
+  private def versionDirs(name: String, v: Long): Seq[Path] = {
     if (v <= 0L) return Seq.empty
-    val full = fullDir(name, v)
+    val full = versionDir(name, "full", v)
     val files =
       try fs.listStatus(full).toSeq
-      catch { case _: java.io.FileNotFoundException => return appendDirs(name, v) }
+      catch { case _: java.io.FileNotFoundException => return dirsBelow(name, v) }
     if (files.exists(_.getPath.getName == "_upsert"))
       throw new IllegalStateException(
         s"$name version $v is a merge-on-read upsert layer ($full/_upsert); " +
           "this build reads only full versions")
-    Seq(full.toString)
+    Seq(full)
+  }
+
+  /** [[versionDirs]] of a version `v` with no `full/v=N` of its own. */
+  private def dirsBelow(name: String, v: Long): Seq[Path] = {
+    val deltas = versions(name, "delta").filter(_ <= v)
+    if (deltas.nonEmpty) return deltas.map(versionDir(name, "delta", _))
+    val fulls = versions(name, "full")
+    fullFor(fulls, v) match {
+      case Some(older) => versionDirs(name, older)
+      case None if fulls.isEmpty => Seq.empty
+      case None => throw new IllegalArgumentException(
+        s"$name version $v was vacuumed; the oldest version still restorable is ${fulls.head}")
+    }
   }
 
   /** Read a table at version `v` (its committed current by default). */
   def readVersion(name: String, v: Long): DataFrame = {
     val dirs = versionDirs(name, v)
     if (dirs.isEmpty) empty(name)
-    else spark.read.schema(Schemas.targetTables(name)).parquet(dirs: _*)
+    else spark.read.schema(Schemas.targetTables(name)).parquet(dirs.map(_.toString): _*)
   }
 
   def read(name: String): DataFrame = readVersion(name, currentVersion(name))
@@ -178,14 +204,14 @@ class TableStore(val spark: SparkSession, val root: String) {
   /** Stage `df` as the table's complete next-version contents. */
   def writeNext(name: String, df: DataFrame): Long = {
     val next = currentVersion(name) + 1
-    stager(df).parquet(fullDir(name, next).toString)
+    stager(df).parquet(versionDir(name, "full", next).toString)
     next
   }
 
   /** Stage `delta` as the table's next-version append. */
   def appendNext(name: String, delta: DataFrame): Long = {
     val next = currentVersion(name) + 1
-    stager(delta).parquet(deltaDir(name, next).toString)
+    stager(delta).parquet(versionDir(name, "delta", next).toString)
     next
   }
 
@@ -194,6 +220,59 @@ class TableStore(val spark: SparkSession, val root: String) {
     */
   def commit(versions: Map[String, Long]): Unit =
     writeManifest(manifest() ++ versions)
+
+  /** Every table's committed version and the versions it has on disk,
+    * ascending; those above the committed one are aborted stages.
+    */
+  def listVersions(): Map[String, (Long, Seq[Long])] = {
+    val committed = manifest()
+    Schemas.targetTables.keys.map { t =>
+      t -> (committed.getOrElse(t, 0L), (versions(t, "delta") ++ versions(t, "full")).distinct.sorted)
+    }.toMap
+  }
+
+  /** Restore (SNK5): atomically point every table back to `version`; a
+    * table already at or below it stays. Each target is resolved by
+    * [[versionDirs]] first, so a version [[vacuumSnapshots]] dropped fails
+    * before the manifest is touched.
+    */
+  def rollback(version: Long): Unit = {
+    require(version >= 0L, s"negative version $version")
+    val committed = manifest()
+    val target = Schemas.targetTables.keys
+      .map(t => t -> math.min(version, committed.getOrElse(t, 0L))).toMap
+    target.foreach { case (t, v) => versionDirs(t, v) }
+    writeManifest(committed ++ target)
+  }
+
+  /** Drop staged-but-uncommitted version dirs (aborted periods). */
+  def vacuumStaged(): Int = {
+    val committed = manifest()
+    val aborted = for {
+      t <- Schemas.targetTables.keys.toSeq
+      kind <- Seq("delta", "full")
+      v <- versions(t, kind) if v > committed.getOrElse(t, 0L)
+    } yield versionDir(t, kind, v)
+    aborted.foreach(fs.delete(_, true))
+    aborted.size
+  }
+
+  /** Drop full versions of the mutable tables that no version from
+    * `current - keep` up reads ([[versionDirs]]): every full version is
+    * complete on its own, so those below the one [[fullFor]] picks at that
+    * horizon go. Delta dirs are all live by design.
+    */
+  def vacuumSnapshots(keep: Int = 2): Int = {
+    require(keep >= 0, s"negative keep $keep")
+    val committed = manifest()
+    val dropped = Schemas.targetTables.keys.toSeq.flatMap { t =>
+      val fulls = versions(t, "full")
+      val oldestKept = fullFor(fulls, committed.getOrElse(t, 0L) - keep).getOrElse(0L)
+      fulls.filter(_ < oldestKept).map(versionDir(t, "full", _))
+    }
+    dropped.foreach(fs.delete(_, true))
+    dropped.size
+  }
 
   /** SRC5: next id = max(id)+1 (1 for an empty table) of each of `names`,
     * from ONE aggregation over their committed versions: the tables' `id`

@@ -237,17 +237,6 @@ object Dedup {
     minhashProbeTagged(sigs, numHashes, bands, threshold, maxBucket)
   }
 
-  /** [[minhashPairsIncremental]] from a PRE-MATERIALIZED tagged
-    * signature table `(id, __new, sig)` — same probe core (fan-out ∝
-    * the new batch), shared signature pass (see [[minhashSigs]]).
-    */
-  def minhashPairsIncrementalFromSigs(taggedSigs: DataFrame,
-      numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.8,
-      maxBucket: Long = 500): DataFrame =
-    minhashProbeTagged(
-      taggedSigs.select(col("id"), col("__new"), col("sig")),
-      numHashes, bands, threshold, maxBucket)
-
   /** The LSH index of a corpus, as two PERSISTABLE id-sized tables:
     * `(id, sig)` signatures and `(id, band, h)` band-bucket postings —
     * exactly the state [[minhashPairsIncremental]] derives from text on

@@ -146,9 +146,8 @@ object Sketches {
     * the corpus — same rationale as countMinCounters.
     */
   /** The per-row (bucket, rho) projection of the register build — narrow
-    * and codegen'd; shared by the batch aggregation below and the
-    * streaming register maintenance (`StreamingOps.hllRegisterStream`,
-    * where `max` is the associative streaming-safe combine). Extra
+    * and codegen'd; the aggregation below runs unchanged on a stream,
+    * where `max` is the associative streaming-safe combine. Extra
     * columns in `df` (e.g. an event-time column for watermarking) are
     * carried through.
     */

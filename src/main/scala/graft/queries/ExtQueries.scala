@@ -1089,10 +1089,6 @@ object ExtQueries {
     s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
-  /** Test hook: drop memoized BPE trainings (ADVICE r07 — stale-memo guard). */
-  private[graft] def clearBpeMemo(): Unit =
-    bpeTrainMemo.synchronized(bpeTrainMemo.clear())
-
   /** Unigram-LM tokenizer training (SentencePiece-style full-lattice EM,
     * 2 iterations — Vocab.unigramTrain). The whole EM trajectory is
     * deterministic decimals (round-6 piece costs, exact decimal lattice

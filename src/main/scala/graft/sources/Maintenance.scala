@@ -47,53 +47,6 @@ object Maintenance {
     fs.delete(old, true)
   }
 
-  /** Snapshot the table dir as `<path>.snapshots/<tag>` — the engine's
-    * form of the reference's dump/restore tooling
-    * (`scripts/backup_restore.py:53-98`): a parquet table's copy IS its
-    * consistent backup (immutable files, no live transaction state to
-    * quiesce). Copies through the Hadoop FS API so the same code runs on
-    * HDFS/S3A; on object stores a server-side copy is metadata-speed.
-    */
-  def snapshot(spark: SparkSession, path: String, tag: String): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dst = new Path(s"$path.snapshots/$tag")
-    if (fs.exists(dst)) sys.error(s"snapshot: $tag already exists for $path")
-    fs.mkdirs(dst.getParent)
-    org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, dst, false, true,
-      spark.sparkContext.hadoopConfiguration)
-  }
-
-  def listSnapshots(spark: SparkSession, path: String): Seq[String] = {
-    val p = new Path(s"$path.snapshots")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName).toSeq.sorted
-  }
-
-  /** Restore `tag` over the live table with the same staged atomic swap
-    * as `compact` (the reference's restore-into-`<db>_restore` +
-    * DROP/RENAME dance, `scripts/backup_restore.py:120-208`): the
-    * snapshot is first COPIED to a staging dir (the snapshot itself stays
-    * restorable again), then swapped in; a crash mid-restore leaves
-    * either the old table or the new one, never a mix.
-    */
-  def restore(spark: SparkSession, path: String, tag: String): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = new Path(s"$path.snapshots/$tag")
-    if (!fs.exists(src)) sys.error(s"restore: no snapshot $tag for $path")
-    val tmp = new Path(path + ".restore.tmp")
-    val old = new Path(path + ".restore.old")
-    fs.delete(tmp, true); fs.delete(old, true)
-    org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, tmp, false, true,
-      spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && !fs.rename(p, old))
-      sys.error(s"restore: could not stage $path aside")
-    if (!fs.rename(tmp, p)) { fs.rename(old, p); sys.error(s"restore: swap failed for $path") }
-    fs.delete(old, true)
-  }
-
   /** Write `df` date-partitioned on `tsCol` (one directory per day).
     * Readers filtering on `date` prune partitions before any file I/O —
     * the parquet-dir analog of the reference's indexed `block.time` range

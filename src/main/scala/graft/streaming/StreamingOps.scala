@@ -460,38 +460,6 @@ object StreamingOps {
         hll_sketch_estimate(col("sketch")).as("approx_distinct"),
         col("sketch"))
 
-  /** Deterministic streaming HyperLogLog: maintains the SAME 256-register
-    * integer table as `Sketches.hllRegisters`, incrementally — the
-    * per-row (bucket, rho) projection is the shared batch kernel and the
-    * combine is `max`, which is associative and order-free, so after any
-    * micro-batch the registers equal the batch build over everything seen
-    * (pinned by the streaming==batch spec). State is bounded at 256 rows
-    * forever, the extreme case of sketch-sized streaming state; unlike
-    * `sketchDistinctStream`'s engine-internal binary above, these
-    * registers are engine-portable: persist them per period and any
-    * system that can `max` integers merges them.
-    */
-  def hllRegisterStream(events: DataFrame, keyCol: String): DataFrame =
-    graft.ext.Sketches.hllRho(events, keyCol)
-      .groupBy("bucket")
-      .agg(org.apache.spark.sql.functions.max("rho").as("r"))
-
-  /** Deterministic streaming theta sketches: maintains the SAME per-group
-    * bottom-k hash sample as `Sketches.thetaSketches`, incrementally —
-    * the bottom-k Aggregator's merge is an associative order-free trim
-    * (min-k of a union is min-k of min-k's), so after any micro-batch
-    * each group's sketch equals the batch build over everything seen
-    * (pinned by the streaming==batch spec), and
-    * `Sketches.thetaAlgebraFromSketches` runs unchanged on the streamed
-    * table — live "how much of stream B is new vs corpus A" with no
-    * corpus access. State is O(k) longs per group forever, and the
-    * sketches are engine-portable integer arrays (persist per period;
-    * any system that can merge-and-trim sorted longs unions them).
-    */
-  def thetaSketchStream(events: DataFrame, groupCol: String,
-      keyCol: String, k: Int = 64): DataFrame =
-    graft.ext.Sketches.thetaSketches(events, groupCol, keyCol, k)
-
   /** Deterministic streaming Bloom bit-set maintenance: maintains the
     * SAME per-group set-bit table as `Sketches.bloomMembership` derives
     * — the per-row position projection is the shared batch kernel
@@ -515,28 +483,6 @@ object StreamingOps {
       .agg(count(lit(1)).as("n_setters"))
   }
 
-  /** Deterministic streaming Count-Min: maintains the SAME depth×width
-    * integer counter table as `Sketches.countMinCounters`, incrementally
-    * — the per-row (row, cell) projection is shared and the combine is
-    * `sum`, associative and order-free, so after any micro-batch the
-    * counters equal the batch build over everything seen. State is
-    * bounded at depth×width rows forever; like the HLL registers above,
-    * the counters are engine-portable period state (merge = cell-wise
-    * add).
-    */
-  def countMinStream(events: DataFrame, keyCol: String,
-      depth: Int = 4, width: Int = 1024): DataFrame = {
-    import org.apache.spark.sql.functions._
-    require((width & (width - 1)) == 0, s"width $width must be a power of two")
-    events
-      .select(explode(array((0 until depth).map(r => lit(r.toLong)): _*)).as("r"),
-        col(keyCol).as("__k"))
-      .select(col("r"),
-        graft.ext.HashExprs.mix64(col("__k").bitwiseXOR(col("r")))
-          .bitwiseAND(lit((width - 1).toLong)).as("cell"))
-      .groupBy("r", "cell").agg(count(lit(1)).as("n"))
-  }
-
   /** Deterministic streaming histogram-quantile sketch: maintains the
     * SAME nBins bin-count table as `Sketches.histogramQuantiles`' second
     * pass, incrementally, over a grid PINNED up front — a stream has no
@@ -546,7 +492,8 @@ object StreamingOps {
     * bins equal the batch build over everything seen in-range
     * (out-of-grid values are counted in the guard row `bin = -1` rather
     * than silently dropped). State is bounded at nBins+1 rows forever;
-    * like the HLL registers, the bins are engine-portable period state
+    * like `Sketches.hllRegisters` run on a stream, the bins are
+    * engine-portable period state
     * (merge = cell-wise add), and the quantile read-off is the same
     * nBins-row computation downstream.
     */

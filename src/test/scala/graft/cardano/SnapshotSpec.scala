@@ -2,11 +2,12 @@ package graft.cardano
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTest
 
-/** SNK5 snapshot/restore + ST4/ST7 continuous mode. */
+/** SNK5 rollback, vacuum and archives, and ST4/ST7 continuous mode. */
 class SnapshotSpec extends AnyFunSuite with SparkTest {
 
   private lazy val srcDir = {
@@ -15,52 +16,103 @@ class SnapshotSpec extends AnyFunSuite with SparkTest {
     d
   }
 
+  private val tables = Schemas.targetTables.keys.toSeq.sorted
+
+  private def rows(store: TableStore, t: String): Seq[String] =
+    store.read(t).collect().map(_.toSeq.mkString("|")).sorted.toSeq
+
+  /** The committed store's violations of its invariants: dense ids, every
+    * fact row's asset and wallet exist, and each asset's current wallet is
+    * the wallet of its last transfer.
+    */
+  private def violations(store: TableStore): Seq[String] = {
+    def longs(t: String, c: String): Seq[Long] =
+      store.read(t).select(col(c).cast("long")).collect().toSeq
+        .collect { case r if !r.isNullAt(0) => r.getLong(0) }
+    val ids = Seq("wallet", "collection", "asset", "asset_tx", "asset_mint_tx")
+      .map(t => t -> longs(t, "id")).toMap
+    val notDense = ids.collect { case (t, v) if v.sorted != (1L to v.size.toLong) => s"$t ids not dense" }
+    val orphans = for {
+      fact <- Seq("asset_tx", "asset_mint_tx")
+      (dim, c) <- Seq("asset" -> "asset_id", "wallet" -> "wallet_id")
+      if !longs(fact, c).toSet.subsetOf(ids(dim).toSet)
+    } yield s"$fact.$c names a missing $dim"
+    val lastWallet = store.read("asset_tx").groupBy("asset_id")
+      .agg(max_by(col("wallet_id"), col("id")).as("last_wallet"))
+    val wrongOwner = store.read("asset").join(lastWallet, col("id") === col("asset_id"))
+      .where(!(col("current_wallet_id") <=> col("last_wallet"))).count()
+    notDense.toSeq ++ orphans ++
+      (if (wrongOwner > 0) Seq(s"$wrongOwner assets' wallet is not their last transfer's") else Nil)
+  }
+
   test("rollback restores an earlier committed state; vacuum cleans stages") {
     val out = Files.createTempDirectory("snap-out").toString
     val store = new TableStore(spark, out)
     val driver = new SyncDriver(spark, srcDir, store, 120)
     driver.catchUp()
-    val tool = new SnapshotTool(store)
+    val before = tables.map(t => t -> rows(store, t)).toMap
+    def sameAsBefore(when: String): Unit =
+      for (t <- tables) assert(rows(store, t) == before(t), s"table $t differs $when")
 
     val finalAssets = store.read("asset").count()
-    val versions = tool.listVersions()
-    assert(versions("asset")._1 > 1, "multi-period run expected")
+    val current = store.currentVersion("asset")
+    assert(store.listVersions()("asset")._1 == current && current > 2, "multi-period run expected")
 
-    // snapshot read: version 6 state differs from final
-    val mid = store.currentVersion("asset") / 2
+    // snapshot read: a mid version's state differs from final
+    val mid = current / 2
     val midAssets = store.readVersion("asset", mid).count()
     assert(midAssets <= finalAssets)
 
-    // rollback all tables to mid, re-sync catches back up to the same state
-    tool.rollback(mid)
-    assert(store.read("asset").count() == midAssets)
+    // roll back through every retained version, newest first: each one
+    // keeps the invariants, and catchUp then re-syncs the same store
+    for (v <- current - 1 to 1L by -1) {
+      store.rollback(v)
+      assert(store.currentVersion("asset") == v)
+      if (v == mid) assert(store.read("asset").count() == midAssets)
+      assert(violations(store).isEmpty, s"after rollback to $v")
+    }
     driver.catchUp()
-    assert(store.read("asset").count() == finalAssets)
-    assert(store.read("asset_tx").count() == 5)
+    sameAsBefore("after rollback to 1 and catchUp")
+    assert(violations(store).isEmpty)
 
     // one period staged but never committed: vacuumStaged removes exactly
     // its dirs, and the committed state reads the same rows
-    def rows(t: String) = store.read(t).collect().map(_.toSeq.mkString("|")).sorted.toSeq
-    val committed = Schemas.targetTables.keys.map(t => t -> rows(t)).toMap
-    val onDisk = tool.listVersions()
+    val onDisk = store.listVersions()
     val noCommit = new TableStore(spark, out) {
       override def commit(versions: Map[String, Long]): Unit = throw new IllegalStateException("crash")
     }
     intercept[IllegalStateException] {
       new SyncDriver(spark, srcDir, noCommit, 120).syncPeriod(driver.genesis, driver.pantasiaTip())
     }
-    val stagedOnly = tool.listVersions()
+    val stagedOnly = store.listVersions()
       .map { case (t, (_, vs)) => t -> vs.diff(onDisk(t)._2) }.filter(_._2.nonEmpty)
     assert(stagedOnly.keySet == Set("wallet", "collection", "asset", "asset_tx", "asset_mint_tx", "asset_ext") &&
       stagedOnly.values.forall(_.size == 1), s"one staged version per synced table: $stagedOnly")
-    assert(tool.vacuumStaged() == stagedOnly.size)
-    assert(tool.listVersions() == onDisk)
-    for ((t, r) <- committed) assert(rows(t) == r, s"table $t changed by vacuumStaged")
-    val removed = tool.vacuumSnapshots(keep = 1)
+    assert(store.vacuumStaged() == stagedOnly.size)
+    assert(store.listVersions() == onDisk)
+    sameAsBefore("after vacuumStaged")
+
+    val removed = store.vacuumSnapshots(keep = 1)
     assert(removed > 0, "old full versions should be vacuumable")
     // current state still readable after vacuum
     assert(store.read("asset").count() == finalAssets)
     assert(store.read("asset_ext").count() == 6)
+
+    // a vacuumed version neither reads nor rolls back, and the failed
+    // rollback leaves the manifest as it was
+    val now = store.currentVersion("asset")
+    val manifest = java.nio.file.Paths.get(out, "_manifest")
+    val manifestBytes = Files.readAllBytes(manifest)
+    val e = intercept[IllegalArgumentException](store.rollback(1))
+    assert(e.getMessage.contains(s"oldest version still restorable is ${now - 1}"), e.getMessage)
+    assert(java.util.Arrays.equals(Files.readAllBytes(manifest), manifestBytes), "_manifest changed")
+    intercept[IllegalArgumentException](store.readVersion("asset", 1))
+    // the oldest retained version rolls back and re-syncs to the same store
+    store.rollback(now - 1)
+    assert(violations(store).isEmpty, s"after rollback to ${now - 1}")
+    driver.catchUp()
+    sameAsBefore("after rollback past a vacuum and catchUp")
+    assert(violations(store).isEmpty)
   }
 
   test("single-artifact archive round-trips the store byte-identically; list/pick works") {
@@ -209,6 +261,18 @@ class SnapshotSpec extends AnyFunSuite with SparkTest {
     assert(!t.isAlive, "driver loop did not stop")
     assert(store.read("asset_tx").count() == 5)
     assert(store.read("asset").count() == 6)
+  }
+
+  test("a source dir with no block table yet is an empty chain: the loop keeps polling") {
+    val src = Files.createTempDirectory("fresh-src").toString + "/source"
+    val store = new TableStore(spark, Files.createTempDirectory("fresh-out").toString)
+    val driver = new SyncDriver(spark, src, store, 120)
+    assert(driver.cardanoTip().isEmpty)
+    assert(driver.runContinuously(pollSeconds = 0, maxCycles = 3) == 0)
+    // once an export fills the dir, the next run syncs it
+    Fixture.write(spark, src)
+    assert(driver.runContinuously(pollSeconds = 0, maxCycles = 1) > 0)
+    assert(store.read("asset_tx").count() == 5)
   }
 
   test("runContinuously probes the source tip once per cycle") {

@@ -16,10 +16,11 @@ import graft.SparkTest
 
 /** Versioned-store contract: a mutable table's version is one full dir,
   * an append table's the union of its delta dirs, staged versions stay
-  * unseen until committed, vacuum keeps what retained versions read, a
-  * merge-on-read layer left by an older build is refused, never half-read,
-  * and every staged file is zstd Parquet with v2 pages, readable beside
-  * versions an older build staged as snappy with v1 pages.
+  * unseen until committed, vacuum keeps what retained versions read and a
+  * vacuumed version fails to read, a merge-on-read layer left by an older
+  * build is refused, never half-read, and every staged file is zstd
+  * Parquet with v2 pages, readable beside versions an older build staged
+  * as snappy with v1 pages.
   */
 class UpsertStoreSpec extends AnyFunSuite with SparkTest {
 
@@ -81,15 +82,21 @@ class UpsertStoreSpec extends AnyFunSuite with SparkTest {
     val current = owners(store.read("asset"))
     assert(current == Map(1L -> 4L, 2L -> 40L))
     def fulls = new java.io.File(store.root, "asset/full").list().sorted.toSeq
-    val tool = new SnapshotTool(store)
     // keep = 1: the horizon is v3, so v1 and v2 go
-    assert(tool.vacuumSnapshots(keep = 1) == 2)
+    assert(store.vacuumSnapshots(keep = 1) == 2)
     assert(fulls == Seq("v=3", "v=4"))
     assert(owners(store.readVersion("asset", 3)) == Map(1L -> 3L, 2L -> 30L))
+    // a vacuumed version fails; it never reads as an empty table
+    val e = intercept[IllegalArgumentException](store.readVersion("asset", 2))
+    assert(e.getMessage.contains("oldest version still restorable is 3"), e.getMessage)
     // keep = 0: only the current version stays
-    assert(tool.vacuumSnapshots(keep = 0) == 1)
+    assert(store.vacuumSnapshots(keep = 0) == 1)
     assert(fulls == Seq("v=4"))
     assert(owners(store.read("asset")) == current)
+    // a negative keep or version would drop or point below the current one
+    intercept[IllegalArgumentException](store.vacuumSnapshots(keep = -1))
+    intercept[IllegalArgumentException](store.rollback(-1))
+    assert(fulls == Seq("v=4") && store.currentVersion("asset") == 4L)
   }
 
   test("a full version holding a legacy _upsert marker fails on read and nextIds") {

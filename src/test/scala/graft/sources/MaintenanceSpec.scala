@@ -84,23 +84,4 @@ class MaintenanceSpec extends AnyFunSuite with SparkTest {
       .filter(_._2 > rows.count() * support).toMap
     assert(got == exact)
   }
-
-  test("snapshot / restore round-trips a table through a mutation") {
-    val spark0 = spark
-    import spark0.implicits._
-    val path = Files.createTempDirectory("snap").toString + "/t"
-    (1L to 100L).toDF("id").write.parquet(path)
-    Maintenance.snapshot(spark, path, "v1")
-    assert(Maintenance.listSnapshots(spark, path) == Seq("v1"))
-    // mutate the live table, then roll back
-    (200L to 210L).toDF("id").write.mode("overwrite").parquet(path)
-    assert(spark.read.parquet(path).count() == 11)
-    Maintenance.restore(spark, path, "v1")
-    assert(spark.read.parquet(path).as[Long].collect().sorted.toSeq == (1L to 100L))
-    // the snapshot survives its own restore and restores again
-    Maintenance.restore(spark, path, "v1")
-    assert(spark.read.parquet(path).count() == 100)
-    intercept[RuntimeException] { Maintenance.snapshot(spark, path, "v1") }
-    intercept[RuntimeException] { Maintenance.restore(spark, path, "nope") }
-  }
 }

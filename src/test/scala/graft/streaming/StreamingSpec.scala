@@ -79,8 +79,8 @@ class StreamingSpec extends AnyFunSuite with SparkTest with BeforeAndAfterAll {
   }
 
   test("replayable Count-Min counters: streaming table == batch build") {
-    val q = StreamingOps.countMinStream(
-      StreamingOps.eventsStream(spark, eventsDir), "user_id")
+    val q = graft.ext.Sketches.countMinCounters(
+      StreamingOps.eventsStream(spark, eventsDir), Nil, "user_id", 4, 1024)
       .writeStream.outputMode("complete")
       .format("memory").queryName("cm_out")
       .trigger(Trigger.AvailableNow()).start()
@@ -96,7 +96,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest with BeforeAndAfterAll {
   }
 
   test("theta sketches: streaming == batch, and the set algebra runs unchanged on the streamed table") {
-    val q = StreamingOps.thetaSketchStream(
+    val q = graft.ext.Sketches.thetaSketches(
       StreamingOps.eventsStream(spark, eventsDir), "event_type", "user_id")
       .writeStream.outputMode("complete")
       .format("memory").queryName("theta_out")
@@ -165,7 +165,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest with BeforeAndAfterAll {
   }
 
   test("replayable HLL registers: streaming table == batch build") {
-    val q = StreamingOps.hllRegisterStream(
+    val q = graft.ext.Sketches.hllRegisters(
       StreamingOps.eventsStream(spark, eventsDir), "user_id")
       .writeStream.outputMode("complete")
       .format("memory").queryName("hll_out")
